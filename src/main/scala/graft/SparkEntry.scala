@@ -56,36 +56,25 @@ object SparkEntry {
       .select(col("query_id").as("src_id"), col("neighbor_id").as("dst_id"))
       .localCheckpoint(eager = true)
 
-  // The four ann_graph_* queries walk the SAME navigation graph against the
-  // SAME brute-force gold — re-deriving both per query cost ~19 s of the
-  // round-8 bench for four rows. Memoize the two checkpointed legs per
-  // (session, sfDir): the first family member run pays the build, the rest
-  // reuse the pinned frames (both tiny: N×8 edge ids / |queries|×k gold
-  // ids). Keyed by applicationId (localCheckpoint RDDs are context-scoped)
-  // so a stopped-and-restarted context can never serve a stale checkpoint.
-  // The memo stores a LAZY holder, not the frame: TrieMap.getOrElseUpdate
-  // inserts atomically but does not deduplicate in-flight builds, so under
-  // the concurrent Verify dump (default 6 queries in flight) the four
-  // ann_graph_* queries would each rebuild the expensive legs before the
-  // first insert won. All racers get the WINNING holder; its `lazy val`
-  // then blocks them on one build.
-  private final class LegHolder(build: => DataFrame) { lazy val value: DataFrame = build }
-  private val sharedLegMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), LegHolder]
-
-  private def sharedLeg(s: SparkSession, dir: String, what: String)(
-      build: => DataFrame): DataFrame =
-    sharedLegMemo
-      .getOrElseUpdate((s.sparkContext.applicationId, dir, what), new LegHolder(build))
-      .value
-
+  // Shared legs and shared state: a query family that reads the SAME
+  // expensive build (the four ann_graph_* queries walk one navigation graph
+  // against one brute-force gold; re-deriving both per query cost ~19 s of
+  // the round-8 bench for four rows) memoizes it per (session, sfDir, name):
+  // the first family member run pays the build, the rest reuse the pinned
+  // value (a checkpointed frame or a small in-memory tuple). Keyed by
+  // applicationId (localCheckpoint RDDs are context-scoped) so a
+  // stopped-and-restarted context can never serve a stale checkpoint, and
+  // by a name unique per memoized value (frames and tuples share the one
+  // map). The memo stores a LAZY holder, not the value:
+  // TrieMap.getOrElseUpdate inserts atomically but does not deduplicate
+  // in-flight builds, so under the concurrent Verify dump (default 6
+  // queries in flight) the four ann_graph_* queries would each rebuild the
+  // expensive legs before the first insert won. All racers get the WINNING
+  // holder; its `lazy val` then blocks them on one build.
   private final class StateHolder[T](build: => T) { lazy val value: T = build }
   private val sharedStateMemo =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), StateHolder[_]]
 
-  /** [[sharedLeg]] for non-DataFrame shared state (the Lloyd tuple);
-    * same in-flight-deduplicating lazy-holder semantics.
-    */
   private def sharedState[T](s: SparkSession, dir: String, what: String)(
       build: => T): T =
     sharedStateMemo
@@ -119,7 +108,7 @@ object SparkEntry {
     * flags face and the census face read the same build.
     */
   private def sharedD4Flags(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "d4Flags") {
+    sharedState(s, dir, "d4Flags") {
       val (asg, cents) = sharedLloyd(s, dir)
       graft.ops.Clustering.d4PruneFrom(asg, cents).localCheckpoint(eager = true)
     }
@@ -156,7 +145,7 @@ object SparkEntry {
     * recall meter.
     */
   private def sharedTsTopk5(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "tsTopk5") {
+    sharedState(s, dir, "tsTopk5") {
       graft.ops.TimeSeries.tsSimilarityTopK(eventsTable(s, dir), maxQueryUser = 4L, k = 5)
         .localCheckpoint(eager = true)
     }
@@ -165,7 +154,7 @@ object SparkEntry {
     * memoized — read by ts_sax_words (4) and the blocking sweep (1, 2, 4).
     */
   private def sharedSaxWords(s: SparkSession, dir: String, segments: Int): DataFrame =
-    sharedLeg(s, dir, s"saxWords_$segments") {
+    sharedState(s, dir, s"saxWords_$segments") {
       graft.ops.TimeSeries.saxWordsFrom(sharedPaaSeries(s, dir)._1, segments)
         .localCheckpoint(eager = true)
     }
@@ -195,7 +184,7 @@ object SparkEntry {
     * — shared by its own registered face and the all-pairs recall meter.
     */
   private def sharedDtwGold(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "dtwGoldTopk") {
+    sharedState(s, dir, "dtwGoldTopk") {
       graft.ops.DtwSearch.dtwTopK(eventsTable(s, dir)).localCheckpoint(eager = true)
     }
 
@@ -204,7 +193,7 @@ object SparkEntry {
     * exact-gate comparison.
     */
   private def sharedTwoStageGate(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "twoStageGate") {
+    sharedState(s, dir, "twoStageGate") {
       val docs = table(s, dir, "documents")
       graft.ops.Decontam.twoStageGate(
         docs.filter(col("doc_id") % 13 =!= 0),
@@ -213,7 +202,7 @@ object SparkEntry {
     }
 
   private def sharedIvfGraph(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "ivfGraph")(ivfGraph(table(s, dir, "embeddings")))
+    sharedState(s, dir, "ivfGraph")(ivfGraph(table(s, dir, "embeddings")))
 
   /** The corpus-wide IVF top-5 directed frame (default anchors/nprobe) —
     * one build shared by mutual_nn_ivf, lof_outliers_ivf, and the
@@ -222,7 +211,7 @@ object SparkEntry {
     * rows, scale-safe to pin.
     */
   private def sharedIvfTopk5(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "ivfTopk5Full") {
+    sharedState(s, dir, "ivfTopk5Full") {
       val emb = table(s, dir, "embeddings")
       Similarity.ivfAnchorTopK(emb, emb, k = 5).localCheckpoint(eager = true)
     }
@@ -241,7 +230,7 @@ object SparkEntry {
     }
 
   private def sharedSemDedupV1(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "semDedupV1_035") {
+    sharedState(s, dir, "semDedupV1_035") {
       val (buckets, best) = sharedSemCore(s, dir)
       Similarity.semDedupFromCore(buckets, best, threshold = 0.35)
         .localCheckpoint(eager = true)
@@ -252,7 +241,7 @@ object SparkEntry {
     * semdedup_v1_v2_agreement.
     */
   private def sharedSemDedupMutual(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "semDedupMutual035") {
+    sharedState(s, dir, "semDedupMutual035") {
       Similarity.semDedupMutualFrom(
         table(s, dir, "embeddings"), sharedIvfTopk5(s, dir), threshold = 0.35)
         .localCheckpoint(eager = true)
@@ -265,7 +254,7 @@ object SparkEntry {
     * ivf_anchor_sweep, and ann_ivf_recall each re-ran it per bench pass.
     */
   private def sharedCosineTop5(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "cosineTop5Ids8") {
+    sharedState(s, dir, "cosineTop5Ids8") {
       val emb = table(s, dir, "embeddings")
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), k = 5)
         .localCheckpoint(eager = true)
@@ -286,7 +275,7 @@ object SparkEntry {
     * join instead of one per leg per query).
     */
   private def sharedIvfScored8(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "ivfScored8Ids8") {
+    sharedState(s, dir, "ivfScored8Ids8") {
       val emb = table(s, dir, "embeddings")
       Similarity.ivfAnchorScored(emb, emb.filter(col("vec_id") < 8), maxNprobe = 8)
         .localCheckpoint(eager = true)
@@ -299,7 +288,7 @@ object SparkEntry {
     * depth serves every factor.
     */
   private def sharedIvfWide40(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "ivfWide40Ids8") {
+    sharedState(s, dir, "ivfWide40Ids8") {
       Similarity.ivfAnchorTopKFromScored(sharedIvfScored8(s, dir), k = 40, nprobe = 4)
         .localCheckpoint(eager = true)
     }
@@ -309,7 +298,7 @@ object SparkEntry {
     * ann_ivf_quantizer_sweep, which each re-derived it per bench pass.
     */
   private def sharedGold100(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "goldIds100to108") {
+    sharedState(s, dir, "goldIds100to108") {
       val emb = table(s, dir, "embeddings")
       Similarity
         .bruteForceTopK(emb, emb.filter(col("vec_id") >= 100 && col("vec_id") < 108), k = 5)
@@ -322,7 +311,7 @@ object SparkEntry {
     * shared per (session, sfDir, stride) so the hier family's rows don't
     * each rebuild it (r9 verdict note: the layer rebuilt per run). */
   private def sharedUpperGraph(s: SparkSession, dir: String, stride: Int): DataFrame =
-    sharedLeg(s, dir, s"upperGraph$stride") {
+    sharedState(s, dir, s"upperGraph$stride") {
       val nodes = table(s, dir, "embeddings").filter(col("vec_id") % stride === 0)
       Similarity
         .ivfAnchorTopK(nodes, nodes, k = 4, nprobe = 2, broadcastQueries = false)
@@ -366,7 +355,7 @@ object SparkEntry {
     * each re-ran the identical walk.
     */
   private def sharedHierPads1(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "hierPads1") {
+    sharedState(s, dir, "hierPads1") {
       val emb = table(s, dir, "embeddings")
       graft.ops.GraphAnn.beamSearchTopK(
         sharedUpperGraph(s, dir, 8), emb.filter(col("vec_id") % 8 === 0),
@@ -380,7 +369,7 @@ object SparkEntry {
     * ("hier_e1_u4b3") and ann_graph_hier2_recall ("levels1").
     */
   private def sharedHier1(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "hier1Topk") {
+    sharedState(s, dir, "hier1Topk") {
       graft.ops.GraphAnn.beamSearchTopKFrom(
         sharedIvfGraph(s, dir), table(s, dir, "embeddings"), graphQueries(s, dir),
         sharedHierPads1(s, dir), k = 5, beam = 8, hops = 3)
@@ -393,7 +382,7 @@ object SparkEntry {
     * in the family.
     */
   private def sharedHier2(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "hier2Topk") {
+    sharedState(s, dir, "hier2Topk") {
       val emb = table(s, dir, "embeddings")
       val queries = graphQueries(s, dir)
       val u8Nodes = emb.filter(col("vec_id") % 8 === 0)
@@ -5485,7 +5474,7 @@ object SparkEntry {
     * setsim_jaccard_join result), checkpointed once per (session, sfDir).
     */
   private def sharedSetsimFull(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "setsimFull08") {
+    sharedState(s, dir, "setsimFull08") {
       graft.ops.SetSim.jaccardJoin(table(s, dir, "documents"))
         .localCheckpoint(eager = true)
     }
@@ -5498,7 +5487,7 @@ object SparkEntry {
     * previously ran its own ~2.8 s decode at sf0.1).
     */
   private def sharedPerturbedHashes(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "perturbedHashes") {
+    sharedState(s, dir, "perturbedHashes") {
       Multimodal.perturbedHashes(table(s, dir, "documents"))
     }
 
@@ -5536,7 +5525,7 @@ object SparkEntry {
     * unigram training — default and sweep lengths — trains from.
     */
   private def sharedUnigramWords(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "unigramWords") {
+    sharedState(s, dir, "unigramWords") {
       graft.ops.UnigramLm.wordVocab(table(s, dir, "documents")).localCheckpoint(true)
     }
 
@@ -5570,7 +5559,7 @@ object SparkEntry {
     * consumes the unfiltered pair pipeline.
     */
   private def sharedMd5PairsT0(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "md5PairsT0") {
+    sharedState(s, dir, "md5PairsT0") {
       Dedup.minhashMd5Pairs(table(s, dir, "documents"))
     }
 
@@ -5583,7 +5572,7 @@ object SparkEntry {
     * guide §8: decide with small rows, move big rows once).
     */
   private def sharedExactKeepIds(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "exactKeepIds") {
+    sharedState(s, dir, "exactKeepIds") {
       Dedup.exactKeepIds(table(s, dir, "documents")).localCheckpoint(eager = true)
     }
 
@@ -5601,7 +5590,7 @@ object SparkEntry {
     * r16). Candidate-pair-sized ids + one int — scale-safe to pin.
     */
   private def sharedAhashCands(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "ahashCandidates") {
+    sharedState(s, dir, "ahashCandidates") {
       Multimodal
         .ahashCandidateHammings(Multimodal.mediaFromDocuments(table(s, dir, "documents")))
         .localCheckpoint(eager = true)
@@ -5613,7 +5602,7 @@ object SparkEntry {
     * ≤ C(400, 2) rows of tokens + counts — scale-safe to pin.
     */
   private def sharedCooccurPairs(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "cooccurPairs400") {
+    sharedState(s, dir, "cooccurPairs400") {
       graft.ops.Cooccur
         .pairCountsFrame(
           table(s, dir, "documents"), minDfPct = 1, maxDfPct = 80, vocabK = 400, minPair = 5)
@@ -5625,7 +5614,7 @@ object SparkEntry {
     * media_phash_vs_bytehash.
     */
   private def sharedImageCorpus(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "imageCorpus") {
+    sharedState(s, dir, "imageCorpus") {
       Multimodal.syntheticImageCorpus(table(s, dir, "documents"))
         .localCheckpoint(eager = true)
     }
@@ -5634,7 +5623,7 @@ object SparkEntry {
     * the expensive leg of both pixel-domain media faces.
     */
   private def sharedPixelPhash(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "pixelPhash") {
+    sharedState(s, dir, "pixelPhash") {
       Multimodal.phashPixels(sharedImageCorpus(s, dir)).toDF()
         .localCheckpoint(eager = true)
     }
@@ -5644,7 +5633,7 @@ object SparkEntry {
     * decision scalar by media_dedup_auto.
     */
   private def sharedPerturbMatrix(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "perturbMatrix") {
+    sharedState(s, dir, "perturbMatrix") {
       Multimodal.perturbationMatrixFromHashes(sharedPerturbedHashes(s, dir))
         .localCheckpoint(eager = true)
     }
@@ -5654,7 +5643,7 @@ object SparkEntry {
     * sketch against it.
     */
   private def sharedContainmentPairs(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "containmentPairs") {
+    sharedState(s, dir, "containmentPairs") {
       Dedup.containmentMd5Pairs(table(s, dir, "documents"))
         .localCheckpoint(eager = true)
     }
@@ -5676,7 +5665,7 @@ object SparkEntry {
     * previously each re-ran the two-pass blocking + scoring pipeline.
     */
   private def sharedFsPairs(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "fsPairs") {
+    sharedState(s, dir, "fsPairs") {
       graft.ops.RecordLinkage.fsPairs(table(s, dir, "customer"))
         .localCheckpoint(eager = true)
     }
@@ -5687,7 +5676,7 @@ object SparkEntry {
     * postings + scoring chain per pass.
     */
   private def sharedBm25Top20(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "bm25Top20") {
+    sharedState(s, dir, "bm25Top20") {
       graft.ops.Retrieval.bm25TopK(
         table(s, dir, "documents"),
         queryTerms = Seq("table", "scan", "merge", "the"), k = 20)
@@ -5711,7 +5700,7 @@ object SparkEntry {
     * (each previously re-built the LM and re-scored the corpus per pass).
     */
   private def sharedLmSelfScore(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "lmSelfScore") {
+    sharedState(s, dir, "lmSelfScore") {
       val (lm, v) = sharedBigramLm(s, dir)
       graft.ops.LanguageModel.selfScoreFrom(
         table(s, dir, "documents"), lm, v, minAvgLpMicro = -3600000L)
@@ -5721,7 +5710,7 @@ object SparkEntry {
     * simhash_md5_pairs and token-verified by simhash_calibration.
     */
   private def sharedSimhashMd5Pairs(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "simhashMd5Pairs") {
+    sharedState(s, dir, "simhashMd5Pairs") {
       Dedup.simhashMd5Pairs(table(s, dir, "documents"), maxBucket = 500)
         .localCheckpoint(eager = true)
     }
@@ -5745,7 +5734,7 @@ object SparkEntry {
     }
 
   private def sharedMd5Clusters08(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "md5Clusters08") {
+    sharedState(s, dir, "md5Clusters08") {
       Dedup.nearDupClusters(sharedMd5Pairs08(s, dir)).localCheckpoint(eager = true)
     }
 
@@ -5753,7 +5742,7 @@ object SparkEntry {
     * neardup_dedup_corpus and neardup_clusters_star.
     */
   private def sharedXxPairs08(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "xxPairs08") {
+    sharedState(s, dir, "xxPairs08") {
       Dedup.minhashPairs(table(s, dir, "documents"), threshold = 0.8)
         .localCheckpoint(eager = true)
     }
@@ -5763,7 +5752,7 @@ object SparkEntry {
     * assortativity, link prediction) each re-derived it per pass.
     */
   private def sharedCosPairs02(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "cosPairs02") {
+    sharedState(s, dir, "cosPairs02") {
       val emb = table(s, dir, "embeddings").filter(col("vec_id") % 10 === 0)
       Similarity.cosineNearDupPairs(emb, threshold = 0.2)
         .select(col("id_a"), col("id_b"))
@@ -5775,7 +5764,7 @@ object SparkEntry {
     * curation_pipeline_v9.
     */
   private def sharedQuotedEvals(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "quotedEvals") {
+    sharedState(s, dir, "quotedEvals") {
       val docs = table(s, dir, "documents")
       graft.ops.Dedup.quotedEvalContainment(
         docs, docs.filter(col("doc_id") % 13 === 0).select(col("doc_id")))
@@ -5784,11 +5773,11 @@ object SparkEntry {
 
   /** The cross-doc span-removal interval frame, built once per (session,
     * dir) for `spans_removed_corpus` + `curation_pipeline_v11` (the
-    * sharedLeg discipline): ids + token ranges only — never the corpus
+    * shared-leg discipline): ids + token ranges only — never the corpus
     * text — so the eager pin is metadata-scale at any corpus size.
     */
   private def sharedSpanIntervals(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "spanIvs") {
+    sharedState(s, dir, "spanIvs") {
       graft.ops.Spans
         .crossDocRemovalIntervals(table(s, dir, "documents"), n = 5, maxDf = 50, minRun = 15)
         .localCheckpoint(eager = true)
@@ -5800,7 +5789,7 @@ object SparkEntry {
     * `spans_removed_full` and the residual meter.
     */
   private def sharedWithinIvs(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "withinIvs") {
+    sharedState(s, dir, "withinIvs") {
       graft.ops.Spans
         .withinDocRemovalIntervals(table(s, dir, "documents"), n = 3, maxRep = 50, minRun = 4)
         .localCheckpoint(eager = true)
@@ -5813,7 +5802,7 @@ object SparkEntry {
     * meter and the two-pass rewrite.
     */
   private def sharedResidualIvs(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "residualIvs") {
+    sharedState(s, dir, "residualIvs") {
       val clean = graft.ops.Spans
         .applyRemovalIntervals(
           table(s, dir, "documents"), "doc_id", "text",
@@ -5836,7 +5825,7 @@ object SparkEntry {
     * and the v12 composite (both kinds).
     */
   private def sharedCurationIvs(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "curationIvs") {
+    sharedState(s, dir, "curationIvs") {
       val docs = table(s, dir, "documents")
       graft.ops.Spans
         .curationRemovalIntervals(
@@ -5846,7 +5835,7 @@ object SparkEntry {
     }
 
   private def sharedDictScan(s: SparkSession, dir: String): DataFrame =
-    sharedLeg(s, dir, "dictScan200") {
+    sharedState(s, dir, "dictScan200") {
       val docs = table(s, dir, "documents")
         .select(col("doc_id"), lower(col("text")).as("text"))
       val dict = graft.ops.DictScan.topTokenDictionary(docs, 200)
@@ -5882,16 +5871,13 @@ object SparkEntry {
           col("n_exact") * 1000000L, 10000L).cast("long").as("err_bps"))
   }
 
-  /** Per-day exact-vs-HLL error replay at any power-of-two `m`: the same
-    * chain as [[HllDailyCtes]] with the m-dependent constants (p, rho
-    * base, α_m — embedded as Scala-printed double literals, which
-    * round-trip to the identical IEEE value in DuckDB) substituted.
+  /** Per-day HLL registers at register count `m` (a power of two): user
+    * hashes `h`, bucket and remainder `b`, per-bucket max rank `r`, and
+    * the dense (day x bucket) register grid `regs(day_idx, bucket, rho)`.
     */
-  private def hllErrOracle(m: Int): String = {
-    val p = Integer.numberOfTrailingZeros(m)
-    val alpha = graft.ops.HeavyHitters.hllAlpha(m)
-    val rhoBase = 33 - p
-    s"""WITH e AS (
+  private def hllRegisterCtes(m: Int): String = {
+    val rhoBase = 33 - Integer.numberOfTrailingZeros(m)
+    s"""e AS (
       |  SELECT epoch_ms(ts) // 86400000 AS day_idx, user_id FROM events
       |), h AS (
       |  SELECT day_idx,
@@ -5907,7 +5893,17 @@ object SparkEntry {
       |regs AS (
       |  SELECT days.day_idx, g.bucket, CAST(COALESCE(r.rho, 0) AS INT) AS rho
       |  FROM days CROSS JOIN (SELECT unnest(range($m)) AS bucket) g
-      |  LEFT JOIN r ON r.day_idx = days.day_idx AND r.bucket = g.bucket
+      |  LEFT JOIN r ON r.day_idx = days.day_idx AND r.bucket = g.bucket""".stripMargin
+  }
+
+  /** Per-day exact-vs-HLL error replay at any power-of-two `m`: the same
+    * chain as [[HllDailyCtes]] with the m-dependent constants (p, rho
+    * base, α_m — embedded as Scala-printed double literals, which
+    * round-trip to the identical IEEE value in DuckDB) substituted.
+    */
+  private def hllErrOracle(m: Int): String = {
+    val alpha = graft.ops.HeavyHitters.hllAlpha(m)
+    s"""WITH ${hllRegisterCtes(m)}
       |), agg AS (
       |  SELECT day_idx,
       |    CAST(sum(CAST(1 AS BIGINT) << (32 - rho)) AS BIGINT) AS s_scaled,
@@ -5939,28 +5935,67 @@ object SparkEntry {
       |FROM q""".stripMargin
   }
 
+  /** Two-rater agreement over the 0/1 columns `a`, `b` of CTE `j`: the
+    * 2x2 cell counts (CTE `cells`), Cohen's kappa numerator/denominator in
+    * HUGEINT, and the final row with `agree_bps` and round-half-up
+    * `kappa_micro` — mirrors [[graft.ops.Contingency.agreementKappa]].
+    */
+  private def agreementKappaTail(cells: String, a: String, b: String): String =
+    s"""$cells AS (
+      |  SELECT CAST(count(*) AS HUGEINT) AS n,
+      |    CAST(sum(CASE WHEN $a = 1 AND $b = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n11,
+      |    CAST(sum(CASE WHEN $a = 1 AND $b = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n10,
+      |    CAST(sum(CASE WHEN $a = 0 AND $b = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n01,
+      |    CAST(sum(CASE WHEN $a = 0 AND $b = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n00
+      |  FROM j
+      |), q AS (
+      |  SELECT n, n11, n10, n01, n00,
+      |    n * (n11 + n00) - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS knum,
+      |    n * n - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS kden
+      |  FROM $cells
+      |)
+      |SELECT CAST(n AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n_both_keep,
+      |  CAST(n10 AS BIGINT) AS n_a_only, CAST(n01 AS BIGINT) AS n_b_only,
+      |  CAST(n00 AS BIGINT) AS n_both_drop,
+      |  CAST((20000 * (n11 + n00) + n) // (2 * n) AS BIGINT) AS agree_bps,
+      |  CAST(CASE WHEN kden > 0 THEN (2000000 * knum + kden
+      |    - (((2000000 * knum + kden) % (2 * kden)) + 2 * kden) % (2 * kden)) // (2 * kden)
+      |    END AS BIGINT) AS kappa_micro
+      |FROM q""".stripMargin
+
+  /** The cosine >= 0.2 similarity graph `e(a, b)` (a < b) over every
+    * tenth embedding `e0`.
+    */
+  private val SimGraphCtes: String =
+    """e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |            FROM embeddings WHERE vec_id % 10 = 0),
+      |e AS (
+      |  SELECT a.vec_id AS a, b.vec_id AS b
+      |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
+      |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2""".stripMargin
+
+  /** Each of every tenth embedding's brute-force cosine top 5
+    * `t(qa, nb, cs, rk)` (`e` the vectors, `s` all pairs, `r` ranked).
+    */
+  private val BruteTop5PairCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |           FROM embeddings WHERE vec_id % 10 = 0),
+      |s AS (
+      |  SELECT a.vec_id AS qa, b.vec_id AS nb,
+      |    round(list_cosine_similarity(a.v, b.v), 6) AS cs
+      |  FROM e a JOIN e b ON a.vec_id != b.vec_id
+      |), r AS (
+      |  SELECT qa, nb, cs,
+      |    CAST(row_number() OVER (PARTITION BY qa ORDER BY cs DESC, nb) AS INT) AS rk
+      |  FROM s
+      |), t AS (SELECT * FROM r WHERE rk <= 5""".stripMargin
+
   /** Per-day HLL register chain (m = 64, md5 hash face), closing with
     * `hest(day_idx, v_empty, s_scaled, est_micro)` — shared by the daily
     * estimate row and the exact-vs-sketch error report.
     */
   private val HllDailyCtes: String =
-    """e AS (
-      |  SELECT epoch_ms(ts) // 86400000 AS day_idx, user_id FROM events
-      |), h AS (
-      |  SELECT day_idx,
-      |    CAST(('0x' || substr(md5('hll-' || CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) AS hv
-      |  FROM e
-      |), b AS (
-      |  SELECT day_idx, CAST(hv % 64 AS INT) AS bucket, hv // 64 AS w FROM h
-      |), r AS (
-      |  SELECT day_idx, bucket,
-      |    max(CASE WHEN w = 0 THEN 27 ELSE 27 - length(bin(w)) END) AS rho
-      |  FROM b GROUP BY 1, 2
-      |), days AS (SELECT DISTINCT day_idx FROM e),
-      |regs AS (
-      |  SELECT days.day_idx, g.bucket, CAST(COALESCE(r.rho, 0) AS INT) AS rho
-      |  FROM days CROSS JOIN (SELECT unnest(range(64)) AS bucket) g
-      |  LEFT JOIN r ON r.day_idx = days.day_idx AND r.bucket = g.bucket
+    s"""${hllRegisterCtes(64)}
       |), agg AS (
       |  SELECT day_idx,
       |    CAST(sum(CAST(1 AS BIGINT) << (32 - rho)) AS BIGINT) AS s_scaled,
@@ -5977,19 +6012,44 @@ object SparkEntry {
       |  FROM agg
       |)""".stripMargin
 
+  /** Distinct word 3-shingles `grams(doc_id, g)` of the `w` token lists
+    * in `src`.
+    */
+  private def shingle3Cte(src: String): String =
+    s"""grams AS (
+      |  SELECT doc_id,
+      |    CASE WHEN len(w) >= 3
+      |      THEN list_distinct(list_transform(range(1, len(w)-1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
+      |      ELSE [] END AS g
+      |  FROM $src""".stripMargin
+
+  /** Decontamination split: md5-hashed distinct word 4-grams per document,
+    * train-side grams `tg` (doc_id % 13 != 0) and the benchmark gram set
+    * `bg` (doc_id % 13 = 0).
+    */
+  private val DecontamGramCtes: String =
+    """toks AS (
+      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents
+      |), grams AS (
+      |  SELECT doc_id,
+      |    CASE WHEN len(w) >= 4
+      |      THEN list_distinct(list_transform(range(1, len(w)-2),
+      |        i -> CAST(('0x' || substr(md5(array_to_string(w[i:i+3], ' ')), 1, 8)) AS BIGINT)))
+      |      ELSE [] END AS g
+      |  FROM toks
+      |), tg AS (
+      |  SELECT doc_id, unnest(g) AS g FROM grams WHERE doc_id % 13 != 0
+      |), bg AS (
+      |  SELECT DISTINCT unnest(g) AS g FROM grams WHERE doc_id % 13 = 0""".stripMargin
+
   /** The signature prefix of the md5 chain (shingles → md5 → MinHash →
     * band keys), shared by the symmetric pair pipeline and the delta
     * (batch-vs-index) probe.
     */
   private val Md5SigCtes: String =
-    """WITH RECURSIVE toks AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents
-      |), grams AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(w) >= 3
-      |      THEN list_distinct(list_transform(range(1, len(w)-1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-      |      ELSE [] END AS g
-      |  FROM toks
+    s"""WITH RECURSIVE toks AS (
+      |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM documents
+      |), ${shingle3Cte("toks")}
       |), ex AS (
       |  SELECT doc_id, CAST(('0x' || substr(md5(t.gram), 1, 8)) AS BIGINT) AS h
       |  FROM grams, unnest(grams.g) AS t(gram)
@@ -6118,9 +6178,7 @@ object SparkEntry {
     */
   private def mutualIvfCtes(extraWhere: String, p: String = ""): String =
     s"""${p}vecs AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-      |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-      |  FROM embeddings WHERE len(embedding) = 64$extraWhere
+      |${qvVecsSelect("vec_id, CAST(embedding AS DOUBLE[]) AS v", extraWhere)}
       |), ${p}anchors AS (
       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
       |  FROM ${p}vecs ORDER BY vec_id LIMIT 16
@@ -6221,6 +6279,18 @@ object SparkEntry {
       |$hops""".stripMargin
   }
 
+  /** Gold neighbours `rel` of the graph-ANN replays: each query's
+    * brute-force cosine top 5 over the node vectors `c`.
+    */
+  private val GraphGoldRelCte: String =
+    """rel AS MATERIALIZED (
+      |  SELECT query_id, neighbor_id FROM (
+      |    SELECT q.query_id, cv.node_id AS neighbor_id,
+      |      row_number() OVER (PARTITION BY q.query_id
+      |        ORDER BY round(list_cosine_similarity(q.qv, cv.cv), 6) DESC, cv.node_id) AS brank
+      |    FROM q, c cv WHERE q.query_id != cv.node_id
+      |  ) WHERE brank <= 5""".stripMargin
+
   /** The navigation-graph chain through frontier `f{maxHops}` — shared by
     * the fixed-3-hop beam queries and the hop sweep.
     */
@@ -6230,18 +6300,7 @@ object SparkEntry {
       |    list_transform(CAST(embedding AS DOUBLE[]),
       |      x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS mv
       |  FROM embeddings WHERE len(embedding) = 64
-      |), anchors AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, mv AS av
-      |  FROM vecs ORDER BY vec_id LIMIT 16
-      |), dists AS (
-      |  SELECT v.vec_id, a.ai,
-      |    list_sum(list_transform(range(1, 65),
-      |      i -> (v.mv[i] - a.av[i]) * (v.mv[i] - a.av[i]))) AS d2
-      |  FROM vecs v, anchors a
-      |), assign AS (
-      |  SELECT vec_id, ai AS bucket,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-      |  FROM dists
+      |), ${anchorAssignCtes("", "mv", "v")}
       |), gc AS (SELECT vec_id AS neighbor_id, bucket FROM assign WHERE rk = 1),
       |gq AS (SELECT vec_id AS src_id, bucket FROM assign WHERE rk <= 2),
       |gcand AS (
@@ -6295,13 +6354,7 @@ object SparkEntry {
     val legs = (legSql(1, "f2") +: extra.map(e => legSql(e, s"p${e}f2"))).mkString(",\n")
     s"""${graphHopCtes(2)},
       |$chains,
-      |rel AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT q.query_id, cv.node_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.query_id
-      |        ORDER BY round(list_cosine_similarity(q.qv, cv.cv), 6) DESC, cv.node_id) AS brank
-      |    FROM q, c cv WHERE q.query_id != cv.node_id
-      |  ) WHERE brank <= 5
+      |$GraphGoldRelCte
       |),
       |$legs
       |SELECT entries, n_gold, n_hit,
@@ -6328,13 +6381,7 @@ object SparkEntry {
         |)""".stripMargin
     }.mkString(",\n")
     s"""${graphHopCtes(4)},
-      |rel AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT q.query_id, cv.node_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.query_id
-      |        ORDER BY round(list_cosine_similarity(q.qv, cv.cv), 6) DESC, cv.node_id) AS brank
-      |    FROM q, c cv WHERE q.query_id != cv.node_id
-      |  ) WHERE brank <= 5
+      |$GraphGoldRelCte
       |),
       |$legs
       |SELECT hops, n_gold, n_hit,
@@ -6444,13 +6491,7 @@ object SparkEntry {
       |${baseHop(1)},
       |${baseHop(2)},
       |${baseHop(3)},
-      |rel AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT q.query_id, cv.node_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.query_id
-      |        ORDER BY round(list_cosine_similarity(q.qv, cv.cv), 6) DESC, cv.node_id) AS brank
-      |    FROM q, c cv WHERE q.query_id != cv.node_id
-      |  ) WHERE brank <= 5
+      |$GraphGoldRelCte
       |),
       |${leg("flat_e1_h2", "f2")},
       |${leg("flat_e8_h2", "p8f2")},
@@ -6554,13 +6595,7 @@ object SparkEntry {
       |${walk("m", 3, "ug", "uc", 9)},
       |${seed("b", "mf3")},
       |${walk("b", 3, "g", "c", 8)},
-      |rel AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT q.query_id, cv.node_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.query_id
-      |        ORDER BY round(list_cosine_similarity(q.qv, cv.cv), 6) DESC, cv.node_id) AS brank
-      |    FROM q, c cv WHERE q.query_id != cv.node_id
-      |  ) WHERE brank <= 5
+      |$GraphGoldRelCte
       |),
       |${leg("levels0", "f3")},
       |${leg("levels1", "hf3")},
@@ -6570,6 +6605,126 @@ object SparkEntry {
       |FROM (SELECT * FROM hlevels0 UNION ALL SELECT * FROM hlevels1
       |  UNION ALL SELECT * FROM hlevels2)""".stripMargin
   }
+
+  /** The 64-dim vector projection with its micro-unit quantization `qv`
+    * (`cols` first, extra filter `where` appended to the length guard).
+    */
+  private def qvVecsSelect(cols: String, where: String): String =
+    s"""  SELECT $cols,
+      |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
+      |  FROM embeddings WHERE len(embedding) = 64$where""".stripMargin
+
+  /** Anchor-IVF assignment: the first 16 vectors of `${p}vecs` (quantized
+    * column `q`, row alias `v`) as anchors, squared distances to each in
+    * `${p}dists`, the distance rank per vector in `${p}assign`.
+    */
+  private def anchorAssignCtes(p: String, q: String, v: String): String =
+    s"""anchors AS (
+      |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, $q AS av
+      |  FROM ${p}vecs ORDER BY vec_id LIMIT 16
+      |), ${p}dists AS (
+      |  SELECT $v.vec_id, a.ai,
+      |    list_sum(list_transform(range(1, 65),
+      |      i -> ($v.$q[i] - a.av[i]) * ($v.$q[i] - a.av[i]))) AS d2
+      |  FROM ${p}vecs $v, anchors a
+      |), ${p}assign AS (
+      |  SELECT vec_id, ai AS bucket,
+      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
+      |  FROM ${p}dists""".stripMargin
+
+  /** Nprobe-4 probe of [[anchorAssignCtes]]: every vector in its nearest
+    * bucket, queries 0-7 in their four nearest, distinct candidate pairs.
+    */
+  private val IvfProbeCandCtes: String =
+    """cbuck AS (SELECT vec_id AS neighbor_id, bucket FROM assign WHERE rk = 1),
+      |qbuck AS (SELECT vec_id AS query_id, bucket FROM assign WHERE rk <= 4 AND vec_id < 8),
+      |cand AS (
+      |  SELECT DISTINCT query_id, neighbor_id
+      |  FROM qbuck JOIN cbuck USING (bucket) WHERE query_id != neighbor_id""".stripMargin
+
+  /** Per-query retrieval metrics of `topk(query_id, neighbor_id, rank)`
+    * against `rel(query_id, neighbor_id)` at cutoff `k`: recall (bp),
+    * MRR (micro) and NDCG (bp) on integer log2 rank discounts.
+    */
+  private def retrievalMetricsTail(k: Int): String =
+    s"""${rankDiscountCtes(k)}
+      |), nr AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel FROM rel GROUP BY 1
+      |), hits AS (
+      |  SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_hit,
+      |    CAST(min(t.rank) AS BIGINT) AS first_rank,
+      |    CAST(sum(d.dm) AS BIGINT) AS dcg_micro
+      |  FROM topk t
+      |  JOIN rel r ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id
+      |  JOIN disc d ON d.rnk = t.rank
+      |  GROUP BY 1
+      |), base AS (SELECT DISTINCT query_id FROM topk)
+      |SELECT b.query_id,
+      |  coalesce(n_rel, 0) AS n_rel, coalesce(n_hit, 0) AS n_hit,
+      |  coalesce(first_rank, 0) AS first_rank,
+      |  CAST(CASE WHEN n_rel > 0 THEN (coalesce(n_hit, 0) * 20000 + n_rel) // (2 * n_rel)
+      |       ELSE 0 END AS BIGINT) AS recall_bp,
+      |  CAST(CASE WHEN first_rank IS NOT NULL THEN (2000000 + first_rank) // (2 * first_rank)
+      |       ELSE 0 END AS BIGINT) AS mrr_micro,
+      |  coalesce(dcg_micro, 0) AS dcg_micro,
+      |  CAST(CASE WHEN n_rel > 0 THEN
+      |    (coalesce(dcg_micro, 0) * 20000 + (SELECT cum FROM pre WHERE rnk = least(n_rel, $k)))
+      |      // (2 * (SELECT cum FROM pre WHERE rnk = least(n_rel, $k)))
+      |    ELSE 0 END AS BIGINT) AS ndcg_bp
+      |FROM base b LEFT JOIN nr USING (query_id) LEFT JOIN hits USING (query_id)
+      |ORDER BY query_id""".stripMargin
+
+  /** Micro-unit log2 rank discounts `disc(rnk, dm)` for ranks 1..`k`
+    * and their prefix sums `pre(rnk, cum)` (the ideal DCG).
+    */
+  private def rankDiscountCtes(k: Int): String =
+    s"""disc AS (
+      |  SELECT CAST(i + 1 AS INT) AS rnk,
+      |    CAST(floor(1000000 / log2(i + 2) + 0.5e0) AS BIGINT) AS dm
+      |  FROM (SELECT unnest(range($k)) AS i)
+      |), pre AS (
+      |  SELECT rnk, CAST(sum(dm) OVER (ORDER BY rnk) AS BIGINT) AS cum FROM disc""".stripMargin
+
+  /** Gold neighbours: each query's brute-force top 5 of `bscored`. */
+  private val BruteTop5RelCte: String =
+    """rel AS (
+      |  SELECT query_id, neighbor_id FROM (
+      |    SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
+      |      ORDER BY cos_sim DESC, neighbor_id) AS brank
+      |    FROM bscored
+      |  ) WHERE brank <= 5""".stripMargin
+
+  /** Nprobe-4 anchor-IVF candidates over the `mv`-quantized `vecs`,
+    * scored and ranked per query in `wide(query_id, neighbor_id, cos_sim,
+    * rank)` — the unfiltered over-fetch of the filtered-ANN replays.
+    */
+  private val IvfWideCtes: String =
+    s"""${anchorAssignCtes("", "mv", "v")}
+      |), $IvfProbeCandCtes
+      |), wide AS MATERIALIZED (
+      |  SELECT query_id, neighbor_id, cos_sim,
+      |    row_number() OVER (PARTITION BY query_id
+      |      ORDER BY cos_sim DESC, neighbor_id) AS rank
+      |  FROM (
+      |    SELECT cand.query_id, cand.neighbor_id,
+      |      round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
+      |    FROM cand JOIN vecs qv ON qv.vec_id = cand.query_id
+      |              JOIN vecs cv ON cv.vec_id = cand.neighbor_id)""".stripMargin
+
+  /** Exact cosine re-rank of the ANN candidate pairs `cand` over `vecs`:
+    * each query's top 5 `(query_id, neighbor_id, cos_sim, rank)`.
+    */
+  private val CandTop5Tail: String =
+    """scored AS (
+      |  SELECT cand.query_id, cand.neighbor_id,
+      |    round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
+      |  FROM cand JOIN vecs qv ON qv.vec_id = cand.query_id
+      |            JOIN vecs cv ON cv.vec_id = cand.neighbor_id
+      |), ranked AS (
+      |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+      |    ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
+      |  FROM scored
+      |)
+      |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5""".stripMargin
 
   /** Shared CTEs of the filtered-search pair: labeled double+micro
     * vectors, the query frame, and the label-filtered brute gold `rel`.
@@ -6617,32 +6772,7 @@ object SparkEntry {
     }.mkString(",\n")
     val union = overfetch.map(m => s"SELECT * FROM h$m").mkString(" UNION ALL ")
     s"""WITH $filteredVecCtes,
-      |anchors AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, mv AS av
-      |  FROM vecs ORDER BY vec_id LIMIT 16
-      |), dists AS (
-      |  SELECT v.vec_id, a.ai,
-      |    list_sum(list_transform(range(1, 65),
-      |      i -> (v.mv[i] - a.av[i]) * (v.mv[i] - a.av[i]))) AS d2
-      |  FROM vecs v, anchors a
-      |), assign AS (
-      |  SELECT vec_id, ai AS bucket,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-      |  FROM dists
-      |), cbuck AS (SELECT vec_id AS neighbor_id, bucket FROM assign WHERE rk = 1),
-      |qbuck AS (SELECT vec_id AS query_id, bucket FROM assign WHERE rk <= 4 AND vec_id < 8),
-      |cand AS (
-      |  SELECT DISTINCT query_id, neighbor_id
-      |  FROM qbuck JOIN cbuck USING (bucket) WHERE query_id != neighbor_id
-      |), wide AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id, cos_sim,
-      |    row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cos_sim DESC, neighbor_id) AS rank
-      |  FROM (
-      |    SELECT cand.query_id, cand.neighbor_id,
-      |      round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-      |    FROM cand JOIN vecs qv ON qv.vec_id = cand.query_id
-      |              JOIN vecs cv ON cv.vec_id = cand.neighbor_id)
+      |$IvfWideCtes
       |),
       |$legs
       |SELECT overfetch, n_gold, n_hit,
@@ -6688,32 +6818,7 @@ object SparkEntry {
       |      x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS mv
       |  FROM embeddings WHERE len(embedding) = 64
       |), q AS (SELECT vec_id AS query_id, v AS qv FROM vecs WHERE vec_id < 8),
-      |anchors AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, mv AS av
-      |  FROM vecs ORDER BY vec_id LIMIT 16
-      |), dists AS (
-      |  SELECT v.vec_id, a.ai,
-      |    list_sum(list_transform(range(1, 65),
-      |      i -> (v.mv[i] - a.av[i]) * (v.mv[i] - a.av[i]))) AS d2
-      |  FROM vecs v, anchors a
-      |), assign AS (
-      |  SELECT vec_id, ai AS bucket,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-      |  FROM dists
-      |), cbuck AS (SELECT vec_id AS neighbor_id, bucket FROM assign WHERE rk = 1),
-      |qbuck AS (SELECT vec_id AS query_id, bucket FROM assign WHERE rk <= 4 AND vec_id < 8),
-      |cand AS (
-      |  SELECT DISTINCT query_id, neighbor_id
-      |  FROM qbuck JOIN cbuck USING (bucket) WHERE query_id != neighbor_id
-      |), wide AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id, cos_sim,
-      |    row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cos_sim DESC, neighbor_id) AS rank
-      |  FROM (
-      |    SELECT cand.query_id, cand.neighbor_id,
-      |      round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-      |    FROM cand JOIN vecs qv ON qv.vec_id = cand.query_id
-      |              JOIN vecs cv ON cv.vec_id = cand.neighbor_id)
+      |$IvfWideCtes
       |),
       |$golds
       |SELECT selectivity_pct, overfetch, n_gold, n_hit,
@@ -6766,32 +6871,7 @@ object SparkEntry {
       |  FROM embeddings WHERE len(embedding) = 64
       |), q AS (SELECT vec_id AS query_id, v AS qv FROM vecs WHERE vec_id < 8),
       |nc AS (SELECT CAST(count(*) AS BIGINT) AS n FROM vecs),
-      |anchors AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, mv AS av
-      |  FROM vecs ORDER BY vec_id LIMIT 16
-      |), dists AS (
-      |  SELECT v.vec_id, a.ai,
-      |    list_sum(list_transform(range(1, 65),
-      |      i -> (v.mv[i] - a.av[i]) * (v.mv[i] - a.av[i]))) AS d2
-      |  FROM vecs v, anchors a
-      |), assign AS (
-      |  SELECT vec_id, ai AS bucket,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-      |  FROM dists
-      |), cbuck AS (SELECT vec_id AS neighbor_id, bucket FROM assign WHERE rk = 1),
-      |qbuck AS (SELECT vec_id AS query_id, bucket FROM assign WHERE rk <= 4 AND vec_id < 8),
-      |cand AS (
-      |  SELECT DISTINCT query_id, neighbor_id
-      |  FROM qbuck JOIN cbuck USING (bucket) WHERE query_id != neighbor_id
-      |), wide AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id, cos_sim,
-      |    row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cos_sim DESC, neighbor_id) AS rank
-      |  FROM (
-      |    SELECT cand.query_id, cand.neighbor_id,
-      |      round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-      |    FROM cand JOIN vecs qv ON qv.vec_id = cand.query_id
-      |              JOIN vecs cv ON cv.vec_id = cand.neighbor_id)
+      |$IvfWideCtes
       |),
       |$legs
       |$union""".stripMargin
@@ -6969,12 +7049,7 @@ object SparkEntry {
       |    round(list_cosine_similarity(q.v, cv.v), 6) AS cos_sim
       |  FROM vecs q, vecs cv
       |  WHERE q.vec_id < 8 AND q.vec_id != cv.vec_id
-      |), rel AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cos_sim DESC, neighbor_id) AS brank
-      |    FROM bscored
-      |  ) WHERE brank <= 5
+      |), $BruteTop5RelCte
       |), ng AS (SELECT CAST(count(*) AS BIGINT) AS c FROM rel),
       |$legs
       |$rows""".stripMargin
@@ -7012,33 +7087,15 @@ object SparkEntry {
         s" // (2 * (SELECT c FROM ng)) AS BIGINT) AS recall_micro"
     }.mkString("\nUNION ALL\n")
     s"""WITH vecs AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-      |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-      |  FROM embeddings WHERE len(embedding) = 64
-      |), anchors AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
-      |  FROM vecs ORDER BY vec_id LIMIT 16
-      |), dists AS (
-      |  SELECT vv.vec_id, a.ai,
-      |    list_sum(list_transform(range(1, 65),
-      |      i -> (vv.qv[i] - a.av[i]) * (vv.qv[i] - a.av[i]))) AS d2
-      |  FROM vecs vv, anchors a
-      |), assign AS (
-      |  SELECT vec_id, ai AS bucket,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-      |  FROM dists
+      |${qvVecsSelect("vec_id, CAST(embedding AS DOUBLE[]) AS v", "")}
+      |), ${anchorAssignCtes("", "qv", "vv")}
       |), cb AS (SELECT vec_id AS neighbor_id, bucket FROM assign WHERE rk = 1),
       |bscored AS (
       |  SELECT q.vec_id AS query_id, cv.vec_id AS neighbor_id,
       |    round(list_cosine_similarity(q.v, cv.v), 6) AS cos_sim
       |  FROM vecs q, vecs cv
       |  WHERE q.vec_id < 8 AND q.vec_id != cv.vec_id
-      |), rel AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cos_sim DESC, neighbor_id) AS brank
-      |    FROM bscored
-      |  ) WHERE brank <= 5
+      |), $BruteTop5RelCte
       |), ng AS (SELECT CAST(count(*) AS BIGINT) AS c FROM rel),
       |$legs
       |$rows""".stripMargin
@@ -7092,6 +7149,20 @@ object SparkEntry {
       |FROM agg WHERE rk = 1""".stripMargin
   }
 
+  /** Per-(event_type, hour) event counts `hc`, their hour range `b`, and
+    * the dense (event_type x every hour in range) `grid`.
+    */
+  private val HourlyGridCtes: String =
+    """hc AS (
+      |  SELECT event_type, epoch_ms(ts) // 3600000 AS hour,
+      |    CAST(count(*) AS BIGINT) AS cnt
+      |  FROM events GROUP BY 1, 2
+      |), b AS (SELECT min(hour) AS lo, max(hour) AS hi FROM hc),
+      |grid AS (
+      |  SELECT t.event_type, g.h AS hour
+      |  FROM (SELECT DISTINCT event_type FROM hc) t
+      |  CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b))) AS h) g""".stripMargin
+
   /** Holt hourly replay: the SAME exact integer weight table the
     * operator bakes into its plan ([[graft.ops.TimeSeries.holtLevelWeights]]
     * — single source of truth, no dual-implementation drift), applied as
@@ -7102,15 +7173,7 @@ object SparkEntry {
       .map(k => s"($k, ${graft.ops.TimeSeries.holtLevelWeights(k)}," +
         s" ${graft.ops.TimeSeries.holtTrendWeights(k)})")
       .mkString(", ")
-    s"""hc AS (
-      |  SELECT event_type, epoch_ms(ts) // 3600000 AS hour,
-      |    CAST(count(*) AS BIGINT) AS cnt
-      |  FROM events GROUP BY 1, 2
-      |), b AS (SELECT min(hour) AS lo, max(hour) AS hi FROM hc),
-      |grid AS (
-      |  SELECT t.event_type, g.h AS hour
-      |  FROM (SELECT DISTINCT event_type FROM hc) t
-      |  CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b))) AS h) g
+    s"""$HourlyGridCtes
       |), w AS (SELECT * FROM (VALUES $vals) AS t(k, wl, wb)),
       |contrib AS (
       |  SELECT event_type, hour + k AS hour, cnt * wl AS wlc, cnt * wb AS wbc
@@ -7188,30 +7251,64 @@ object SparkEntry {
       |    // (2 * f.n_lof * l.lrd_micro) AS BIGINT) AS lof_milli
       |FROM lrd l JOIN lofs f ON f.pid = l.pid""".stripMargin
 
-  private val GopherRulesCtes: String =
-    """toks AS (
-      |  SELECT doc_id,
+  /** Gopher per-document statistics as CTE `toks` (columns `cols`, then
+    * the counts) over `src`, followed by the top-2-gram and duplicated
+    * 5-gram character counts `top2` / `dup5`.
+    */
+  private def gopherStatCtes(toks: String, cols: String, src: String): String =
+    s"""$toks AS (
+      |  SELECT $cols,
       |    CAST(length(text) AS BIGINT) AS n_chars,
-      |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-      |    CAST(length(regexp_replace(text, '\s+', '', 'g')) AS BIGINT) AS word_chars,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
+      |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
+      |    CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT) AS word_chars,
+      |    CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
       |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
-      |    string_split_regex(lower(text), '\s+') AS t
-      |  FROM documents
+      |    string_split_regex(lower(text), '\\s+') AS t
+      |  FROM $src
       |), g2 AS (
       |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
       |    i -> t[i] || ' ' || t[i+1])) AS g
-      |  FROM toks WHERE len(t) >= 2
+      |  FROM $toks WHERE len(t) >= 2
       |), top2 AS (
       |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
       |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
       |), g5 AS (
       |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
       |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-      |  FROM toks WHERE len(t) >= 5
+      |  FROM $toks WHERE len(t) >= 5
       |), dup5 AS (
       |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
-      |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g5 GROUP BY 1, 2) GROUP BY 1
+      |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g5 GROUP BY 1, 2) GROUP BY 1""".stripMargin
+
+  /** Lower-cased whitespace tokens `toks(doc_id, t)` of every document. */
+  private val WsToksCte: String =
+    """toks AS (
+      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents""".stripMargin
+
+  /** Add-one-smoothed bigram LM over [[WsToksCte]]: bigrams `bg`, counts
+    * `bc`, context totals `lm`, vocabulary size `v`, and the per-bigram
+    * micro log-probability `scored(doc_id, lp)`.
+    */
+  private val BigramLmCtes: String =
+    s"""$WsToksCte
+      |), bg AS (
+      |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+      |  FROM toks, unnest(range(1, len(t))) AS u(i)
+      |  WHERE len(t) >= 2
+      |), bc AS (
+      |  SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2
+      |), lm AS (
+      |  SELECT w1, w2, c2, sum(c2) OVER (PARTITION BY w1) AS ctx FROM bc
+      |), v AS (SELECT count(DISTINCT w2) AS v FROM bc),
+      |scored AS (
+      |  SELECT bg.doc_id,
+      |    CAST(floor(ln((CAST(lm.c2 AS DOUBLE) + 1.0e0)
+      |        / (CAST(lm.ctx AS DOUBLE) + CAST(v.v AS DOUBLE)))
+      |      * 1e6 + 0.5e0) AS BIGINT) AS lp
+      |  FROM bg JOIN lm USING (w1, w2), v""".stripMargin
+
+  private val GopherRulesCtes: String =
+    s"""${gopherStatCtes("toks", "doc_id", "documents")}
       |), joined AS (
       |  SELECT toks.doc_id, n_chars, n_tokens, word_chars, stop_hits,
       |    CAST(COALESCE(top2_chars, 0) AS BIGINT) AS top2_chars,
@@ -7370,8 +7467,7 @@ object SparkEntry {
     * NLL closes, boost, renormalize, uniform smoothing — term for term.
     */
   private def domainReweightOracle(sampleMod: Int, eta: Long, smooth: Long): String =
-    s"""WITH toks AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents
+    s"""WITH $WsToksCte
       |), bg AS MATERIALIZED (
       |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
       |  FROM toks, unnest(range(1, len(t))) AS u(i)
@@ -7476,6 +7572,54 @@ object SparkEntry {
       |  lo.budget_leftover$extraCols
       |FROM wfbase s JOIN a$rounds a USING (source), lo""".stripMargin
   }
+
+  /** Exact dedup `dd` of the cleaned `cdocs(doc_id, source, text)`, the
+    * Gopher statistics of the survivors (`g`-prefixed CTEs) and the
+    * rule-passing `keptdocs`.
+    */
+  private val CleanDedupGopherCtes: String =
+    """dd AS (
+      |  SELECT doc_id, source, text FROM (
+      |    SELECT doc_id, source, text,
+      |      row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+      |    FROM cdocs) WHERE rn = 1
+      |), gtoks AS (
+      |  SELECT doc_id,
+      |    CAST(length(text) AS BIGINT) AS n_chars,
+      |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
+      |    CAST(length(regexp_replace(text, '\s+', '', 'g')) AS BIGINT) AS word_chars,
+      |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
+      |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
+      |    string_split_regex(lower(text), '\s+') AS t
+      |  FROM dd
+      |), gg2 AS (
+      |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
+      |    i -> t[i] || ' ' || t[i+1])) AS g
+      |  FROM gtoks WHERE len(t) >= 2
+      |), gtop2 AS (
+      |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
+      |  FROM (SELECT doc_id, g, count(*) AS cnt FROM gg2 GROUP BY 1, 2) GROUP BY 1
+      |), gg5 AS (
+      |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
+      |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
+      |  FROM gtoks WHERE len(t) >= 5
+      |), gdup5 AS (
+      |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
+      |  FROM (SELECT doc_id, g, count(*) AS cnt FROM gg5 GROUP BY 1, 2) GROUP BY 1
+      |), gsig AS (
+      |  SELECT gtoks.doc_id, n_tokens, stop_hits, n_chars,
+      |    round(CAST(word_chars AS DOUBLE) / greatest(n_tokens, 1), 4) AS mean_word_len,
+      |    round(CAST(COALESCE(top2_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS top2_share,
+      |    round(CAST(COALESCE(dup5_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS dup5_share
+      |  FROM gtoks LEFT JOIN gtop2 ON gtoks.doc_id = gtop2.doc_id
+      |             LEFT JOIN gdup5 ON gtoks.doc_id = gdup5.doc_id
+      |), keptdocs AS MATERIALIZED (
+      |  SELECT dd.doc_id, dd.source, dd.text FROM dd JOIN gsig USING (doc_id)
+      |  WHERE n_tokens BETWEEN 10 AND 100000
+      |    AND mean_word_len BETWEEN 2.0 AND 12.0
+      |    AND top2_share < 0.30
+      |    AND dup5_share < 0.15
+      |    AND stop_hits >= 2""".stripMargin
 
   /** Containment-pair chain through `contp(id_a, id_b, n_a, n_b,
     * n_common, cont_a_in_b_bps, cont_b_in_a_bps)` at the given threshold
@@ -7633,17 +7777,7 @@ object SparkEntry {
       |  SELECT * FROM sr_iv UNION ALL SELECT * FROM sw_iv
       |), ${mergeRegionCtes("sf_", "sf_iv")}, sf_ot AS (
       |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents
-      |), sf_kept AS (
-      |  SELECT k.doc_id, k.pos, k.tok FROM (
-      |    SELECT doc_id, pg['pos'] AS pos, pg['tok'] AS tok FROM (
-      |      SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-      |        i -> struct_pack(pos := CAST(i AS INT), tok := t[i]))) AS pg
-      |      FROM sf_ot)) k
-      |  WHERE NOT EXISTS (SELECT 1 FROM sf_regions r
-      |    WHERE r.doc = k.doc_id AND k.pos >= r.rs AND k.pos <= r.re)
-      |), sf_clean AS (
-      |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS text_clean
-      |  FROM sf_kept GROUP BY 1
+      |), ${keptTokenCtes("sf_", "sf_ot")}
       |), rcd AS MATERIALIZED (
       |  SELECT d.doc_id, coalesce(c.text_clean, '') AS text
       |  FROM documents d LEFT JOIN sf_clean c USING (doc_id)
@@ -7666,6 +7800,23 @@ object SparkEntry {
       |    WHERE (doc_a % 13 = 0) != (doc_b % 13 = 0))
       |  WHERE run_tokens >= $minRun
       |)""".stripMargin
+
+  /** Span subtraction: the positioned tokens of `ot(doc_id, t)` outside
+    * every merged region of `${p}regions` (`${p}kept`), re-joined into
+    * `${p}clean(doc_id, text_clean)`.
+    */
+  private def keptTokenCtes(p: String, ot: String): String =
+    s"""${p}kept AS (
+      |  SELECT k.doc_id, k.pos, k.tok FROM (
+      |    SELECT doc_id, pg['pos'] AS pos, pg['tok'] AS tok FROM (
+      |      SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
+      |        i -> struct_pack(pos := CAST(i AS INT), tok := t[i]))) AS pg
+      |      FROM $ot)) k
+      |  WHERE NOT EXISTS (SELECT 1 FROM ${p}regions r
+      |    WHERE r.doc = k.doc_id AND k.pos >= r.rs AND k.pos <= r.re)
+      |), ${p}clean AS (
+      |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS text_clean
+      |  FROM ${p}kept GROUP BY 1""".stripMargin
 
   /** The window interval-merge into maximal regions over any
     * `(doc, s, e)` relation: `${p}reg` + `${p}regions` (adjacent regions
@@ -7705,17 +7856,7 @@ object SparkEntry {
       |  FROM sr_regions GROUP BY 1
       |), sr_ot AS (
       |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM $docsRel
-      |), sr_kept AS (
-      |  SELECT k.doc_id, k.pos, k.tok FROM (
-      |    SELECT doc_id, pg['pos'] AS pos, pg['tok'] AS tok FROM (
-      |      SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-      |        i -> struct_pack(pos := CAST(i AS INT), tok := t[i]))) AS pg
-      |      FROM sr_ot)) k
-      |  WHERE NOT EXISTS (SELECT 1 FROM sr_regions r
-      |    WHERE r.doc = k.doc_id AND k.pos >= r.rs AND k.pos <= r.re)
-      |), sr_clean AS (
-      |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS text_clean
-      |  FROM sr_kept GROUP BY 1
+      |), ${keptTokenCtes("sr_", "sr_ot")}
       |), cleandoc AS MATERIALIZED (
       |  SELECT d.doc_id, coalesce(c.text_clean, '') AS text_clean,
       |    CAST(len(o.t) AS BIGINT) AS n_tokens,
@@ -7784,17 +7925,7 @@ object SparkEntry {
       |  FROM sw_regions GROUP BY 1
       |), sw_ot AS (
       |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM $docsRel
-      |), sw_kept AS (
-      |  SELECT k.doc_id, k.pos, k.tok FROM (
-      |    SELECT doc_id, pg['pos'] AS pos, pg['tok'] AS tok FROM (
-      |      SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-      |        i -> struct_pack(pos := CAST(i AS INT), tok := t[i]))) AS pg
-      |      FROM sw_ot)) k
-      |  WHERE NOT EXISTS (SELECT 1 FROM sw_regions r
-      |    WHERE r.doc = k.doc_id AND k.pos >= r.rs AND k.pos <= r.re)
-      |), sw_clean AS (
-      |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS text_clean
-      |  FROM sw_kept GROUP BY 1
+      |), ${keptTokenCtes("sw_", "sw_ot")}
       |), cleandocw AS MATERIALIZED (
       |  SELECT d.doc_id, coalesce(c.text_clean, '') AS text_clean,
       |    CAST(len(o.t) AS BIGINT) AS n_tokens,
@@ -7813,8 +7944,7 @@ object SparkEntry {
     * the train docs only. Ends in `cleandocq`.
     */
   private def evalQuoteRemovalCtes: String =
-    s"""eq_toks AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents
+    s"""eq_$WsToksCte
       |), eq_grams AS (
       |  SELECT doc_id, pg['pos'] AS pos, pg['g'] AS g FROM (
       |    SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
@@ -7847,20 +7977,7 @@ object SparkEntry {
       |      FROM eq_isl GROUP BY doc_a, doc_b, diag, grp)
       |    WHERE (doc_a % 13 = 0) != (doc_b % 13 = 0))
       |  WHERE run_tokens >= 15
-      |), eq_reg AS (
-      |  SELECT doc, s, e,
-      |    sum(nr) OVER (PARTITION BY doc ORDER BY s, e
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rid
-      |  FROM (
-      |    SELECT doc, s, e,
-      |      CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w + 1
-      |        THEN 1 ELSE 0 END AS nr
-      |    FROM eq_iv
-      |    WINDOW w AS (PARTITION BY doc ORDER BY s, e
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-      |), eq_regions AS MATERIALIZED (
-      |  SELECT doc, rid, min(s) AS rs, max(e) AS re FROM eq_reg GROUP BY 1, 2
-      |), eq_rm AS (
+      |), ${mergeRegionCtes("eq_", "eq_iv")}, eq_rm AS (
       |  SELECT doc, CAST(sum(re - rs + 1) AS BIGINT) AS n_tokens_removed,
       |    CAST(count(*) AS BIGINT) AS n_spans_removed
       |  FROM eq_regions GROUP BY 1
@@ -7868,17 +7985,7 @@ object SparkEntry {
       |  SELECT doc_id, text FROM documents WHERE doc_id % 13 <> 0
       |), eq_ot AS (
       |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM eq_train
-      |), eq_kept AS (
-      |  SELECT k.doc_id, k.pos, k.tok FROM (
-      |    SELECT doc_id, pg['pos'] AS pos, pg['tok'] AS tok FROM (
-      |      SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-      |        i -> struct_pack(pos := CAST(i AS INT), tok := t[i]))) AS pg
-      |      FROM eq_ot)) k
-      |  WHERE NOT EXISTS (SELECT 1 FROM eq_regions r
-      |    WHERE r.doc = k.doc_id AND k.pos >= r.rs AND k.pos <= r.re)
-      |), eq_clean AS (
-      |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS text_clean
-      |  FROM eq_kept GROUP BY 1
+      |), ${keptTokenCtes("eq_", "eq_ot")}
       |), cleandocq AS MATERIALIZED (
       |  SELECT d.doc_id, coalesce(c.text_clean, '') AS text_clean,
       |    CAST(len(o.t) AS BIGINT) AS n_tokens,
@@ -8902,15 +9009,11 @@ object SparkEntry {
        |)""".stripMargin
   }
 
-  /** The D4 curation replay shared by `d4_flags` and `d4_prune_report`:
-    * the Lloyd state ([[KmeansCtes]]: a2 the final assignment, d2 the
-    * distances that produced it), the SemDeDup dup frame (the
-    * `semantic_dedup` CTEs verbatim), own-centroid distances read
-    * straight off d2, the survivor prototype rank per cluster, and the
-    * per-vector verdict — mirroring [[graft.ops.Clustering.d4Prune]] at
-    * protoDropBps = 2500.
+  /** SemDeDup over the k-means replay: same-cluster pairs `cand`, their
+    * exact integer dot products `dots`, and the cosine >= 0.2 duplicates
+    * `dup(vec_id, dup_of)` (smallest earlier id).
     */
-  private val D4Ctes: String =
+  private val SemDupCtes: String =
     s"""$KmeansCtes,
       |norms AS (SELECT vec_id, sum(v*v) AS nrm FROM ex GROUP BY 1),
       |cand AS (
@@ -8929,7 +9032,18 @@ object SparkEntry {
       |  JOIN norms nb ON nb.vec_id = d.b
       |  WHERE d.dot > 0
       |    AND CAST(d.dot AS HUGEINT) * d.dot * 10000 >= CAST(400 AS HUGEINT) * na.nrm * nb.nrm
-      |  GROUP BY 1
+      |  GROUP BY 1""".stripMargin
+
+  /** The D4 curation replay shared by `d4_flags` and `d4_prune_report`:
+    * the Lloyd state ([[KmeansCtes]]: a2 the final assignment, d2 the
+    * distances that produced it), the SemDeDup dup frame (the
+    * `semantic_dedup` CTEs verbatim), own-centroid distances read
+    * straight off d2, the survivor prototype rank per cluster, and the
+    * per-vector verdict — mirroring [[graft.ops.Clustering.d4Prune]] at
+    * protoDropBps = 2500.
+    */
+  private val D4Ctes: String =
+    s"""$SemDupCtes
       |), pd AS (
       |  SELECT d2.vec_id, a.cluster, CAST(d2.d AS BIGINT) AS dist_sq
       |  FROM d2 JOIN a2 a ON a.vec_id = d2.vec_id AND d2.cid = a.cluster
@@ -8996,6 +9110,27 @@ object SparkEntry {
       |)""".stripMargin
 
   private val MediaAHashCtes: String = s"WITH $MediaAHashCtesBody"
+
+  /** Per-media byte entropy `ent` plus the aHash near-duplicate set
+    * `mdup` (Hamming <= 6) — the media curation flags' inputs.
+    */
+  private val MediaCurationCtes: String =
+    s"""eb AS (
+      |  SELECT doc_id AS media_id, source, hex(encode(text)) AS hx,
+      |    octet_length(encode(text)) AS n
+      |  FROM documents
+      |), ebytes AS (
+      |  SELECT media_id, n,
+      |    unnest(list_transform(range(0, n), i -> substr(hx, CAST(i*2+1 AS INT), 2))) AS byte
+      |  FROM eb WHERE n > 0
+      |), ehist AS (
+      |  SELECT media_id, any_value(n) AS n, byte, count(*) AS c
+      |  FROM ebytes GROUP BY media_id, byte
+      |), ent AS MATERIALIZED (
+      |  SELECT media_id, CAST(any_value(n) AS BIGINT) AS n_bytes,
+      |    CAST(floor((log2(any_value(n)) - sum(c * log2(c))/any_value(n))*1000000.0 + 0.5) AS BIGINT) AS entropy_micro
+      |  FROM ehist GROUP BY media_id
+      |), $MediaAHashCtesBody,""".stripMargin
 
   /** Shared CTEs reproducing [[graft.ops.Multimodal.phashPixels]] over the
     * synthetic twin-image corpus: `pximg` the non-empty docs as hex byte
@@ -9166,9 +9301,7 @@ object SparkEntry {
     */
   private def lshMd5SigCtesN(nbits: Int): String =
     s"""WITH vecs AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-      |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-      |  FROM embeddings WHERE len(embedding) = 64
+      |${qvVecsSelect("vec_id, CAST(embedding AS DOUBLE[]) AS v", "")}
       |), planes AS (
       |  SELECT j.j AS j, d.d AS d,
       |    CASE WHEN (CAST(('0x' || substr(md5(CAST(j.j AS VARCHAR) || '-' || CAST(d.d AS VARCHAR)), 1, 8)) AS BIGINT) & 1) = 1
@@ -9189,6 +9322,27 @@ object SparkEntry {
 
   private val LshMd5SigCtes: String = lshMd5SigCtesN(16)
 
+  /** BM25 inputs over the documents of `src`: token lists and lengths
+    * `dl`, corpus size and total length `stats`, per-document term
+    * frequency `tf` and document frequency `dfreq` of the four query
+    * terms.
+    */
+  private def bm25TermCtes(src: String): String =
+    s"""dl AS (
+      |  SELECT doc_id,
+      |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS dl,
+      |    string_split_regex(lower(text), '\\s+') AS toks
+      |  FROM $src
+      |), stats AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl
+      |), tf AS (
+      |  SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
+      |  FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM dl)
+      |  WHERE tok IN ('table', 'scan', 'merge', 'the')
+      |  GROUP BY 1, 2, 3
+      |), dfreq AS (
+      |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1""".stripMargin
+
   /** Direct-corpus BM25 replay — one oracle covers bm25_topk (scan path),
     * bm25_topk_indexed (sharded index path), and bm25_delta_merge
     * (snapshot+batch merged index): the access path changes, the math and
@@ -9198,20 +9352,7 @@ object SparkEntry {
     * query can hash against the surviving corpus with the same math.
     */
   private def bm25DirectOracle(pred: String): String =
-      s"""WITH dl AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS dl,
-        |    string_split_regex(lower(text), '\\s+') AS toks
-        |  FROM documents WHERE $pred
-        |), stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl
-        |), tf AS (
-        |  SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM dl)
-        |  WHERE tok IN ('table', 'scan', 'merge', 'the')
-        |  GROUP BY 1, 2, 3
-        |), dfreq AS (
-        |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1
+      s"""WITH ${bm25TermCtes(s"documents WHERE $pred")}
         |), scored AS (
         |  -- (N-df+0.5)/(df+0.5)+1 == (2N+1)/(2df+1): the ln argument is ONE
         |  -- division of exact longs; idf micro-rounds on the spot. The
@@ -9590,6 +9731,16 @@ object SparkEntry {
       |FROM phi, pt""".stripMargin
   }
 
+  /** CTE `name`: the trained linear gate's score `p_micro` (weights `w`
+    * over the five features of `feat`) with `cols` first, from `src`.
+    */
+  private def pMicroCte(name: String, cols: String, src: String): String =
+    s"""$name AS (
+      |  SELECT $cols,
+      |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
+      |      / 1000000.0) AS BIGINT) AS p_micro
+      |  FROM $src""".stripMargin
+
   /** Shared feature-frame CTEs (Gopher teacher + cheap features). */
   private def qualityFeatCtes: String =
     s"""$GopherRulesCtes, $QualityLogitCtes, feat AS MATERIALIZED (
@@ -9616,11 +9767,7 @@ object SparkEntry {
       .map(f => qualityGdChain(iters, s"f$f", s"feat.doc_id % $folds != $f"))
       .mkString(",\n")
     val evals = (0 until folds).map { f =>
-      s"""pf$f AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w$iters${f"f$f"}_ w WHERE feat.doc_id % $folds = $f
+      s"""${pMicroCte(s"pf$f", "feat.y", s"feat, w${iters}f${f}_ w WHERE feat.doc_id % $folds = $f")}
         |), cntf$f AS (
         |  SELECT p_micro,
         |    CAST(sum(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS BIGINT) AS c0,
@@ -9836,11 +9983,7 @@ object SparkEntry {
       qualityGdChain(iters, s"a$a", "1=1", if (a == 0) None else Some(a - 1))
     }.mkString(",\n")
     val evals = (0 to 5).map { a =>
-      s"""pa$a AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w$iters${s"a$a"}_ w
+      s"""${pMicroCte(s"pa$a", "feat.y", s"feat, w${iters}a${a}_ w")}
         |), cnta$a AS (
         |  SELECT p_micro,
         |    CAST(sum(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS BIGINT) AS c0,
@@ -9883,11 +10026,7 @@ object SparkEntry {
       .map { case (p, i) => qualityGdChain(iters, s"s$i", p) }
       .mkString(",\n")
     val evals = tags.indices.map { a =>
-      s"""ps$a AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w$iters${s"s$a"}_ w
+      s"""${pMicroCte(s"ps$a", "feat.y", s"feat, w${iters}s${a}_ w")}
         |), cnts$a AS (
         |  SELECT p_micro,
         |    CAST(sum(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS BIGINT) AS c0,
@@ -9975,11 +10114,7 @@ object SparkEntry {
   }
 
   private def qualityTrainedScoresOracle(iters: Int): String =
-    s"""WITH ${qualityTrainedCtes(iters)}, p AS (
-      |  SELECT feat.doc_id,
-      |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-      |      / 1000000.0) AS BIGINT) AS p_micro
-      |  FROM feat, w${iters}_ w
+    s"""WITH ${qualityTrainedCtes(iters)}, ${pMicroCte("p", "feat.doc_id", s"feat, w${iters}_ w")}
       |)
       |SELECT doc_id, p_micro,
       |  CAST(CASE WHEN p_micro > 500000 THEN 1 ELSE 0 END AS INT) AS keep_trained
@@ -9991,11 +10126,7 @@ object SparkEntry {
     * [[graft.ops.QualityTrainer.InfNonconformityMicro]] (2⁶²−1).
     */
   private def qualityConformalCtes(iters: Int): String =
-    s"""${qualityTrainedCtes(iters)}, p AS (
-      |  SELECT feat.doc_id, feat.y,
-      |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-      |      / 1000000.0) AS BIGINT) AS p_micro
-      |  FROM feat, w${iters}_ w
+    s"""${qualityTrainedCtes(iters)}, ${pMicroCte("p", "feat.doc_id, feat.y", s"feat, w${iters}_ w")}
       |), calib AS (
       |  SELECT doc_id, 1000000 - p_micro AS s_micro FROM p
       |  WHERE doc_id % 5 = 0 AND y = 1
@@ -10134,6 +10265,266 @@ object SparkEntry {
     full.substring(0, full.indexOf("\nSELECT CAST(1 AS INT) AS iter"))
   }
 
+  /** Population stability terms over token counts `tc(src, tok, c_st)`:
+    * per-source totals `st`, per-token totals `tt`, corpus size and
+    * vocabulary `co`, the dense grid `fl`, and add-one-smoothed
+    * per-cell PSI terms `terms(src, n_s, term_e5)`.
+    */
+  private val PsiTermCtes: String =
+    """st AS (SELECT src, CAST(sum(c_st) AS BIGINT) AS n_s FROM tc GROUP BY 1),
+      |tt AS (SELECT tok, CAST(sum(c_st) AS BIGINT) AS c_t FROM tc GROUP BY 1),
+      |co AS (SELECT CAST(sum(c_st) AS BIGINT) AS n_corpus,
+      |              CAST(count(DISTINCT tok) AS BIGINT) AS v FROM tc),
+      |fl AS (
+      |  SELECT st.src, tt.tok, st.n_s, tt.c_t, co.n_corpus, co.v,
+      |    COALESCE(tc.c_st, 0) AS c_st
+      |  FROM st CROSS JOIN tt CROSS JOIN co
+      |  LEFT JOIN tc ON tc.src = st.src AND tc.tok = tt.tok
+      |), terms AS (
+      |  SELECT src, n_s,
+      |    (2 * (((c_st + 1) * (n_corpus + v)) - ((c_t + 1) * (n_s + v)))
+      |       * CAST(floor(ln(CAST((c_st + 1) * (n_corpus + v) AS DOUBLE)
+      |                       / CAST((c_t + 1) * (n_s + v) AS DOUBLE)) * 1e5 + 0.5e0) AS BIGINT)
+      |     + (n_s + v) * (n_corpus + v))
+      |    // (2 * (n_s + v) * (n_corpus + v)) AS term_e5
+      |  FROM fl""".stripMargin
+
+  /** Document-distinct tokens `tok`, the document count `nd`, the
+    * 1%-80% document-frequency vocabulary `vocab` (top 400), and the
+    * co-occurring vocabulary pairs `pairs(tok_a, tok_b, c_ab)` in at least
+    * five documents.
+    */
+  private val TokPairCtes: String =
+    s"""tok AS (
+      |  SELECT DISTINCT doc_id, tok FROM (
+      |    SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      |    FROM documents)
+      |  WHERE tok <> ''
+      |), nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents
+      |), vocab AS (
+      |  SELECT tok, df FROM (
+      |    SELECT tok, CAST(count(*) AS BIGINT) AS df,
+      |      row_number() OVER (ORDER BY count(*) DESC, tok) AS rk
+      |    FROM tok GROUP BY tok
+      |    HAVING count(*) * 100 >= (SELECT n_docs FROM nd) * 1
+      |       AND count(*) * 100 <= (SELECT n_docs FROM nd) * 80)
+      |  WHERE rk <= 400
+      |), kept AS (
+      |  SELECT t.doc_id, t.tok FROM tok t JOIN vocab v USING (tok)
+      |), pairs AS (
+      |  SELECT a.tok AS tok_a, b.tok AS tok_b, CAST(count(*) AS BIGINT) AS c_ab
+      |  FROM kept a JOIN kept b ON a.doc_id = b.doc_id AND a.tok < b.tok
+      |  GROUP BY 1, 2
+      |  HAVING count(*) >= 5""".stripMargin
+
+  /** Winnowing fingerprints: md5-hashed word 3-grams `grams` over
+    * [[WsToksCte]], the minimum of each 5-gram window `sel`, and the
+    * distinct per-document fingerprints `fps(doc_id, fp)`.
+    */
+  private val WinnowFpCtes: String =
+    s"""$WsToksCte
+      |), grams AS (
+      |  SELECT doc_id, pg['pos'] AS pos, pg['h'] AS h FROM (
+      |    SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
+      |      i -> struct_pack(pos := CAST(i AS INT),
+      |                       h := CAST(('0x' || substr(md5(array_to_string(t[i:i+3], ' ')), 1, 8)) AS BIGINT)))) AS pg
+      |    FROM toks WHERE len(t) >= 4)
+      |), sel AS (
+      |  SELECT doc_id, pos,
+      |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
+      |      ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS fp,
+      |    max(pos) OVER (PARTITION BY doc_id) AS max_pos
+      |  FROM grams
+      |), fps AS (""".stripMargin
+
+  /** The Gopher rule gate over `gopherStatCtes` with a `lang` column:
+    * per-document shares `sig` and the rule-passing rows, the WHERE
+    * clause left open for a further conjunct.
+    */
+  private val LangGopherSigFilter: String =
+    """sig AS (
+      |  SELECT toks.doc_id, lang, n_tokens, stop_hits,
+      |    round(CAST(word_chars AS DOUBLE) / greatest(n_tokens, 1), 4) AS mean_word_len,
+      |    round(CAST(COALESCE(top2_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS top2_share,
+      |    round(CAST(COALESCE(dup5_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS dup5_share
+      |  FROM toks LEFT JOIN top2 ON toks.doc_id = top2.doc_id
+      |             LEFT JOIN dup5 ON toks.doc_id = dup5.doc_id
+      |)
+      |SELECT doc_id, lang, top2_share, dup5_share
+      |FROM sig
+      |WHERE n_tokens BETWEEN 10 AND 100000
+      |  AND mean_word_len BETWEEN 2.0 AND 12.0
+      |  AND top2_share < 0.30
+      |  AND dup5_share < 0.15
+      |  AND stop_hits >= 2""".stripMargin
+
+
+  /** Exact two-word phrase ("table hash") occurrences per document:
+    * a token at position p fills phrase slot i as candidate start p-i,
+    * and a start with every slot filled is an occurrence.
+    */
+  private val PhraseMatchOracle: String =
+    """WITH t AS (
+      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS toks FROM documents
+      |), u AS (
+      |  SELECT doc_id, unnest(toks) AS tok,
+      |    CAST(generate_subscripts(toks, 1) AS BIGINT) - 1 AS pos
+      |  FROM t
+      |), off AS (
+      |  SELECT * FROM (VALUES ('table', CAST(0 AS BIGINT)), ('hash', CAST(1 AS BIGINT)))
+      |    o(tok, slot)
+      |), occ AS (
+      |  SELECT u.doc_id, u.pos - o.slot AS st
+      |  FROM u JOIN off o USING (tok)
+      |  GROUP BY 1, 2 HAVING count(*) = 2
+      |)
+      |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
+      |  CAST(min(st) AS BIGINT) AS first_pos
+      |FROM occ GROUP BY 1""".stripMargin
+
+  /** Anchor-bucket semantic dedup: every vector in its nearest-anchor
+    * bucket `b`, and the later member `dup(vec_id)` of every same-bucket
+    * pair with cosine >= 0.35.
+    */
+  private val AnchorDupCtes: String =
+    s"""vecs AS (
+      |${qvVecsSelect("vec_id, CAST(embedding AS DOUBLE[]) AS v", "")}
+      |), ${anchorAssignCtes("", "qv", "v")}
+      |), b AS (SELECT vec_id, bucket FROM assign WHERE rk = 1),
+      |dup AS (
+      |  SELECT DISTINCT hb.vec_id
+      |  FROM b la JOIN b hb ON la.bucket = hb.bucket AND la.vec_id < hb.vec_id
+      |  JOIN vecs va ON va.vec_id = la.vec_id
+      |  JOIN vecs vb ON vb.vec_id = hb.vec_id
+      |  WHERE round(list_cosine_similarity(va.v, vb.v), 6) >= 0.35""".stripMargin
+
+  /** 32-bit SimHash inputs: distinct lower-cased tokens `toks`, their
+    * md5 hashes `th`, and the per-(document, bit) signed votes.
+    */
+  private val SimhashVoteCtes: String =
+    s"""toks AS (
+      |  SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS ts
+      |  FROM documents
+      |), th AS (
+      |  SELECT doc_id, CAST(('0x' || substr(md5(t.tok), 1, 8)) AS BIGINT) AS h
+      |  FROM toks, unnest(toks.ts) AS t(tok)
+      |), votes AS (
+      |  SELECT doc_id, b.bit,
+      |    sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
+      |  FROM th, range(32) b(bit) GROUP BY 1, 2""".stripMargin
+
+  /** SimHash fingerprints `fp` from [[SimhashVoteCtes]], their four 8-bit
+    * band keys `bandk`, buckets of 2-500 documents `bucket_ok`, and the
+    * distinct same-bucket candidate pairs `cand(id_a, id_b)`.
+    */
+  private val SimhashBandCandCtes: String =
+    s"""$SimhashVoteCtes
+      |), fp AS (
+      |  SELECT doc_id,
+      |    CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS fp
+      |  FROM votes GROUP BY 1
+      |), bandk AS (
+      |  SELECT doc_id, c.c AS c, (fp >> (c.c * 8)) & 255 AS v FROM fp, range(4) c(c)
+      |), bucket_ok AS (
+      |  SELECT c, v FROM bandk GROUP BY c, v HAVING count(*) BETWEEN 2 AND 500
+      |), cand AS (
+      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM bucket_ok o
+      |  JOIN bandk a ON a.c = o.c AND a.v = o.v
+      |  JOIN bandk b ON b.c = o.c AND b.v = o.v AND a.doc_id < b.doc_id""".stripMargin
+
+  /** MinHash calibration over [[Md5NearDupCtes]]: matching signature
+    * slots `mm` per candidate pair and the exact shingle-set
+    * intersection and union `cal`.
+    */
+  private val Md5CalibrationCtes: String =
+    s"""$Md5NearDupCtes, mm AS (
+      |  SELECT cand.id_a, cand.id_b,
+      |    CAST(count(*) FILTER (WHERE sa.m = sb.m) AS BIGINT) AS n_match
+      |  FROM cand
+      |  JOIN sig sa ON sa.doc_id = cand.id_a
+      |  JOIN sig sb ON sb.doc_id = cand.id_b AND sb.j = sa.j
+      |  GROUP BY 1, 2
+      |), cal AS (
+      |  SELECT mm.id_a, mm.id_b, n_match,
+      |    CAST(len(list_filter(ha.hset, x -> list_contains(hb.hset, x))) AS BIGINT) AS inter,
+      |    CAST(len(list_distinct(list_concat(ha.hset, hb.hset))) AS BIGINT) AS uni
+      |  FROM mm JOIN hs ha ON ha.doc_id = mm.id_a JOIN hs hb ON hb.doc_id = mm.id_b""".stripMargin
+
+  /** Count-min sketch (4 rows x 64 buckets, md5 row hashes) over the
+    * non-empty corpus tokens, and the eight probe tokens' buckets `pb`.
+    */
+  private val CmsProbeCtes: String =
+    s"""tok AS (
+      |  SELECT unnest(string_split_regex(lower(text), '\\s+')) AS t FROM documents
+      |), tok2 AS (SELECT t FROM tok WHERE t <> ''),
+      |rows_j AS (SELECT unnest(range(4)) AS j),
+      |sketch AS (
+      |  SELECT j, CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || '-' || t), 1, 8)) AS BIGINT) % 64 AS bucket,
+      |    count(*) AS cnt
+      |  FROM tok2, rows_j GROUP BY 1, 2
+      |), probes AS (
+      |  SELECT unnest(['table','scan','merge','the','data','query','value','xyzzy_absent']) AS token
+      |), pb AS (
+      |  SELECT token, j,
+      |    CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || '-' || token), 1, 8)) AS BIGINT) % 64 AS bucket
+      |  FROM probes, rows_j""".stripMargin
+
+  /** TPC-H Q3 (BUILDING segment, 1998-06-01 split): the ten orders with
+    * the largest unshipped revenue — bucketing changes the plan, not the
+    * answer, so both faces share it.
+    */
+  private val Q3TopOrdersOracle: String =
+    """SELECT o_orderkey, epoch_ms(o_orderdate) AS o_orderdate_ms,
+      |  CAST(sum(CAST(floor(l_extendedprice*(1 - l_discount)*100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
+      |FROM lineitem
+      |JOIN orders ON l_orderkey = o_orderkey
+      |JOIN customer ON o_custkey = c_custkey
+      |WHERE c_mktsegment = 'BUILDING'
+      |  AND o_orderdate < TIMESTAMP '1998-06-01'
+      |  AND l_shipdate > TIMESTAMP '1998-06-01'
+      |GROUP BY 1, 2
+      |ORDER BY revenue_cents DESC, o_orderkey
+      |LIMIT 10""".stripMargin
+
+  /** Lineitem prices in cents `v(g, v)` per return flag `g`, ranked
+    * within the flag in `r(g, v, rn, n)`.
+    */
+  private val PriceRankCtes: String =
+    """v AS (
+      |  SELECT l_returnflag AS g,
+      |    CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT) AS v
+      |  FROM lineitem
+      |), r AS (
+      |  SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
+      |    count(*) OVER (PARTITION BY g) AS n
+      |  FROM v""".stripMargin
+
+  /** Per-return-flag median `m` of the cents prices ranked in
+    * [[PriceRankCtes]], absolute deviations `d`, and their ranks `r2`.
+    */
+  private val MadRankCtes: String =
+    s"""$PriceRankCtes
+      |), m AS (
+      |  SELECT g, max(n) AS n, max(v) AS med FROM r WHERE rn = (n + 1) // 2 GROUP BY g
+      |), d AS (
+      |  SELECT v.g, abs(v.v - m.med) AS dev, m.n, m.med FROM v JOIN m ON v.g = m.g
+      |), r2 AS (
+      |  SELECT g, dev, n, med, row_number() OVER (PARTITION BY g ORDER BY dev) AS rn FROM d""".stripMargin
+
+  /** Whole-corpus [[bm25TermCtes]] plus each (document, query term)'s
+    * micro idf and the exact saturation fraction `num / den` in `scored`.
+    */
+  private val Bm25ScoredCtes: String =
+    s"""${bm25TermCtes("documents")}
+      |), scored AS (
+      |  SELECT tf.doc_id,
+      |    CAST(floor(ln(CAST(2*stats.n + 1 AS DOUBLE)
+      |        / CAST(2*dfreq.df + 1 AS DOUBLE)) * 1.0e6 + 0.5e0) AS BIGINT) AS idf_micro,
+      |    22 * stats.total_dl * tf.tf AS num,
+      |    10 * stats.total_dl * tf.tf + 3 * stats.total_dl + 9 * tf.dl * stats.n AS den
+      |  FROM tf JOIN dfreq USING (tok), stats""".stripMargin
+
   def oracleSql: Map[String, String] = Map(
     "bpe_merges" -> bpeMergesOracle(10),
     "unigram_lm_vocab" ->
@@ -10218,11 +10609,7 @@ object SparkEntry {
         |GROUP BY d.doc_id, d.n_chars""".stripMargin,
     "quality_trained_by_lang" -> qualityTrainedGroupOracle(3),
     "quality_trained_auc_by_lang" ->
-      s"""${qualityTrainedGroupCtes(3)}, p AS (
-        |  SELECT feat.grp, feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat JOIN w3_ w ON w.grp = feat.grp
+      s"""${qualityTrainedGroupCtes(3)}, ${pMicroCte("p", "feat.grp, feat.y", "feat JOIN w3_ w ON w.grp = feat.grp")}
         |), cnt AS (
         |  SELECT grp, p_micro,
         |    CAST(sum(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS BIGINT) AS c0,
@@ -10244,11 +10631,7 @@ object SparkEntry {
         |    (20000*(r1x2 - n1*(n1+1)) + 2*n1*n0) // (4*n1*n0) END AS BIGINT) AS auc_bps
         |FROM agg""".stripMargin,
     "trained_gate_gain" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.doc_id,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.doc_id", "feat, w8_ w")}
         |), jj AS (
         |  SELECT g.keep AS y,
         |    CASE WHEN p.p_micro > 500000 THEN 1 ELSE 0 END AS kt,
@@ -10286,17 +10669,7 @@ object SparkEntry {
         |  kappa_trained_micro - kappa_fixed_micro AS gain_micro
         |FROM kk""".stripMargin,
     "mutual_nn_ivf_recall" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings WHERE vec_id % 10 = 0),
-        |s AS (
-        |  SELECT a.vec_id AS qa, b.vec_id AS nb,
-        |    round(list_cosine_similarity(a.v, b.v), 6) AS cs
-        |  FROM e a JOIN e b ON a.vec_id != b.vec_id
-        |), r AS (
-        |  SELECT qa, nb, cs,
-        |    CAST(row_number() OVER (PARTITION BY qa ORDER BY cs DESC, nb) AS INT) AS rk
-        |  FROM s
-        |), t AS (SELECT * FROM r WHERE rk <= 5),
+      s"""WITH $BruteTop5PairCtes),
         |gold AS (
         |  SELECT x.qa AS id_a, x.nb AS id_b
         |  FROM t x JOIN t y ON x.qa = y.nb AND x.nb = y.qa AND x.qa < x.nb
@@ -10330,11 +10703,7 @@ object SparkEntry {
         |  SELECT doc_id FROM (
         |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep FROM documents
         |  ) WHERE doc_id = rep
-        |), p AS (
-        |  SELECT feat.doc_id,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+        |), ${pMicroCte("p", "feat.doc_id", "feat, w8_ w")}
         |), k AS (
         |  SELECT p.doc_id, p.p_micro, CAST(f.n_tokens AS BIGINT) AS n_tokens
         |  FROM p JOIN dd ON dd.doc_id = p.doc_id JOIN f ON f.doc_id = p.doc_id
@@ -10541,11 +10910,7 @@ object SparkEntry {
         |  lr.max_load_after
         |FROM movr, lr""".stripMargin,
     "uncertainty_sample" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.doc_id,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.doc_id", "feat, w8_ w")}
         |), q AS (
         |  SELECT d.source, p.doc_id, p.p_micro,
         |    abs(p.p_micro - 500000) AS dist_micro
@@ -10556,11 +10921,7 @@ object SparkEntry {
         |    ORDER BY dist_micro, doc_id) AS rnk FROM q)
         |WHERE rnk <= 10""".stripMargin,
     "quality_trained_auc" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.y", "feat, w8_ w")}
         |), cnt AS (
         |  SELECT p_micro,
         |    CAST(sum(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS BIGINT) AS c0,
@@ -10581,11 +10942,7 @@ object SparkEntry {
         |    (20000*(r1x2 - n1*(n1+1)) + 2*n1*n0) // (4*n1*n0) END AS BIGINT) AS auc_bps
         |FROM agg""".stripMargin,
     "quality_pr_curve" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.y", "feat, w8_ w")}
         |), th AS (SELECT unnest(range(1, 10)) * 100000 AS t),
         |c AS (
         |  SELECT th.t AS threshold_micro,
@@ -10604,11 +10961,7 @@ object SparkEntry {
         |    END AS BIGINT) AS f1_bps
         |FROM c""".stripMargin,
     "quality_trained_brier" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.y", "feat, w8_ w")}
         |), e AS (
         |  SELECT CAST(p_micro - y * 1000000 AS HUGEINT) AS e FROM p
         |), a AS (
@@ -10618,11 +10971,7 @@ object SparkEntry {
         |  CAST((2 * ss + n * 1000000) // (2 * n * 1000000) AS BIGINT) AS brier_micro
         |FROM a""".stripMargin,
     "ece_holdout_isotonic" ->
-      s"""WITH ${qualityTrainedCtes(8)}, sc AS (
-        |  SELECT feat.doc_id, feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("sc", "feat.doc_id, feat.y", "feat, w8_ w")}
         |), sb AS (
         |  SELECT doc_id, y, p_micro,
         |    CAST(floor(least(greatest(p_micro, 0), 999999) / 10000.0) AS INT) AS bin
@@ -10666,11 +11015,7 @@ object SparkEntry {
         |  CAST((2 * a.si + a.n_covered) // (2 * a.n_covered) AS BIGINT) AS ece_iso_micro
         |FROM ag a, tot t""".stripMargin,
     "quality_isotonic_calibration" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.y", "feat, w8_ w")}
         |), c AS (
         |  SELECT CAST(floor(least(greatest(p_micro, 0), 999999) / 10000.0) AS INT) AS bin,
         |    CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(y) AS BIGINT) AS n_pos
@@ -10698,11 +11043,7 @@ object SparkEntry {
         |  iso.iso_rate_micro
         |FROM c JOIN iso ON iso.bin = c.bin""".stripMargin,
     "calibration_summary" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.y", "feat, w8_ w")}
         |), b AS (
         |  SELECT CAST(floor(least(greatest(p_micro, 0), 999999) / 100000.0) AS INT) AS bin,
         |    CAST(count(*) AS BIGINT) AS n_docs,
@@ -10732,11 +11073,7 @@ object SparkEntry {
         |  CAST((2 * 1000000 * p * (n - p) + n * n) // (2 * n * n) AS BIGINT) AS uncertainty_micro
         |FROM s""".stripMargin,
     "quality_calibration_bins" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.y,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.y", "feat, w8_ w")}
         |), b AS (
         |  SELECT CAST(floor(least(greatest(p_micro, 0), 999999) / 100000.0) AS INT) AS bin,
         |    CAST(count(*) AS BIGINT) AS n_docs,
@@ -10749,36 +11086,12 @@ object SparkEntry {
         |  CAST(floor((2*sum_p + n_docs) / (2.0*n_docs)) AS BIGINT) AS mean_p_micro
         |FROM b""".stripMargin,
     "quality_trained_agreement" ->
-      s"""WITH ${qualityTrainedCtes(8)}, p AS (
-        |  SELECT feat.doc_id,
-        |    CAST(floor((w.w0*feat.x0 + w.w1*feat.x1 + w.w2*feat.x2 + w.w3*feat.x3 + w.w4*feat.x4)
-        |      / 1000000.0) AS BIGINT) AS p_micro
-        |  FROM feat, w8_ w
+      s"""WITH ${qualityTrainedCtes(8)}, ${pMicroCte("p", "feat.doc_id", "feat, w8_ w")}
         |), j AS (
         |  SELECT CASE WHEN p.p_micro > 500000 THEN 1 ELSE 0 END AS ka,
         |    CASE WHEN s.logit_micro > 0 THEN 1 ELSE 0 END AS kb
         |  FROM p JOIN scored s ON s.doc_id = p.doc_id
-        |), cells AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(CASE WHEN ka = 1 AND kb = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n11,
-        |    CAST(sum(CASE WHEN ka = 1 AND kb = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n10,
-        |    CAST(sum(CASE WHEN ka = 0 AND kb = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n01,
-        |    CAST(sum(CASE WHEN ka = 0 AND kb = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n00
-        |  FROM j
-        |), q AS (
-        |  SELECT n, n11, n10, n01, n00,
-        |    n * (n11 + n00) - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS knum,
-        |    n * n - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS kden
-        |  FROM cells
-        |)
-        |SELECT CAST(n AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n_both_keep,
-        |  CAST(n10 AS BIGINT) AS n_a_only, CAST(n01 AS BIGINT) AS n_b_only,
-        |  CAST(n00 AS BIGINT) AS n_both_drop,
-        |  CAST((20000 * (n11 + n00) + n) // (2 * n) AS BIGINT) AS agree_bps,
-        |  CAST(CASE WHEN kden > 0 THEN (2000000 * knum + kden
-        |    - (((2000000 * knum + kden) % (2 * kden)) + 2 * kden) % (2 * kden)) // (2 * kden)
-        |    END AS BIGINT) AS kappa_micro
-        |FROM q""".stripMargin,
+        |), ${agreementKappaTail("cells", "ka", "kb")}""".stripMargin,
     "parse_roundtrip" ->
       """SELECT CAST(user_id AS VARCHAR) AS "user", event_type AS team,
         |  CAST(floor(value*100 + 0.5) AS INT) AS score,
@@ -10925,30 +11238,8 @@ object SparkEntry {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY 1, 2""".stripMargin,
-    "q3_top_orders" ->
-      """SELECT o_orderkey, epoch_ms(o_orderdate) AS o_orderdate_ms,
-        |  CAST(sum(CAST(floor(l_extendedprice*(1 - l_discount)*100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY 1, 2
-        |ORDER BY revenue_cents DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-    "q3_top_orders_bucketed" ->
-      """SELECT o_orderkey, epoch_ms(o_orderdate) AS o_orderdate_ms,
-        |  CAST(sum(CAST(floor(l_extendedprice*(1 - l_discount)*100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY 1, 2
-        |ORDER BY revenue_cents DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
+    "q3_top_orders" -> Q3TopOrdersOracle,
+    "q3_top_orders_bucketed" -> Q3TopOrdersOracle,
     "q5_region_revenue" ->
       """SELECT n_name,
         |  CAST(sum(CAST(floor(l_extendedprice*(1 - l_discount)*100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
@@ -11260,15 +11551,10 @@ object SparkEntry {
         |FROM (SELECT unnest(string_split_regex(lower(text), '\s+')) AS token FROM documents)
         |GROUP BY 1 ORDER BY n DESC, token LIMIT 50""".stripMargin,
     "jaccard_pairs_sample" ->
-      """WITH sample AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
+      s"""WITH sample AS (
+        |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w
         |  FROM documents WHERE doc_id % 10 = 0
-        |), grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(w)-1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |      ELSE [] END AS g
-        |  FROM sample
+        |), ${shingle3Cte("sample")}
         |)
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  round(CAST(len(list_filter(a.g, x -> list_contains(b.g, x))) AS DOUBLE)
@@ -11482,42 +11768,8 @@ object SparkEntry {
         |  SELECT q.query_id, cv.node_id AS neighbor_id,
         |    round(list_cosine_similarity(q.qv, cv.cv), 6) AS cos_sim
         |  FROM q, c cv WHERE q.query_id != cv.node_id
-        |), rel AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos_sim DESC, neighbor_id) AS brank
-        |    FROM bscored
-        |  ) WHERE brank <= 5
-        |), disc AS (
-        |  SELECT CAST(i + 1 AS INT) AS rnk,
-        |    CAST(floor(1000000 / log2(i + 2) + 0.5e0) AS BIGINT) AS dm
-        |  FROM (SELECT unnest(range(5)) AS i)
-        |), pre AS (
-        |  SELECT rnk, CAST(sum(dm) OVER (ORDER BY rnk) AS BIGINT) AS cum FROM disc
-        |), nr AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel FROM rel GROUP BY 1
-        |), hits AS (
-        |  SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_hit,
-        |    CAST(min(t.rank) AS BIGINT) AS first_rank,
-        |    CAST(sum(d.dm) AS BIGINT) AS dcg_micro
-        |  FROM topk t
-        |  JOIN rel r ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id
-        |  JOIN disc d ON d.rnk = t.rank
-        |  GROUP BY 1
-        |), base AS (SELECT DISTINCT query_id FROM topk)
-        |SELECT b.query_id,
-        |  coalesce(n_rel, 0) AS n_rel, coalesce(n_hit, 0) AS n_hit,
-        |  coalesce(first_rank, 0) AS first_rank,
-        |  CAST(CASE WHEN n_rel > 0 THEN (coalesce(n_hit, 0) * 20000 + n_rel) // (2 * n_rel)
-        |       ELSE 0 END AS BIGINT) AS recall_bp,
-        |  CAST(CASE WHEN first_rank IS NOT NULL THEN (2000000 + first_rank) // (2 * first_rank)
-        |       ELSE 0 END AS BIGINT) AS mrr_micro,
-        |  coalesce(dcg_micro, 0) AS dcg_micro,
-        |  CAST(CASE WHEN n_rel > 0 THEN
-        |    (coalesce(dcg_micro, 0) * 20000 + (SELECT cum FROM pre WHERE rnk = least(n_rel, 5)))
-        |      // (2 * (SELECT cum FROM pre WHERE rnk = least(n_rel, 5)))
-        |    ELSE 0 END AS BIGINT) AS ndcg_bp
-        |FROM base b LEFT JOIN nr USING (query_id) LEFT JOIN hits USING (query_id)
-        |ORDER BY query_id""".stripMargin,
+        |), $BruteTop5RelCte
+        |), ${retrievalMetricsTail(5)}""".stripMargin,
     "matryoshka_recall" -> {
       def leg(dm: Int, name: String) =
         s"""$name AS (
@@ -11670,8 +11922,7 @@ object SparkEntry {
         |  CAST(len(list_distinct(regexp_extract_all(text, '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'))) AS INT) AS n_distinct_bpe
         |FROM documents""".stripMargin,
     "doc_chunks" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents
+      s"""WITH $WsToksCte
         |), starts AS (
         |  SELECT doc_id, t, unnest(range(1, greatest(len(t), 1) + 1, 4)) AS start
         |  FROM toks WHERE len(t) >= 1
@@ -11745,27 +11996,7 @@ object SparkEntry {
       // cosine leg (identical math to ann_cosine_topk, query vec_id=3,
       // top 20 ranked) fused by integer RRF: contribution
       // (2e6 + (60+rank)) // (2*(60+rank)) per leg, long sum, ties by id.
-      """WITH dl AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS dl,
-        |    string_split_regex(lower(text), '\s+') AS toks
-        |  FROM documents
-        |), stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl
-        |), tf AS (
-        |  SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM dl)
-        |  WHERE tok IN ('table', 'scan', 'merge', 'the')
-        |  GROUP BY 1, 2, 3
-        |), dfreq AS (
-        |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1
-        |), scored AS (
-        |  SELECT tf.doc_id,
-        |    CAST(floor(ln(CAST(2*stats.n + 1 AS DOUBLE)
-        |        / CAST(2*dfreq.df + 1 AS DOUBLE)) * 1.0e6 + 0.5e0) AS BIGINT) AS idf_micro,
-        |    22 * stats.total_dl * tf.tf AS num,
-        |    10 * stats.total_dl * tf.tf + 3 * stats.total_dl + 9 * tf.dl * stats.n AS den
-        |  FROM tf JOIN dfreq USING (tok), stats
+      s"""WITH $Bm25ScoredCtes
         |), bm AS (
         |  SELECT doc_id,
         |    CAST(sum((2*idf_micro*num + den) // (2*den)) AS BIGINT) AS score_micro
@@ -11860,46 +12091,11 @@ object SparkEntry {
         |  UNION ALL SELECT 3, id, sc FROM s3
         |  UNION ALL SELECT 4, id, sc FROM s4
         |  UNION ALL SELECT 5, id, sc FROM s5)""".stripMargin,
-    "phrase_match_counts" ->
-      // a token at position p fills phrase slot i as candidate start p-i;
-      // a start with all slots filled is an exact phrase occurrence
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS toks FROM documents
-        |), u AS (
-        |  SELECT doc_id, unnest(toks) AS tok,
-        |    CAST(generate_subscripts(toks, 1) AS BIGINT) - 1 AS pos
-        |  FROM t
-        |), off AS (
-        |  SELECT * FROM (VALUES ('table', CAST(0 AS BIGINT)), ('hash', CAST(1 AS BIGINT)))
-        |    o(tok, slot)
-        |), occ AS (
-        |  SELECT u.doc_id, u.pos - o.slot AS st
-        |  FROM u JOIN off o USING (tok)
-        |  GROUP BY 1, 2 HAVING count(*) = 2
-        |)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-        |  CAST(min(st) AS BIGINT) AS first_pos
-        |FROM occ GROUP BY 1""".stripMargin,
+    "phrase_match_counts" -> PhraseMatchOracle,
     "phrase_match_indexed" ->
       // identical result contract to phrase_match_counts: the positional
       // index changes the access path, not the math — one oracle covers both
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS toks FROM documents
-        |), u AS (
-        |  SELECT doc_id, unnest(toks) AS tok,
-        |    CAST(generate_subscripts(toks, 1) AS BIGINT) - 1 AS pos
-        |  FROM t
-        |), off AS (
-        |  SELECT * FROM (VALUES ('table', CAST(0 AS BIGINT)), ('hash', CAST(1 AS BIGINT)))
-        |    o(tok, slot)
-        |), occ AS (
-        |  SELECT u.doc_id, u.pos - o.slot AS st
-        |  FROM u JOIN off o USING (tok)
-        |  GROUP BY 1, 2 HAVING count(*) = 2
-        |)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-        |  CAST(min(st) AS BIGINT) AS first_pos
-        |FROM occ GROUP BY 1""".stripMargin,
+      PhraseMatchOracle,
     "bloom_token_stats" ->
       // bit positions: md5_32('bf<i>-' || tok) % 4096; build = bit_or of
       // power-of-two masks grouped by pos//64; probe = all 3 bits set.
@@ -11964,12 +12160,7 @@ object SparkEntry {
         |FROM e a JOIN e b ON a.vec_id < b.vec_id
         |WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2""".stripMargin,
     "neardup_triangles" ->
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |            FROM embeddings WHERE vec_id % 10 = 0),
-        |e AS (
-        |  SELECT a.vec_id AS a, b.vec_id AS b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2
+      s"""WITH $SimGraphCtes
         |), tri AS (
         |  SELECT e1.a, e1.b, e2.b AS c
         |  FROM e e1
@@ -12203,30 +12394,16 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN g.n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared
         |FROM p JOIN g USING (p) GROUP BY 1""".stripMargin,
     "simhash32_md5" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_distinct(string_split_regex(lower(text), '\s+')) AS ts
-        |  FROM documents
-        |), th AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(t.tok), 1, 8)) AS BIGINT) AS h
-        |  FROM toks, unnest(toks.ts) AS t(tok)
-        |), votes AS (
-        |  SELECT doc_id, b.bit,
-        |    sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM th, range(32) b(bit) GROUP BY 1, 2
+      s"""WITH $SimhashVoteCtes
         |)
         |SELECT doc_id,
         |  CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS simhash32
         |FROM votes GROUP BY 1""".stripMargin,
     "minhash_md5_sigs" ->
-      """WITH sample AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
+      s"""WITH sample AS (
+        |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w
         |  FROM documents WHERE doc_id % 10 = 0
-        |), grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(w)-1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |      ELSE [] END AS g
-        |  FROM sample
+        |), ${shingle3Cte("sample")}
         |), ex AS (
         |  SELECT doc_id, CAST(('0x' || substr(md5(t.gram), 1, 8)) AS BIGINT) AS h
         |  FROM grams, unnest(grams.g) AS t(gram)
@@ -12267,22 +12444,7 @@ object SparkEntry {
         |SELECT hamming, CAST(count(*) AS BIGINT) AS n_pairs
         |FROM ahch GROUP BY 1""".stripMargin,
     "media_curation_flags" ->
-      s"""WITH eb AS (
-        |  SELECT doc_id AS media_id, source, hex(encode(text)) AS hx,
-        |    octet_length(encode(text)) AS n
-        |  FROM documents
-        |), ebytes AS (
-        |  SELECT media_id, n,
-        |    unnest(list_transform(range(0, n), i -> substr(hx, CAST(i*2+1 AS INT), 2))) AS byte
-        |  FROM eb WHERE n > 0
-        |), ehist AS (
-        |  SELECT media_id, any_value(n) AS n, byte, count(*) AS c
-        |  FROM ebytes GROUP BY media_id, byte
-        |), ent AS MATERIALIZED (
-        |  SELECT media_id, CAST(any_value(n) AS BIGINT) AS n_bytes,
-        |    CAST(floor((log2(any_value(n)) - sum(c * log2(c))/any_value(n))*1000000.0 + 0.5) AS BIGINT) AS entropy_micro
-        |  FROM ehist GROUP BY media_id
-        |), $MediaAHashCtesBody,
+      s"""WITH $MediaCurationCtes
         |mdup AS (SELECT DISTINCT id_b AS media_id FROM ahch WHERE hamming <= 6)
         |SELECT d.media_id, d.source,
         |  coalesce(e.n_bytes, 0) AS n_bytes,
@@ -12296,22 +12458,7 @@ object SparkEntry {
         |LEFT JOIN ent e ON e.media_id = d.media_id
         |LEFT JOIN mdup m ON m.media_id = d.media_id""".stripMargin,
     "media_curation_report" ->
-      s"""WITH eb AS (
-        |  SELECT doc_id AS media_id, source, hex(encode(text)) AS hx,
-        |    octet_length(encode(text)) AS n
-        |  FROM documents
-        |), ebytes AS (
-        |  SELECT media_id, n,
-        |    unnest(list_transform(range(0, n), i -> substr(hx, CAST(i*2+1 AS INT), 2))) AS byte
-        |  FROM eb WHERE n > 0
-        |), ehist AS (
-        |  SELECT media_id, any_value(n) AS n, byte, count(*) AS c
-        |  FROM ebytes GROUP BY media_id, byte
-        |), ent AS MATERIALIZED (
-        |  SELECT media_id, CAST(any_value(n) AS BIGINT) AS n_bytes,
-        |    CAST(floor((log2(any_value(n)) - sum(c * log2(c))/any_value(n))*1000000.0 + 0.5) AS BIGINT) AS entropy_micro
-        |  FROM ehist GROUP BY media_id
-        |), $MediaAHashCtesBody,
+      s"""WITH $MediaCurationCtes
         |mdup AS (SELECT DISTINCT id_b AS media_id FROM ahch WHERE hamming <= 6),
         |fl AS (
         |  SELECT d.media_id, d.source,
@@ -12397,27 +12544,7 @@ object SparkEntry {
         |  FROM documents d LEFT JOIN mdup ON mdup.id = d.doc_id
         |), j AS (
         |  SELECT ka, kb FROM tflag JOIN mflag USING (id)
-        |), kcells AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(CASE WHEN ka = 1 AND kb = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n11,
-        |    CAST(sum(CASE WHEN ka = 1 AND kb = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n10,
-        |    CAST(sum(CASE WHEN ka = 0 AND kb = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n01,
-        |    CAST(sum(CASE WHEN ka = 0 AND kb = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n00
-        |  FROM j
-        |), q AS (
-        |  SELECT n, n11, n10, n01, n00,
-        |    n * (n11 + n00) - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS knum,
-        |    n * n - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS kden
-        |  FROM kcells
-        |)
-        |SELECT CAST(n AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n_both_keep,
-        |  CAST(n10 AS BIGINT) AS n_a_only, CAST(n01 AS BIGINT) AS n_b_only,
-        |  CAST(n00 AS BIGINT) AS n_both_drop,
-        |  CAST((20000 * (n11 + n00) + n) // (2 * n) AS BIGINT) AS agree_bps,
-        |  CAST(CASE WHEN kden > 0 THEN (2000000 * knum + kden
-        |    - (((2000000 * knum + kden) % (2 * kden)) + 2 * kden) % (2 * kden)) // (2 * kden)
-        |    END AS BIGINT) AS kappa_micro
-        |FROM q""".stripMargin,
+        |), ${agreementKappaTail("kcells", "ka", "kb")}""".stripMargin,
     "media_phash_pixel_pairs" ->
       s"""WITH $PhashPixelCtesBody, pxm AS (
         |  SELECT doc_id * 2 + tt.t AS id, phash FROM pxh, range(2) tt(t)
@@ -12553,10 +12680,8 @@ object SparkEntry {
         |SELECT id_a, id_b, hamming, (SELECT hash FROM pick) AS chosen_hash
         |FROM fh WHERE hamming <= 6""".stripMargin,
     "lsh_sig_md5" ->
-      """WITH q AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE len(embedding) = 64
+      s"""WITH q AS (
+        |${qvVecsSelect("vec_id", "")}
         |), s AS (
         |  SELECT j.j AS j, d.d AS d,
         |    CASE WHEN (CAST(('0x' || substr(md5(CAST(j.j AS VARCHAR) || '-' || CAST(d.d AS VARCHAR)), 1, 8)) AS BIGINT) & 1) = 1
@@ -12736,29 +12861,7 @@ object SparkEntry {
         |JOIN documents db ON db.doc_id = pj.id_b
         |GROUP BY 1, 2""".stripMargin,
     "token_budget_by_source" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '\s+', '', 'g')) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
-        |    string_split_regex(lower(text), '\s+') AS t
-        |  FROM documents
-        |), g2 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |    i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM toks WHERE len(t) >= 2
-        |), top2 AS (
-        |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
-        |), g5 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM toks WHERE len(t) >= 5
-        |), dup5 AS (
-        |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g5 GROUP BY 1, 2) GROUP BY 1
+      s"""WITH ${gopherStatCtes("toks", "doc_id, source", "documents")}
         |), gated AS (
         |  SELECT toks.source, n_tokens,
         |    CASE WHEN n_tokens BETWEEN 10 AND 100000
@@ -12907,19 +13010,7 @@ object SparkEntry {
         |SELECT doc_id FROM documents
         |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin,
     "decontam_overlap" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents
-        |), grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 4
-        |      THEN list_distinct(list_transform(range(1, len(w)-2),
-        |        i -> CAST(('0x' || substr(md5(array_to_string(w[i:i+3], ' ')), 1, 8)) AS BIGINT)))
-        |      ELSE [] END AS g
-        |  FROM toks
-        |), tg AS (
-        |  SELECT doc_id, unnest(g) AS g FROM grams WHERE doc_id % 13 != 0
-        |), bg AS (
-        |  SELECT DISTINCT unnest(g) AS g FROM grams WHERE doc_id % 13 = 0
+      s"""WITH $DecontamGramCtes
         |)
         |SELECT tg.doc_id, count(*) AS n_hits
         |FROM tg JOIN bg USING (g) GROUP BY 1""".stripMargin,
@@ -12995,19 +13086,7 @@ object SparkEntry {
         |    // (2 * counts.n_probes) AS INT) AS fpp_measured_bps
         |FROM ms JOIN bits ON bits.m = ms.m LEFT JOIN hits ON hits.m = ms.m, counts""".stripMargin,
     "decontam_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents
-        |), grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 4
-        |      THEN list_distinct(list_transform(range(1, len(w)-2),
-        |        i -> CAST(('0x' || substr(md5(array_to_string(w[i:i+3], ' ')), 1, 8)) AS BIGINT)))
-        |      ELSE [] END AS g
-        |  FROM toks
-        |), tg AS (
-        |  SELECT doc_id, unnest(g) AS g FROM grams WHERE doc_id % 13 != 0
-        |), bg AS (
-        |  SELECT DISTINCT unnest(g) AS g FROM grams WHERE doc_id % 13 = 0
+      s"""WITH $DecontamGramCtes
         |), agg AS (
         |  SELECT tg.doc_id,
         |    CAST(count(*) AS BIGINT) AS n_grams,
@@ -13020,19 +13099,7 @@ object SparkEntry {
         |    THEN 1 ELSE 0 END AS INT) AS dropped
         |FROM agg""".stripMargin,
     "decontam_corpus" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents
-        |), grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 4
-        |      THEN list_distinct(list_transform(range(1, len(w)-2),
-        |        i -> CAST(('0x' || substr(md5(array_to_string(w[i:i+3], ' ')), 1, 8)) AS BIGINT)))
-        |      ELSE [] END AS g
-        |  FROM toks
-        |), tg AS (
-        |  SELECT doc_id, unnest(g) AS g FROM grams WHERE doc_id % 13 != 0
-        |), bg AS (
-        |  SELECT DISTINCT unnest(g) AS g FROM grams WHERE doc_id % 13 = 0
+      s"""WITH $DecontamGramCtes
         |), hit AS (
         |  SELECT DISTINCT tg.doc_id FROM tg JOIN bg USING (g)
         |)
@@ -13268,57 +13335,13 @@ object SparkEntry {
         |FROM cand c JOIN b x ON x.id = c.id_a JOIN b y ON y.id = c.id_b
         |WHERE abs(x.len - y.len) <= 2 AND levenshtein(x.s, y.s) <= 2""".stripMargin,
     "simhash_md5_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_distinct(string_split_regex(lower(text), '\s+')) AS ts
-        |  FROM documents
-        |), th AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(t.tok), 1, 8)) AS BIGINT) AS h
-        |  FROM toks, unnest(toks.ts) AS t(tok)
-        |), votes AS (
-        |  SELECT doc_id, b.bit,
-        |    sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM th, range(32) b(bit) GROUP BY 1, 2
-        |), fp AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS fp
-        |  FROM votes GROUP BY 1
-        |), bandk AS (
-        |  SELECT doc_id, c.c AS c, (fp >> (c.c * 8)) & 255 AS v FROM fp, range(4) c(c)
-        |), bucket_ok AS (
-        |  SELECT c, v FROM bandk GROUP BY c, v HAVING count(*) BETWEEN 2 AND 500
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bucket_ok o
-        |  JOIN bandk a ON a.c = o.c AND a.v = o.v
-        |  JOIN bandk b ON b.c = o.c AND b.v = o.v AND a.doc_id < b.doc_id
+      s"""WITH $SimhashBandCandCtes
         |)
         |SELECT id_a, id_b, CAST(bit_count(xor(fa.fp, fb.fp)) AS INT) AS hamming
         |FROM cand JOIN fp fa ON fa.doc_id = cand.id_a JOIN fp fb ON fb.doc_id = cand.id_b
         |WHERE bit_count(xor(fa.fp, fb.fp)) <= 3""".stripMargin,
     "simhash_calibration" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_distinct(string_split_regex(lower(text), '\s+')) AS ts
-        |  FROM documents
-        |), th AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(t.tok), 1, 8)) AS BIGINT) AS h
-        |  FROM toks, unnest(toks.ts) AS t(tok)
-        |), votes AS (
-        |  SELECT doc_id, b.bit,
-        |    sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM th, range(32) b(bit) GROUP BY 1, 2
-        |), fp AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS fp
-        |  FROM votes GROUP BY 1
-        |), bandk AS (
-        |  SELECT doc_id, c.c AS c, (fp >> (c.c * 8)) & 255 AS v FROM fp, range(4) c(c)
-        |), bucket_ok AS (
-        |  SELECT c, v FROM bandk GROUP BY c, v HAVING count(*) BETWEEN 2 AND 500
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bucket_ok o
-        |  JOIN bandk a ON a.c = o.c AND a.v = o.v
-        |  JOIN bandk b ON b.c = o.c AND b.v = o.v AND a.doc_id < b.doc_id
+      s"""WITH $SimhashBandCandCtes
         |), ham AS (
         |  SELECT id_a, id_b, CAST(bit_count(xor(fa.fp, fb.fp)) AS INT) AS hamming
         |  FROM cand JOIN fp fa ON fa.doc_id = cand.id_a JOIN fp fb ON fb.doc_id = cand.id_b
@@ -13336,17 +13359,7 @@ object SparkEntry {
         |  SELECT DISTINCT qs.query_id, cs.vec_id AS neighbor_id
         |  FROM qs JOIN sigs cs ON cs.sig = qs.sig
         |  WHERE qs.query_id != cs.vec_id
-        |), scored AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |    round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-        |  FROM cand JOIN vecs qv ON qv.vec_id = cand.query_id
-        |            JOIN vecs cv ON cv.vec_id = cand.neighbor_id
-        |), ranked AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5""".stripMargin,
+        |), $CandTop5Tail""".stripMargin,
     "cosine_lsh_md5_pairs" ->
       s"""$LshMd5SigCtes, probed AS (
         |  SELECT s.vec_id AS id, xor(s.sig, masks.mask) AS psig FROM sigs s, masks
@@ -13372,17 +13385,7 @@ object SparkEntry {
         |), cand AS (
         |  SELECT p.query_id, c.vec_id AS neighbor_id
         |  FROM probes p JOIN sigs c ON c.sig = p.psig AND c.vec_id != p.query_id
-        |), scored AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |    round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-        |  FROM cand JOIN vecs qv ON qv.vec_id = cand.query_id
-        |            JOIN vecs cv ON cv.vec_id = cand.neighbor_id
-        |), ranked AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5""".stripMargin,
+        |), $CandTop5Tail""".stripMargin,
     "lsh_multiprobe_sweep" ->
       s"""${lshMd5SigCtesN(8)}, fl AS (
         |  SELECT vec_id, j,
@@ -13434,34 +13437,9 @@ object SparkEntry {
         |    // (2 * rel.n_relevant) AS INT) AS recall_bps
         |FROM cc LEFT JOIN hc ON hc.n_probes = cc.n_probes, rel""".stripMargin,
     "ann_ivf_anchor_topk" ->
-      s"""$LshMd5SigCtes, anchors AS (
-        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
-        |  FROM vecs ORDER BY vec_id LIMIT 16
-        |), dists AS (
-        |  SELECT v.vec_id, a.ai,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> (v.qv[i] - a.av[i]) * (v.qv[i] - a.av[i]))) AS d2
-        |  FROM vecs v, anchors a
-        |), assign AS (
-        |  SELECT vec_id, ai AS bucket,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-        |  FROM dists
-        |), cbuck AS (SELECT vec_id AS neighbor_id, bucket FROM assign WHERE rk = 1),
-        |qbuck AS (SELECT vec_id AS query_id, bucket FROM assign WHERE rk <= 4 AND vec_id < 8),
-        |cand AS (
-        |  SELECT DISTINCT query_id, neighbor_id
-        |  FROM qbuck JOIN cbuck USING (bucket) WHERE query_id != neighbor_id
-        |), scored AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |    round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-        |  FROM cand JOIN vecs qv ON qv.vec_id = cand.query_id
-        |            JOIN vecs cv ON cv.vec_id = cand.neighbor_id
-        |), ranked AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5""".stripMargin,
+      s"""$LshMd5SigCtes, ${anchorAssignCtes("", "qv", "v")}
+        |), $IvfProbeCandCtes
+        |), $CandTop5Tail""".stripMargin,
     "semdedup_threshold_sweep" -> {
       def leg(bps: Int) =
         s"""SELECT CAST($bps AS INT) AS threshold_bps, n.n_docs,
@@ -13476,18 +13454,7 @@ object SparkEntry {
         |    list_transform(CAST(embedding AS DOUBLE[]),
         |      x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
         |  FROM embeddings WHERE len(embedding) = 64
-        |), anchors AS (
-        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
-        |  FROM vecs ORDER BY vec_id LIMIT 16
-        |), dists AS (
-        |  SELECT v.vec_id, a.ai,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> (v.qv[i] - a.av[i]) * (v.qv[i] - a.av[i]))) AS d2
-        |  FROM vecs v, anchors a
-        |), assign AS (
-        |  SELECT vec_id, ai AS bucket,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-        |  FROM dists
+        |), ${anchorAssignCtes("", "qv", "v")}
         |), cb AS (SELECT vec_id, bucket FROM assign WHERE rk = 1),
         |best AS (
         |  SELECT b.vec_id AS id,
@@ -13506,29 +13473,7 @@ object SparkEntry {
         |${leg(7000)}""".stripMargin
     },
     "semdedup_flags" ->
-      """WITH vecs AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE len(embedding) = 64
-        |), anchors AS (
-        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
-        |  FROM vecs ORDER BY vec_id LIMIT 16
-        |), dists AS (
-        |  SELECT v.vec_id, a.ai,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> (v.qv[i] - a.av[i]) * (v.qv[i] - a.av[i]))) AS d2
-        |  FROM vecs v, anchors a
-        |), assign AS (
-        |  SELECT vec_id, ai AS bucket,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-        |  FROM dists
-        |), b AS (SELECT vec_id, bucket FROM assign WHERE rk = 1),
-        |dup AS (
-        |  SELECT DISTINCT hb.vec_id
-        |  FROM b la JOIN b hb ON la.bucket = hb.bucket AND la.vec_id < hb.vec_id
-        |  JOIN vecs va ON va.vec_id = la.vec_id
-        |  JOIN vecs vb ON vb.vec_id = hb.vec_id
-        |  WHERE round(list_cosine_similarity(va.v, vb.v), 6) >= 0.35
+      s"""WITH $AnchorDupCtes
         |)
         |SELECT b.vec_id, CAST(b.bucket AS INT) AS bucket,
         |  CAST(CASE WHEN dup.vec_id IS NULL THEN 0 ELSE 1 END AS INT) AS is_dup
@@ -13671,23 +13616,7 @@ object SparkEntry {
     "ppl_bucket_filter" ->
       // same LM + per-doc average as lm_doc_scores, then NTILE(3) over
       // (avg DESC, doc_id) — head+middle keep, tail drops
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents
-        |), bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-        |  FROM toks, unnest(range(1, len(t))) AS u(i)
-        |  WHERE len(t) >= 2
-        |), bc AS (
-        |  SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2
-        |), lm AS (
-        |  SELECT w1, w2, c2, sum(c2) OVER (PARTITION BY w1) AS ctx FROM bc
-        |), v AS (SELECT count(DISTINCT w2) AS v FROM bc),
-        |scored AS (
-        |  SELECT bg.doc_id,
-        |    CAST(floor(ln((CAST(lm.c2 AS DOUBLE) + 1.0e0)
-        |        / (CAST(lm.ctx AS DOUBLE) + CAST(v.v AS DOUBLE)))
-        |      * 1e6 + 0.5e0) AS BIGINT) AS lp
-        |  FROM bg JOIN lm USING (w1, w2), v
+      s"""WITH $BigramLmCtes
         |), agg AS (
         |  SELECT doc_id,
         |    CAST(floor(CAST(sum(lp) AS DOUBLE) / CAST(count(*) AS DOUBLE) + 0.5e0) AS BIGINT)
@@ -13772,12 +13701,7 @@ object SparkEntry {
         |FROM race
         |ORDER BY priority_micro, doc_id LIMIT 100""".stripMargin,
     "pagerank_neardup" ->
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |            FROM embeddings WHERE vec_id % 10 = 0),
-        |e AS (
-        |  SELECT a.vec_id AS a, b.vec_id AS b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2
+      s"""WITH $SimGraphCtes
         |), d AS (
         |  SELECT a AS s, b AS t FROM e UNION ALL SELECT b AS s, a AS t FROM e
         |), deg AS (
@@ -13799,12 +13723,7 @@ object SparkEntry {
         |)
         |SELECT id, pr AS pr_micro FROM s3""".stripMargin,
     "clustering_coeff" ->
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |            FROM embeddings WHERE vec_id % 10 = 0),
-        |e AS (
-        |  SELECT a.vec_id AS a, b.vec_id AS b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2
+      s"""WITH $SimGraphCtes
         |), deg AS (
         |  SELECT vec_id, CAST(count(*) AS BIGINT) AS deg
         |  FROM (SELECT a AS vec_id FROM e UNION ALL SELECT b AS vec_id FROM e) GROUP BY 1
@@ -13825,12 +13744,7 @@ object SparkEntry {
         |    ELSE 0 END AS INT) AS coeff_bps
         |FROM deg LEFT JOIN tricnt t ON t.vec_id = deg.vec_id""".stripMargin,
     "label_prop_communities" ->
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |            FROM embeddings WHERE vec_id % 10 = 0),
-        |e AS (
-        |  SELECT a.vec_id AS a, b.vec_id AS b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2
+      s"""WITH $SimGraphCtes
         |), d AS (
         |  SELECT a AS s, b AS t FROM e UNION ALL SELECT b AS s, a AS t FROM e
         |), l0 AS (
@@ -13900,15 +13814,7 @@ object SparkEntry {
         |SELECT user_id, hour * 3600000 AS hour_ms, n, total, n_hours
         |FROM t WHERE n * 100 * n_hours > 150 * total""".stripMargin,
     "hourly_ewma_counts" ->
-      """WITH hc AS (
-        |  SELECT event_type, epoch_ms(ts) // 3600000 AS hour,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), b AS (SELECT min(hour) AS lo, max(hour) AS hi FROM hc),
-        |grid AS (
-        |  SELECT t.event_type, g.h AS hour
-        |  FROM (SELECT DISTINCT event_type FROM hc) t
-        |  CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b))) AS h) g
+      s"""WITH $HourlyGridCtes
         |), contrib AS (
         |  SELECT event_type, hour + k AS hour, cnt * (1 << (15 - k)) AS w
         |  FROM hc CROSS JOIN (SELECT unnest(range(16)) AS k) ks
@@ -13993,15 +13899,7 @@ object SparkEntry {
         |  CAST(CASE WHEN k = 1 THEN 2 * s ELSE s END AS BIGINT) AS slope_micro_x2
         |FROM m""".stripMargin,
     "seasonal_hour_flags" ->
-      """WITH hc AS (
-        |  SELECT event_type, epoch_ms(ts) // 3600000 AS hour,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), b AS (SELECT min(hour) AS lo, max(hour) AS hi FROM hc),
-        |grid AS (
-        |  SELECT t.event_type, g.h AS hour
-        |  FROM (SELECT DISTINCT event_type FROM hc) t
-        |  CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b))) AS h) g
+      s"""WITH $HourlyGridCtes
         |), dense AS (
         |  SELECT g.event_type, g.hour, coalesce(hc.cnt, 0) AS cnt
         |  FROM grid g LEFT JOIN hc ON hc.event_type = g.event_type AND hc.hour = g.hour
@@ -14016,15 +13914,7 @@ object SparkEntry {
         |  CAST(CASE WHEN d.cnt * h.hod_cells * 2 < h.hod_total THEN 1 ELSE 0 END AS INT) AS dip
         |FROM dense d JOIN hod h ON h.event_type = d.event_type AND h.hod = d.hour % 24""".stripMargin,
     "hourly_stl_decomposition" ->
-      """WITH hc AS (
-        |  SELECT event_type, epoch_ms(ts) // 3600000 AS hour,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), b AS (SELECT min(hour) AS lo, max(hour) AS hi FROM hc),
-        |grid AS (
-        |  SELECT t.event_type, g.h AS hour
-        |  FROM (SELECT DISTINCT event_type FROM hc) t
-        |  CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b))) AS h) g
+      s"""WITH $HourlyGridCtes
         |), dense AS (
         |  SELECT g.event_type, g.hour, coalesce(hc.cnt, 0) AS cnt
         |  FROM grid g LEFT JOIN hc ON hc.event_type = g.event_type AND hc.hour = g.hour
@@ -14087,15 +13977,7 @@ object SparkEntry {
         |    AS INT) AS bot_score
         |FROM j""".stripMargin,
     "event_autocorr" ->
-      """WITH hc AS (
-        |  SELECT event_type, epoch_ms(ts) // 3600000 AS hour,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), b AS (SELECT min(hour) AS lo, max(hour) AS hi FROM hc),
-        |grid AS (
-        |  SELECT t.event_type, g.h AS hour
-        |  FROM (SELECT DISTINCT event_type FROM hc) t
-        |  CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b))) AS h) g
+      s"""WITH $HourlyGridCtes
         |), dense AS (
         |  SELECT g.event_type, g.hour, CAST(coalesce(hc.cnt, 0) AS HUGEINT) AS cnt
         |  FROM grid g LEFT JOIN hc ON hc.event_type = g.event_type AND hc.hour = g.hour
@@ -14337,14 +14219,7 @@ object SparkEntry {
         |  max(CASE WHEN rv = (95*m + 99) // 100 THEN v END) AS p95
         |FROM r GROUP BY g""".stripMargin,
     "group_quantiles" ->
-      """WITH v AS (
-        |  SELECT l_returnflag AS g,
-        |    CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT) AS v
-        |  FROM lineitem
-        |), r AS (
-        |  SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n
-        |  FROM v
+      s"""WITH $PriceRankCtes
         |)
         |SELECT g AS l_returnflag, max(n) AS n,
         |  max(CASE WHEN rn = (25 * n + 99) // 100 THEN v END) AS p25,
@@ -14353,20 +14228,7 @@ object SparkEntry {
         |  max(CASE WHEN rn = (95 * n + 99) // 100 THEN v END) AS p95
         |FROM r GROUP BY g""".stripMargin,
     "group_median_mad" ->
-      """WITH v AS (
-        |  SELECT l_returnflag AS g,
-        |    CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT) AS v
-        |  FROM lineitem
-        |), r AS (
-        |  SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n
-        |  FROM v
-        |), m AS (
-        |  SELECT g, max(n) AS n, max(v) AS med FROM r WHERE rn = (n + 1) // 2 GROUP BY g
-        |), d AS (
-        |  SELECT v.g, abs(v.v - m.med) AS dev, m.n, m.med FROM v JOIN m ON v.g = m.g
-        |), r2 AS (
-        |  SELECT g, dev, n, med, row_number() OVER (PARTITION BY g ORDER BY dev) AS rn FROM d
+      s"""WITH $MadRankCtes
         |)
         |SELECT g AS l_returnflag, max(n) AS n, max(med) AS med, max(dev) AS mad
         |FROM r2 WHERE rn = (n + 1) // 2 GROUP BY g""".stripMargin,
@@ -14382,23 +14244,7 @@ object SparkEntry {
         |  WHERE b.p_size >= a.p_size AND b.price_cents >= a.price_cents
         |    AND (b.p_size > a.p_size OR b.price_cents > a.price_cents))""".stripMargin,
     "lm_doc_scores" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents
-        |), bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-        |  FROM toks, unnest(range(1, len(t))) AS u(i)
-        |  WHERE len(t) >= 2
-        |), bc AS (
-        |  SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2
-        |), lm AS (
-        |  SELECT w1, w2, c2, sum(c2) OVER (PARTITION BY w1) AS ctx FROM bc
-        |), v AS (SELECT count(DISTINCT w2) AS v FROM bc),
-        |scored AS (
-        |  SELECT bg.doc_id,
-        |    CAST(floor(ln((CAST(lm.c2 AS DOUBLE) + 1.0e0)
-        |        / (CAST(lm.ctx AS DOUBLE) + CAST(v.v AS DOUBLE)))
-        |      * 1e6 + 0.5e0) AS BIGINT) AS lp
-        |  FROM bg JOIN lm USING (w1, w2), v
+      s"""WITH $BigramLmCtes
         |), agg AS (
         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
         |    CAST(sum(lp) AS BIGINT) AS lp_sum_micro
@@ -14410,8 +14256,7 @@ object SparkEntry {
         |       THEN 1 ELSE 0 END AS INT) AS keep
         |FROM agg""".stripMargin,
     "quality_signal_spearman" ->
-      s"""WITH $QualityLogitCtes, toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents
+      s"""WITH $QualityLogitCtes, $WsToksCte
         |), bgs AS (
         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
         |  FROM toks, unnest(range(1, len(t))) AS u(i)
@@ -14461,23 +14306,7 @@ object SparkEntry {
     "hll_rolling_users" ->
       // daily sketch build identical to hll_daily_users, then the rolling
       // merge: per-bucket max over the trailing-7-day RANGE window
-      """WITH e AS (
-        |  SELECT epoch_ms(ts) // 86400000 AS day_idx, user_id FROM events
-        |), h AS (
-        |  SELECT day_idx,
-        |    CAST(('0x' || substr(md5('hll-' || CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) AS hv
-        |  FROM e
-        |), b AS (
-        |  SELECT day_idx, CAST(hv % 64 AS INT) AS bucket, hv // 64 AS w FROM h
-        |), r AS (
-        |  SELECT day_idx, bucket,
-        |    max(CASE WHEN w = 0 THEN 27 ELSE 27 - length(bin(w)) END) AS rho
-        |  FROM b GROUP BY 1, 2
-        |), days AS (SELECT DISTINCT day_idx FROM e),
-        |regs AS (
-        |  SELECT days.day_idx, g.bucket, CAST(COALESCE(r.rho, 0) AS INT) AS rho
-        |  FROM days CROSS JOIN (SELECT unnest(range(64)) AS bucket) g
-        |  LEFT JOIN r ON r.day_idx = days.day_idx AND r.bucket = g.bucket
+      s"""WITH ${hllRegisterCtes(64)}
         |), merged AS (
         |  SELECT day_idx, bucket,
         |    max(rho) OVER (PARTITION BY bucket ORDER BY day_idx
@@ -14547,20 +14376,7 @@ object SparkEntry {
         |FROM pairs GROUP BY 1, 2
         |ORDER BY cnt DESC, a, b LIMIT 20""".stripMargin,
     "cms_error_report" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS t FROM documents
-        |), tok2 AS (SELECT t FROM tok WHERE t <> ''),
-        |rows_j AS (SELECT unnest(range(4)) AS j),
-        |sketch AS (
-        |  SELECT j, CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || '-' || t), 1, 8)) AS BIGINT) % 64 AS bucket,
-        |    count(*) AS cnt
-        |  FROM tok2, rows_j GROUP BY 1, 2
-        |), probes AS (
-        |  SELECT unnest(['table','scan','merge','the','data','query','value','xyzzy_absent']) AS token
-        |), pb AS (
-        |  SELECT token, j,
-        |    CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || '-' || token), 1, 8)) AS BIGINT) % 64 AS bucket
-        |  FROM probes, rows_j
+      s"""WITH $CmsProbeCtes
         |), est AS (
         |  SELECT token, CAST(min(COALESCE(cnt, 0)) AS BIGINT) AS est
         |  FROM pb LEFT JOIN sketch USING (j, bucket)
@@ -14575,20 +14391,7 @@ object SparkEntry {
         |  e.est - coalesce(ex.n_exact, 0) AS overcount
         |FROM est e LEFT JOIN ex ON ex.token = e.token""".stripMargin,
     "cms_token_counts" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS t FROM documents
-        |), tok2 AS (SELECT t FROM tok WHERE t <> ''),
-        |rows_j AS (SELECT unnest(range(4)) AS j),
-        |sketch AS (
-        |  SELECT j, CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || '-' || t), 1, 8)) AS BIGINT) % 64 AS bucket,
-        |    count(*) AS cnt
-        |  FROM tok2, rows_j GROUP BY 1, 2
-        |), probes AS (
-        |  SELECT unnest(['table','scan','merge','the','data','query','value','xyzzy_absent']) AS token
-        |), pb AS (
-        |  SELECT token, j,
-        |    CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || '-' || token), 1, 8)) AS BIGINT) % 64 AS bucket
-        |  FROM probes, rows_j
+      s"""WITH $CmsProbeCtes
         |)
         |SELECT token, CAST(min(COALESCE(cnt, 0)) AS BIGINT) AS est
         |FROM pb LEFT JOIN sketch USING (j, bucket)
@@ -14725,14 +14528,14 @@ object SparkEntry {
         |SELECT doc_id, documents.lang FROM documents JOIN t ON documents.lang = t.lang
         |WHERE CAST(('0x' || substr(md5('mix5' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) < thr""".stripMargin,
     "curation_pipeline_v4" ->
-      """WITH survivors AS (
+      s"""WITH survivors AS (
         |  SELECT doc_id, lang, text,
         |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
         |  FROM documents
         |), d AS (
         |  SELECT doc_id, lang, text FROM survivors WHERE rn = 1
         |), sp_toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM d
+        |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM d
         |), sp_grams AS (
         |  SELECT doc_id, pg['pos'] AS pos, pg['g'] AS g FROM (
         |    SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
@@ -14764,44 +14567,8 @@ object SparkEntry {
         |), d2 AS (
         |  SELECT d.* FROM d
         |  WHERE NOT EXISTS (SELECT 1 FROM span_drop s WHERE s.doc_id = d.doc_id)
-        |), toks AS (
-        |  SELECT doc_id, lang,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '\s+', '', 'g')) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
-        |    string_split_regex(lower(text), '\s+') AS t
-        |  FROM d2
-        |), g2 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |    i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM toks WHERE len(t) >= 2
-        |), top2 AS (
-        |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
-        |), g5 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM toks WHERE len(t) >= 5
-        |), dup5 AS (
-        |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g5 GROUP BY 1, 2) GROUP BY 1
-        |), sig AS (
-        |  SELECT toks.doc_id, lang, n_tokens, stop_hits,
-        |    round(CAST(word_chars AS DOUBLE) / greatest(n_tokens, 1), 4) AS mean_word_len,
-        |    round(CAST(COALESCE(top2_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS top2_share,
-        |    round(CAST(COALESCE(dup5_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS dup5_share
-        |  FROM toks LEFT JOIN top2 ON toks.doc_id = top2.doc_id
-        |             LEFT JOIN dup5 ON toks.doc_id = dup5.doc_id
-        |)
-        |SELECT doc_id, lang, top2_share, dup5_share
-        |FROM sig
-        |WHERE n_tokens BETWEEN 10 AND 100000
-        |  AND mean_word_len BETWEEN 2.0 AND 12.0
-        |  AND top2_share < 0.30
-        |  AND dup5_share < 0.15
-        |  AND stop_hits >= 2
+        |), ${gopherStatCtes("toks", "doc_id, lang", "d2")}
+        |), $LangGopherSigFilter
         |  AND CAST(('0x' || substr(md5('cur6' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
         |    < CASE lang WHEN 'en' THEN 3435973836
         |                WHEN 'de' THEN 2576980377
@@ -14810,50 +14577,14 @@ object SparkEntry {
         |                WHEN 'zh' THEN 1717986918
         |                ELSE 0 END""".stripMargin,
     "curation_pipeline_v3" ->
-      """WITH survivors AS (
+      s"""WITH survivors AS (
         |  SELECT doc_id, lang, text,
         |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
         |  FROM documents
         |), d AS (
         |  SELECT doc_id, lang, text FROM survivors WHERE rn = 1
-        |), toks AS (
-        |  SELECT doc_id, lang,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '\s+', '', 'g')) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
-        |    string_split_regex(lower(text), '\s+') AS t
-        |  FROM d
-        |), g2 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |    i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM toks WHERE len(t) >= 2
-        |), top2 AS (
-        |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
-        |), g5 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM toks WHERE len(t) >= 5
-        |), dup5 AS (
-        |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g5 GROUP BY 1, 2) GROUP BY 1
-        |), sig AS (
-        |  SELECT toks.doc_id, lang, n_tokens, stop_hits,
-        |    round(CAST(word_chars AS DOUBLE) / greatest(n_tokens, 1), 4) AS mean_word_len,
-        |    round(CAST(COALESCE(top2_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS top2_share,
-        |    round(CAST(COALESCE(dup5_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS dup5_share
-        |  FROM toks LEFT JOIN top2 ON toks.doc_id = top2.doc_id
-        |             LEFT JOIN dup5 ON toks.doc_id = dup5.doc_id
-        |)
-        |SELECT doc_id, lang, top2_share, dup5_share
-        |FROM sig
-        |WHERE n_tokens BETWEEN 10 AND 100000
-        |  AND mean_word_len BETWEEN 2.0 AND 12.0
-        |  AND top2_share < 0.30
-        |  AND dup5_share < 0.15
-        |  AND stop_hits >= 2
+        |), ${gopherStatCtes("toks", "doc_id, lang", "d")}
+        |), $LangGopherSigFilter
         |  AND CAST(('0x' || substr(md5('cur5' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
         |    < CASE lang WHEN 'en' THEN 3435973836
         |                WHEN 'de' THEN 2576980377
@@ -15044,25 +14775,7 @@ object SparkEntry {
         |    END AS BIGINT) AS ari_micro
         |FROM q""".stripMargin,
     "semantic_dedup" ->
-      s"""$KmeansCtes,
-        |norms AS (SELECT vec_id, sum(v*v) AS nrm FROM ex GROUP BY 1),
-        |cand AS (
-        |  SELECT x.vec_id AS a, y.vec_id AS b
-        |  FROM a2 x JOIN a2 y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-        |), dots AS (
-        |  SELECT c.a, c.b, sum(ea.v * eb.v) AS dot
-        |  FROM cand c
-        |  JOIN ex ea ON ea.vec_id = c.a
-        |  JOIN ex eb ON eb.vec_id = c.b AND eb.i = ea.i
-        |  GROUP BY 1, 2
-        |), dup AS (
-        |  SELECT d.b AS vec_id, min(d.a) AS dup_of
-        |  FROM dots d
-        |  JOIN norms na ON na.vec_id = d.a
-        |  JOIN norms nb ON nb.vec_id = d.b
-        |  WHERE d.dot > 0
-        |    AND CAST(d.dot AS HUGEINT) * d.dot * 10000 >= CAST(400 AS HUGEINT) * na.nrm * nb.nrm
-        |  GROUP BY 1
+      s"""$SemDupCtes
         |)
         |SELECT v.vec_id, dup.dup_of
         |FROM (SELECT vec_id FROM embeddings) v LEFT JOIN dup ON dup.vec_id = v.vec_id""".stripMargin,
@@ -15119,8 +14832,7 @@ object SparkEntry {
     "dup_spans" ->
       // positional 5-gram index -> df cap -> diagonal islands; mirrors
       // Spans.duplicatedSpans step for step
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents
+      s"""WITH $WsToksCte
         |), grams AS (
         |  SELECT doc_id, pg['pos'] AS pos, pg['g'] AS g FROM (
         |    SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
@@ -15183,33 +14895,10 @@ object SparkEntry {
         |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM v12tr
         |), vf_iv AS (
         |  SELECT * FROM cv_iv UNION ALL SELECT * FROM sw_iv
-        |), vf_reg AS (
-        |  SELECT doc, s, e,
-        |    sum(nr) OVER (PARTITION BY doc ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rid
-        |  FROM (
-        |    SELECT doc, s, e,
-        |      CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w + 1
-        |        THEN 1 ELSE 0 END AS nr
-        |    FROM vf_iv
-        |    WINDOW w AS (PARTITION BY doc ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |), vf_regions AS MATERIALIZED (
-        |  SELECT doc, rid, min(s) AS rs, max(e) AS re FROM vf_reg GROUP BY 1, 2
-        |), vf_rm AS (
+        |), ${mergeRegionCtes("vf_", "vf_iv")}, vf_rm AS (
         |  SELECT doc, CAST(sum(re - rs + 1) AS BIGINT) AS n_tokens_removed
         |  FROM vf_regions GROUP BY 1
-        |), vf_kept AS (
-        |  SELECT k.doc_id, k.pos, k.tok FROM (
-        |    SELECT doc_id, pg['pos'] AS pos, pg['tok'] AS tok FROM (
-        |      SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-        |        i -> struct_pack(pos := CAST(i AS INT), tok := t[i]))) AS pg
-        |      FROM vf_ot)) k
-        |  WHERE NOT EXISTS (SELECT 1 FROM vf_regions r
-        |    WHERE r.doc = k.doc_id AND k.pos >= r.rs AND k.pos <= r.re)
-        |), vf_clean AS (
-        |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS text_clean
-        |  FROM vf_kept GROUP BY 1
+        |), ${keptTokenCtes("vf_", "vf_ot")}
         |), cleandocv AS MATERIALIZED (
         |  SELECT d.doc_id, coalesce(c.text_clean, '') AS text_clean,
         |    coalesce(rm.n_tokens_removed, 0) AS n_tokens_removed
@@ -15219,48 +14908,7 @@ object SparkEntry {
         |), cdocs AS MATERIALIZED (
         |  SELECT d.doc_id, d.source, c.text_clean AS text
         |  FROM v12tr d JOIN cleandocv c USING (doc_id)
-        |), dd AS (
-        |  SELECT doc_id, source, text FROM (
-        |    SELECT doc_id, source, text,
-        |      row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |    FROM cdocs) WHERE rn = 1
-        |), gtoks AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-        |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
-        |    string_split_regex(lower(text), '\\s+') AS t
-        |  FROM dd
-        |), gg2 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |    i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM gtoks WHERE len(t) >= 2
-        |), gtop2 AS (
-        |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM gg2 GROUP BY 1, 2) GROUP BY 1
-        |), gg5 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM gtoks WHERE len(t) >= 5
-        |), gdup5 AS (
-        |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM gg5 GROUP BY 1, 2) GROUP BY 1
-        |), gsig AS (
-        |  SELECT gtoks.doc_id, n_tokens, stop_hits, n_chars,
-        |    round(CAST(word_chars AS DOUBLE) / greatest(n_tokens, 1), 4) AS mean_word_len,
-        |    round(CAST(COALESCE(top2_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS top2_share,
-        |    round(CAST(COALESCE(dup5_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS dup5_share
-        |  FROM gtoks LEFT JOIN gtop2 ON gtoks.doc_id = gtop2.doc_id
-        |             LEFT JOIN gdup5 ON gtoks.doc_id = gdup5.doc_id
-        |), keptdocs AS MATERIALIZED (
-        |  SELECT dd.doc_id, dd.source, dd.text FROM dd JOIN gsig USING (doc_id)
-        |  WHERE n_tokens BETWEEN 10 AND 100000
-        |    AND mean_word_len BETWEEN 2.0 AND 12.0
-        |    AND top2_share < 0.30
-        |    AND dup5_share < 0.15
-        |    AND stop_hits >= 2
+        |), $CleanDedupGopherCtes
         |),
         |${waterfillOracle(3800L, 4L, 6, "keptdocs",
              ",\n  (SELECT CAST(coalesce(sum(n_tokens_removed), 0) AS BIGINT) FROM cleandocv)" +
@@ -15271,34 +14919,11 @@ object SparkEntry {
       // feed ONE fresh merge/subtract/reconstruct tail (sf_)
       s"""WITH ${spanRemovalCtes()}, ${withinSpanRemovalCtes()}, sf_iv AS (
         |  SELECT * FROM sr_iv UNION ALL SELECT * FROM sw_iv
-        |), sf_reg AS (
-        |  SELECT doc, s, e,
-        |    sum(nr) OVER (PARTITION BY doc ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rid
-        |  FROM (
-        |    SELECT doc, s, e,
-        |      CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w + 1
-        |        THEN 1 ELSE 0 END AS nr
-        |    FROM sf_iv
-        |    WINDOW w AS (PARTITION BY doc ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |), sf_regions AS MATERIALIZED (
-        |  SELECT doc, rid, min(s) AS rs, max(e) AS re FROM sf_reg GROUP BY 1, 2
-        |), sf_rm AS (
+        |), ${mergeRegionCtes("sf_", "sf_iv")}, sf_rm AS (
         |  SELECT doc, CAST(sum(re - rs + 1) AS BIGINT) AS n_tokens_removed,
         |    CAST(count(*) AS BIGINT) AS n_spans_removed
         |  FROM sf_regions GROUP BY 1
-        |), sf_kept AS (
-        |  SELECT k.doc_id, k.pos, k.tok FROM (
-        |    SELECT doc_id, pg['pos'] AS pos, pg['tok'] AS tok FROM (
-        |      SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-        |        i -> struct_pack(pos := CAST(i AS INT), tok := t[i]))) AS pg
-        |      FROM sr_ot)) k
-        |  WHERE NOT EXISTS (SELECT 1 FROM sf_regions r
-        |    WHERE r.doc = k.doc_id AND k.pos >= r.rs AND k.pos <= r.re)
-        |), sf_clean AS (
-        |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS text_clean
-        |  FROM sf_kept GROUP BY 1
+        |), ${keptTokenCtes("sf_", "sr_ot")}
         |)
         |SELECT d.doc_id, coalesce(c.text_clean, '') AS text_clean,
         |  CAST(len(o.t) AS BIGINT) AS n_tokens,
@@ -15335,17 +14960,7 @@ object SparkEntry {
         |  SELECT * FROM rx_iv UNION ALL SELECT * FROM wx_iv
         |), ${mergeRegionCtes("r2_", "r2_iv")}, r2_ot AS (
         |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM rcd
-        |), r2_kept AS (
-        |  SELECT k.doc_id, k.pos, k.tok FROM (
-        |    SELECT doc_id, pg['pos'] AS pos, pg['tok'] AS tok FROM (
-        |      SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-        |        i -> struct_pack(pos := CAST(i AS INT), tok := t[i]))) AS pg
-        |      FROM r2_ot)) k
-        |  WHERE NOT EXISTS (SELECT 1 FROM r2_regions r
-        |    WHERE r.doc = k.doc_id AND k.pos >= r.rs AND k.pos <= r.re)
-        |), r2_clean AS (
-        |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS text_clean
-        |  FROM r2_kept GROUP BY 1
+        |), ${keptTokenCtes("r2_", "r2_ot")}
         |), rm1 AS (
         |  SELECT doc, CAST(sum(re - rs + 1) AS BIGINT) AS n FROM sf_regions GROUP BY 1
         |), rm2 AS (
@@ -15404,48 +15019,7 @@ object SparkEntry {
       s"""WITH ${spanRemovalCtes()}, cdocs AS MATERIALIZED (
         |  SELECT d.doc_id, d.source, c.text_clean AS text
         |  FROM documents d JOIN cleandoc c USING (doc_id)
-        |), dd AS (
-        |  SELECT doc_id, source, text FROM (
-        |    SELECT doc_id, source, text,
-        |      row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |    FROM cdocs) WHERE rn = 1
-        |), gtoks AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-        |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
-        |    string_split_regex(lower(text), '\\s+') AS t
-        |  FROM dd
-        |), gg2 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |    i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM gtoks WHERE len(t) >= 2
-        |), gtop2 AS (
-        |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM gg2 GROUP BY 1, 2) GROUP BY 1
-        |), gg5 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM gtoks WHERE len(t) >= 5
-        |), gdup5 AS (
-        |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM gg5 GROUP BY 1, 2) GROUP BY 1
-        |), gsig AS (
-        |  SELECT gtoks.doc_id, n_tokens, stop_hits, n_chars,
-        |    round(CAST(word_chars AS DOUBLE) / greatest(n_tokens, 1), 4) AS mean_word_len,
-        |    round(CAST(COALESCE(top2_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS top2_share,
-        |    round(CAST(COALESCE(dup5_chars, 0) AS DOUBLE) / greatest(n_chars, 1), 4) AS dup5_share
-        |  FROM gtoks LEFT JOIN gtop2 ON gtoks.doc_id = gtop2.doc_id
-        |             LEFT JOIN gdup5 ON gtoks.doc_id = gdup5.doc_id
-        |), keptdocs AS MATERIALIZED (
-        |  SELECT dd.doc_id, dd.source, dd.text FROM dd JOIN gsig USING (doc_id)
-        |  WHERE n_tokens BETWEEN 10 AND 100000
-        |    AND mean_word_len BETWEEN 2.0 AND 12.0
-        |    AND top2_share < 0.30
-        |    AND dup5_share < 0.15
-        |    AND stop_hits >= 2
+        |), $CleanDedupGopherCtes
         |),
         |${waterfillOracle(3800L, 4L, 6, "keptdocs",
              ",\n  (SELECT CAST(coalesce(sum(n_tokens_removed), 0) AS BIGINT) FROM cleandoc)" +
@@ -15454,27 +15028,7 @@ object SparkEntry {
     "token_pmi" ->
       // doc-distinct tokens -> df band + rank cap vocab -> per-doc pairs
       // -> PMI with one micro-rounded ln (the portable float pattern)
-      """WITH tok AS (
-        |  SELECT DISTINCT doc_id, tok FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS tok
-        |    FROM documents)
-        |  WHERE tok <> ''
-        |), nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents
-        |), vocab AS (
-        |  SELECT tok, df FROM (
-        |    SELECT tok, CAST(count(*) AS BIGINT) AS df,
-        |      row_number() OVER (ORDER BY count(*) DESC, tok) AS rk
-        |    FROM tok GROUP BY tok
-        |    HAVING count(*) * 100 >= (SELECT n_docs FROM nd) * 1
-        |       AND count(*) * 100 <= (SELECT n_docs FROM nd) * 80)
-        |  WHERE rk <= 400
-        |), kept AS (
-        |  SELECT t.doc_id, t.tok FROM tok t JOIN vocab v USING (tok)
-        |), pairs AS (
-        |  SELECT a.tok AS tok_a, b.tok AS tok_b, CAST(count(*) AS BIGINT) AS c_ab
-        |  FROM kept a JOIN kept b ON a.doc_id = b.doc_id AND a.tok < b.tok
-        |  GROUP BY 1, 2
-        |  HAVING count(*) >= 5
+      s"""WITH $TokPairCtes
         |), n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents)
         |SELECT p.tok_a, p.tok_b, va.df AS c_a, vb.df AS c_b, p.c_ab,
         |  CAST(floor(ln(CAST(n.n_docs * p.c_ab AS DOUBLE) / CAST(va.df * vb.df AS DOUBLE)) * 1e6 + 0.5e0) AS BIGINT) AS pmi_micro
@@ -15551,41 +15105,14 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_intervals
         |FROM m GROUP BY user_id""".stripMargin,
     "winnow_fingerprints" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents
-        |), grams AS (
-        |  SELECT doc_id, pg['pos'] AS pos, pg['h'] AS h FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-        |      i -> struct_pack(pos := CAST(i AS INT),
-        |                       h := CAST(('0x' || substr(md5(array_to_string(t[i:i+3], ' ')), 1, 8)) AS BIGINT)))) AS pg
-        |    FROM toks WHERE len(t) >= 4)
-        |), sel AS (
-        |  SELECT doc_id, pos,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS fp,
-        |    max(pos) OVER (PARTITION BY doc_id) AS max_pos
-        |  FROM grams
-        |), fps AS (
+      s"""WITH $WinnowFpCtes
         |  SELECT DISTINCT doc_id, fp FROM sel WHERE pos <= max_pos - 4
         |)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fingerprints,
         |  md5(string_agg(CAST(fp AS VARCHAR), ',' ORDER BY fp)) AS fp_md5
         |FROM fps GROUP BY doc_id""".stripMargin,
     "value_outliers" ->
-      """WITH v AS (
-        |  SELECT l_returnflag AS g,
-        |    CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT) AS v
-        |  FROM lineitem
-        |), r AS (
-        |  SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n
-        |  FROM v
-        |), m AS (
-        |  SELECT g, max(n) AS n, max(v) AS med FROM r WHERE rn = (n + 1) // 2 GROUP BY g
-        |), d AS (
-        |  SELECT v.g, abs(v.v - m.med) AS dev, m.n, m.med FROM v JOIN m ON v.g = m.g
-        |), r2 AS (
-        |  SELECT g, dev, n, med, row_number() OVER (PARTITION BY g ORDER BY dev) AS rn FROM d
+      s"""WITH $MadRankCtes
         |), mm AS (
         |  SELECT g, max(n) AS n, max(med) AS med, max(dev) AS mad
         |  FROM r2 WHERE rn = (n + 1) // 2 GROUP BY g
@@ -15635,21 +15162,7 @@ object SparkEntry {
         |FROM prof p JOIN agg USING (event_type)""".stripMargin,
     "kcore_neardup" -> kCoreOracle(k = 2, rounds = 4, threshold = 0.5),
     "winnow_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents
-        |), grams AS (
-        |  SELECT doc_id, pg['pos'] AS pos, pg['h'] AS h FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-        |      i -> struct_pack(pos := CAST(i AS INT),
-        |                       h := CAST(('0x' || substr(md5(array_to_string(t[i:i+3], ' ')), 1, 8)) AS BIGINT)))) AS pg
-        |    FROM toks WHERE len(t) >= 4)
-        |), sel AS (
-        |  SELECT doc_id, pos,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS fp,
-        |    max(pos) OVER (PARTITION BY doc_id) AS max_pos
-        |  FROM grams
-        |), fps AS (
+      s"""WITH $WinnowFpCtes
         |  SELECT DISTINCT doc_id, fp FROM sel WHERE pos <= max_pos - 4
         |), ok AS (
         |  SELECT fp FROM fps GROUP BY fp HAVING count(*) BETWEEN 2 AND 50
@@ -15659,28 +15172,12 @@ object SparkEntry {
         |WHERE a.doc_id < b.doc_id
         |GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin,
     "source_drift_psi" ->
-      """WITH tc AS (
+      s"""WITH tc AS (
         |  SELECT source AS src, tok, CAST(count(*) AS BIGINT) AS c_st FROM (
-        |    SELECT source, unnest(string_split_regex(lower(text), '\s+')) AS tok
+        |    SELECT source, unnest(string_split_regex(lower(text), '\\s+')) AS tok
         |    FROM documents)
         |  WHERE tok <> '' GROUP BY 1, 2
-        |), st AS (SELECT src, CAST(sum(c_st) AS BIGINT) AS n_s FROM tc GROUP BY 1),
-        |tt AS (SELECT tok, CAST(sum(c_st) AS BIGINT) AS c_t FROM tc GROUP BY 1),
-        |co AS (SELECT CAST(sum(c_st) AS BIGINT) AS n_corpus,
-        |              CAST(count(DISTINCT tok) AS BIGINT) AS v FROM tc),
-        |fl AS (
-        |  SELECT st.src, tt.tok, st.n_s, tt.c_t, co.n_corpus, co.v,
-        |    COALESCE(tc.c_st, 0) AS c_st
-        |  FROM st CROSS JOIN tt CROSS JOIN co
-        |  LEFT JOIN tc ON tc.src = st.src AND tc.tok = tt.tok
-        |), terms AS (
-        |  SELECT src, n_s,
-        |    (2 * (((c_st + 1) * (n_corpus + v)) - ((c_t + 1) * (n_s + v)))
-        |       * CAST(floor(ln(CAST((c_st + 1) * (n_corpus + v) AS DOUBLE)
-        |                       / CAST((c_t + 1) * (n_s + v) AS DOUBLE)) * 1e5 + 0.5e0) AS BIGINT)
-        |     + (n_s + v) * (n_corpus + v))
-        |    // (2 * (n_s + v) * (n_corpus + v)) AS term_e5
-        |  FROM fl
+        |), $PsiTermCtes
         |)
         |SELECT src AS source, max(n_s) AS n_tokens, CAST(sum(term_e5) AS BIGINT) AS psi_e5
         |FROM terms GROUP BY src""".stripMargin,
@@ -15726,27 +15223,7 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_streaks
         |FROM s GROUP BY user_id""".stripMargin,
     "token_rules" ->
-      """WITH tok AS (
-        |  SELECT DISTINCT doc_id, tok FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS tok
-        |    FROM documents)
-        |  WHERE tok <> ''
-        |), nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents
-        |), vocab AS (
-        |  SELECT tok, df FROM (
-        |    SELECT tok, CAST(count(*) AS BIGINT) AS df,
-        |      row_number() OVER (ORDER BY count(*) DESC, tok) AS rk
-        |    FROM tok GROUP BY tok
-        |    HAVING count(*) * 100 >= (SELECT n_docs FROM nd) * 1
-        |       AND count(*) * 100 <= (SELECT n_docs FROM nd) * 80)
-        |  WHERE rk <= 400
-        |), kept AS (
-        |  SELECT t.doc_id, t.tok FROM tok t JOIN vocab v USING (tok)
-        |), pairs AS (
-        |  SELECT a.tok AS tok_a, b.tok AS tok_b, CAST(count(*) AS BIGINT) AS c_ab
-        |  FROM kept a JOIN kept b ON a.doc_id = b.doc_id AND a.tok < b.tok
-        |  GROUP BY 1, 2
-        |  HAVING count(*) >= 5
+      s"""WITH $TokPairCtes
         |), ext AS (
         |  SELECT p.tok_a, p.tok_b, va.df AS c_a, vb.df AS c_b, p.c_ab, nd.n_docs
         |  FROM pairs p
@@ -15831,7 +15308,7 @@ object SparkEntry {
         |  CAST((2 * anum + den - (((2 * anum + den) % (2 * den)) + 2 * den) % (2 * den)) // (2 * den) AS BIGINT) AS intercept_micro
         |FROM q ORDER BY event_type""".stripMargin,
     "ann_eval_metrics" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label
         |           FROM embeddings WHERE vec_id < 8),
         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
         |scored AS (
@@ -15845,36 +15322,7 @@ object SparkEntry {
         |rel AS (
         |  SELECT q.query_id, e.vec_id AS neighbor_id
         |  FROM q JOIN embeddings e ON q.label = e.label WHERE q.query_id != e.vec_id
-        |), disc AS (
-        |  SELECT CAST(i + 1 AS INT) AS rnk,
-        |    CAST(floor(1000000 / log2(i + 2) + 0.5e0) AS BIGINT) AS dm
-        |  FROM (SELECT unnest(range(10)) AS i)
-        |), pre AS (
-        |  SELECT rnk, CAST(sum(dm) OVER (ORDER BY rnk) AS BIGINT) AS cum FROM disc
-        |), nr AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel FROM rel GROUP BY 1
-        |), hits AS (
-        |  SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_hit,
-        |    CAST(min(t.rank) AS BIGINT) AS first_rank,
-        |    CAST(sum(d.dm) AS BIGINT) AS dcg_micro
-        |  FROM topk t
-        |  JOIN rel r ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id
-        |  JOIN disc d ON d.rnk = t.rank
-        |  GROUP BY 1
-        |), base AS (SELECT DISTINCT query_id FROM topk)
-        |SELECT b.query_id,
-        |  coalesce(n_rel, 0) AS n_rel, coalesce(n_hit, 0) AS n_hit,
-        |  coalesce(first_rank, 0) AS first_rank,
-        |  CAST(CASE WHEN n_rel > 0 THEN (coalesce(n_hit, 0) * 20000 + n_rel) // (2 * n_rel)
-        |       ELSE 0 END AS BIGINT) AS recall_bp,
-        |  CAST(CASE WHEN first_rank IS NOT NULL THEN (2000000 + first_rank) // (2 * first_rank)
-        |       ELSE 0 END AS BIGINT) AS mrr_micro,
-        |  coalesce(dcg_micro, 0) AS dcg_micro,
-        |  CAST(CASE WHEN n_rel > 0 THEN
-        |    (coalesce(dcg_micro, 0) * 20000 + (SELECT cum FROM pre WHERE rnk = least(n_rel, 10)))
-        |      // (2 * (SELECT cum FROM pre WHERE rnk = least(n_rel, 10)))
-        |    ELSE 0 END AS BIGINT) AS ndcg_bp
-        |FROM base b LEFT JOIN nr USING (query_id) LEFT JOIN hits USING (query_id)
-        |ORDER BY query_id""".stripMargin,
+        |), ${retrievalMetricsTail(10)}""".stripMargin,
     "ab_ks_value" ->
       """WITH e AS (
         |  SELECT CAST(user_id % 2 AS INT) AS g,
@@ -16088,27 +15536,10 @@ object SparkEntry {
         |FROM r JOIN cum ON cum.cc >= r.rank
         |GROUP BY pct, rank ORDER BY pct""".stripMargin,
     "ann_ivf_recall" ->
-      """WITH vecs AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE len(embedding) = 64
-        |), anchors AS (
-        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
-        |  FROM vecs ORDER BY vec_id LIMIT 16
-        |), dists AS (
-        |  SELECT vv.vec_id, a.ai,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> (vv.qv[i] - a.av[i]) * (vv.qv[i] - a.av[i]))) AS d2
-        |  FROM vecs vv, anchors a
-        |), assign AS (
-        |  SELECT vec_id, ai AS bucket,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-        |  FROM dists
-        |), cbuck AS (SELECT vec_id AS neighbor_id, bucket FROM assign WHERE rk = 1),
-        |qbuck AS (SELECT vec_id AS query_id, bucket FROM assign WHERE rk <= 4 AND vec_id < 8),
-        |cand AS (
-        |  SELECT DISTINCT query_id, neighbor_id
-        |  FROM qbuck JOIN cbuck USING (bucket) WHERE query_id != neighbor_id
+      s"""WITH vecs AS (
+        |${qvVecsSelect("vec_id, CAST(embedding AS DOUBLE[]) AS v", "")}
+        |), ${anchorAssignCtes("", "qv", "vv")}
+        |), $IvfProbeCandCtes
         |), iscored AS (
         |  SELECT cand.query_id, cand.neighbor_id,
         |    round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
@@ -16125,42 +15556,8 @@ object SparkEntry {
         |    round(list_cosine_similarity(q.v, cv.v), 6) AS cos_sim
         |  FROM vecs q, vecs cv
         |  WHERE q.vec_id < 8 AND q.vec_id != cv.vec_id
-        |), rel AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos_sim DESC, neighbor_id) AS brank
-        |    FROM bscored
-        |  ) WHERE brank <= 5
-        |), disc AS (
-        |  SELECT CAST(i + 1 AS INT) AS rnk,
-        |    CAST(floor(1000000 / log2(i + 2) + 0.5e0) AS BIGINT) AS dm
-        |  FROM (SELECT unnest(range(5)) AS i)
-        |), pre AS (
-        |  SELECT rnk, CAST(sum(dm) OVER (ORDER BY rnk) AS BIGINT) AS cum FROM disc
-        |), nr AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel FROM rel GROUP BY 1
-        |), hits AS (
-        |  SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_hit,
-        |    CAST(min(t.rank) AS BIGINT) AS first_rank,
-        |    CAST(sum(d.dm) AS BIGINT) AS dcg_micro
-        |  FROM topk t
-        |  JOIN rel r ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id
-        |  JOIN disc d ON d.rnk = t.rank
-        |  GROUP BY 1
-        |), base AS (SELECT DISTINCT query_id FROM topk)
-        |SELECT b.query_id,
-        |  coalesce(n_rel, 0) AS n_rel, coalesce(n_hit, 0) AS n_hit,
-        |  coalesce(first_rank, 0) AS first_rank,
-        |  CAST(CASE WHEN n_rel > 0 THEN (coalesce(n_hit, 0) * 20000 + n_rel) // (2 * n_rel)
-        |       ELSE 0 END AS BIGINT) AS recall_bp,
-        |  CAST(CASE WHEN first_rank IS NOT NULL THEN (2000000 + first_rank) // (2 * first_rank)
-        |       ELSE 0 END AS BIGINT) AS mrr_micro,
-        |  coalesce(dcg_micro, 0) AS dcg_micro,
-        |  CAST(CASE WHEN n_rel > 0 THEN
-        |    (coalesce(dcg_micro, 0) * 20000 + (SELECT cum FROM pre WHERE rnk = least(n_rel, 5)))
-        |      // (2 * (SELECT cum FROM pre WHERE rnk = least(n_rel, 5)))
-        |    ELSE 0 END AS BIGINT) AS ndcg_bp
-        |FROM base b LEFT JOIN nr USING (query_id) LEFT JOIN hits USING (query_id)
-        |ORDER BY query_id""".stripMargin,
+        |), $BruteTop5RelCte
+        |), ${retrievalMetricsTail(5)}""".stripMargin,
     "ann_ivf_quantizer_sweep" -> {
       val combos = for {
         scheme <- Seq("anchor16", "kmpp16")
@@ -16198,9 +15595,7 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rk
         |  FROM pd2
         |), avecs AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE len(embedding) = 64
+        |${qvVecsSelect("vec_id", "")}
         |), anchors AS (
         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
         |  FROM avecs ORDER BY vec_id LIMIT 16
@@ -16231,12 +15626,7 @@ object SparkEntry {
         |      ORDER BY cos_sim DESC, neighbor_id) AS brank
         |    FROM gscored
         |  ) WHERE brank <= 5
-        |), disc AS (
-        |  SELECT CAST(i + 1 AS INT) AS rnk,
-        |    CAST(floor(1000000 / log2(i + 2) + 0.5e0) AS BIGINT) AS dm
-        |  FROM (SELECT unnest(range(5)) AS i)
-        |), pre AS (
-        |  SELECT rnk, CAST(sum(dm) OVER (ORDER BY rnk) AS BIGINT) AS cum FROM disc
+        |), ${rankDiscountCtes(5)}
         |), nr AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel FROM rel GROUP BY 1
         |), ivassign AS (
         |  SELECT vec_id, cid AS bucket,
@@ -16246,21 +15636,8 @@ object SparkEntry {
         |lqb AS (SELECT vec_id AS query_id, bucket FROM ivassign
         |        WHERE rk <= 4 AND vec_id BETWEEN 100 AND 107),
         |avecs AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE len(embedding) = 64
-        |), anchors AS (
-        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
-        |  FROM avecs ORDER BY vec_id LIMIT 16
-        |), adists AS (
-        |  SELECT vv.vec_id, a.ai,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> (vv.qv[i] - a.av[i]) * (vv.qv[i] - a.av[i]))) AS d2
-        |  FROM avecs vv, anchors a
-        |), aassign AS (
-        |  SELECT vec_id, ai AS bucket,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-        |  FROM adists
+        |${qvVecsSelect("vec_id", "")}
+        |), ${anchorAssignCtes("a", "qv", "vv")}
         |), acb AS (SELECT vec_id AS neighbor_id, bucket FROM aassign WHERE rk = 1),
         |aqb AS (SELECT vec_id AS query_id, bucket FROM aassign
         |        WHERE rk <= 4 AND vec_id BETWEEN 100 AND 107),
@@ -16310,8 +15687,7 @@ object SparkEntry {
         |LEFT JOIN hits ON hits.scheme = b.scheme AND hits.query_id = b.query_id
         |ORDER BY b.scheme, b.query_id""".stripMargin,
     "next_token_topk" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents
+      s"""WITH $WsToksCte
         |), bg AS (
         |  SELECT t[i] AS w1, t[i + 1] AS w2
         |  FROM toks, unnest(range(1, len(t))) AS u(i)
@@ -16329,7 +15705,7 @@ object SparkEntry {
         |  CAST((c2 * 20000 + ctx) // (2 * ctx) AS BIGINT) AS p_bp
         |FROM r WHERE rk <= 3 ORDER BY w1, rk""".stripMargin,
     "dataset_card" ->
-      """WITH basic AS (
+      s"""WITH basic AS (
         |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
         |    CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
@@ -16338,34 +15714,12 @@ object SparkEntry {
         |), tok AS (
         |  SELECT CAST(count(*) AS BIGINT) AS n_tokens,
         |    CAST(count(DISTINCT t) AS BIGINT) AS n_vocab
-        |  FROM (SELECT unnest(string_split_regex(lower(text), '\s+')) AS t FROM documents)
+        |  FROM (SELECT unnest(string_split_regex(lower(text), '\\s+')) AS t FROM documents)
         |  WHERE t <> ''
         |), dups AS (
         |  SELECT CAST(sum(n - 1) AS BIGINT) AS n_dup_docs
         |  FROM (SELECT count(*) AS n FROM documents GROUP BY md5(text))
-        |), toksg AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '\s+', '', 'g')) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
-        |    string_split_regex(lower(text), '\s+') AS t
-        |  FROM documents
-        |), g2 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |    i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM toksg WHERE len(t) >= 2
-        |), top2 AS (
-        |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
-        |), g5 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM toksg WHERE len(t) >= 5
-        |), dup5 AS (
-        |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g5 GROUP BY 1, 2) GROUP BY 1
+        |), ${gopherStatCtes("toksg", "doc_id", "documents")}
         |), gated AS (
         |  SELECT CAST(count(*) AS BIGINT) AS n_keep
         |  FROM toksg LEFT JOIN top2 ON toksg.doc_id = top2.doc_id
@@ -16381,34 +15735,12 @@ object SparkEntry {
         |  CAST((n_keep * 20000 + n_docs) // (2 * n_docs) AS BIGINT) AS keep_bp
         |FROM basic, tok, dups, gated""".stripMargin,
     "curation_pipeline_v5" ->
-      """WITH surv AS (
+      s"""WITH surv AS (
         |  SELECT doc_id, text, source FROM (
         |    SELECT doc_id, text, source,
         |      min(doc_id) OVER (PARTITION BY md5(text)) AS keep_id
         |    FROM documents) WHERE doc_id = keep_id
-        |), toks AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '\s+', '', 'g')) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> list_contains(['the','be','to','of','and','that','have','with'], x))) AS BIGINT) AS stop_hits,
-        |    string_split_regex(lower(text), '\s+') AS t
-        |  FROM surv
-        |), g2 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |    i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM toks WHERE len(t) >= 2
-        |), top2 AS (
-        |  SELECT doc_id, max(cnt * length(g)) AS top2_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
-        |), g5 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM toks WHERE len(t) >= 5
-        |), dup5 AS (
-        |  SELECT doc_id, sum(CASE WHEN cnt >= 2 THEN cnt * length(g) ELSE 0 END) AS dup5_chars
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g5 GROUP BY 1, 2) GROUP BY 1
+        |), ${gopherStatCtes("toks", "doc_id", "surv")}
         |), gate AS (
         |  SELECT toks.doc_id, n_tokens
         |  FROM toks LEFT JOIN top2 ON toks.doc_id = top2.doc_id
@@ -16809,27 +16141,7 @@ object SparkEntry {
         |  SELECT g.keep AS keep_g,
         |    CASE WHEN s.logit_micro > 0 THEN 1 ELSE 0 END AS keep_q
         |  FROM gop g JOIN scored s ON s.doc_id = g.doc_id
-        |), cells AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(CASE WHEN keep_g = 1 AND keep_q = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n11,
-        |    CAST(sum(CASE WHEN keep_g = 1 AND keep_q = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n10,
-        |    CAST(sum(CASE WHEN keep_g = 0 AND keep_q = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n01,
-        |    CAST(sum(CASE WHEN keep_g = 0 AND keep_q = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n00
-        |  FROM j
-        |), q AS (
-        |  SELECT n, n11, n10, n01, n00,
-        |    n * (n11 + n00) - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS knum,
-        |    n * n - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS kden
-        |  FROM cells
-        |)
-        |SELECT CAST(n AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n_both_keep,
-        |  CAST(n10 AS BIGINT) AS n_a_only, CAST(n01 AS BIGINT) AS n_b_only,
-        |  CAST(n00 AS BIGINT) AS n_both_drop,
-        |  CAST((20000 * (n11 + n00) + n) // (2 * n) AS BIGINT) AS agree_bps,
-        |  CAST(CASE WHEN kden > 0 THEN (2000000 * knum + kden
-        |    - (((2000000 * knum + kden) % (2 * kden)) + 2 * kden) % (2 * kden)) // (2 * kden)
-        |    END AS BIGINT) AS kappa_micro
-        |FROM q""".stripMargin,
+        |), ${agreementKappaTail("cells", "keep_g", "keep_q")}""".stripMargin,
     "markov_stationary" -> MarkovStationaryOracle,
     "attribution_position" ->
       """WITH e AS (
@@ -16890,18 +16202,7 @@ object SparkEntry {
         |$legs""".stripMargin
     },
     "minhash_calibration" ->
-      s"""$Md5NearDupCtes, mm AS (
-        |  SELECT cand.id_a, cand.id_b,
-        |    CAST(count(*) FILTER (WHERE sa.m = sb.m) AS BIGINT) AS n_match
-        |  FROM cand
-        |  JOIN sig sa ON sa.doc_id = cand.id_a
-        |  JOIN sig sb ON sb.doc_id = cand.id_b AND sb.j = sa.j
-        |  GROUP BY 1, 2
-        |), cal AS (
-        |  SELECT mm.id_a, mm.id_b, n_match,
-        |    CAST(len(list_filter(ha.hset, x -> list_contains(hb.hset, x))) AS BIGINT) AS inter,
-        |    CAST(len(list_distinct(list_concat(ha.hset, hb.hset))) AS BIGINT) AS uni
-        |  FROM mm JOIN hs ha ON ha.doc_id = mm.id_a JOIN hs hb ON hb.doc_id = mm.id_b
+      s"""$Md5CalibrationCtes
         |)
         |SELECT id_a, id_b, n_match,
         |  CAST((20000 * n_match + 64) // 128 AS BIGINT) AS est_bps,
@@ -17187,27 +16488,7 @@ object SparkEntry {
         |  CAST(max(emd_micro) AS BIGINT) AS max_emd_micro
         |FROM pg""".stripMargin,
     "prf_expansion_terms" ->
-      """WITH dl AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS dl,
-        |    string_split_regex(lower(text), '\s+') AS toks
-        |  FROM documents
-        |), stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl
-        |), tf AS (
-        |  SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM dl)
-        |  WHERE tok IN ('table', 'scan', 'merge', 'the')
-        |  GROUP BY 1, 2, 3
-        |), dfreq AS (
-        |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1
-        |), scored AS (
-        |  SELECT tf.doc_id,
-        |    CAST(floor(ln(CAST(2*stats.n + 1 AS DOUBLE)
-        |        / CAST(2*dfreq.df + 1 AS DOUBLE)) * 1.0e6 + 0.5e0) AS BIGINT) AS idf_micro,
-        |    22 * stats.total_dl * tf.tf AS num,
-        |    10 * stats.total_dl * tf.tf + 3 * stats.total_dl + 9 * tf.dl * stats.n AS den
-        |  FROM tf JOIN dfreq USING (tok), stats
+      s"""WITH $Bm25ScoredCtes
         |), fb AS (
         |  SELECT doc_id,
         |    CAST(sum((2*idf_micro*num + den) // (2*den)) AS BIGINT) AS score_micro
@@ -17295,14 +16576,10 @@ object SparkEntry {
         |)
         |SELECT id_a, id_b, wjaccard_bps FROM pj WHERE wjaccard_bps >= 8000""".stripMargin,
     "ivf_upsert_report" ->
-      """WITH vb AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE len(embedding) = 64 AND vec_id % 5 != 0
+      s"""WITH vb AS (
+        |${qvVecsSelect("vec_id", " AND vec_id % 5 != 0")}
         |), vd AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE len(embedding) = 64 AND vec_id % 5 = 0
+        |${qvVecsSelect("vec_id", " AND vec_id % 5 = 0")}
         |), anchors AS (
         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
         |  FROM vb ORDER BY vec_id LIMIT 16
@@ -17429,12 +16706,7 @@ object SparkEntry {
         |  CAST(max_file_id AS BIGINT) AS max_file_id, sealed
         |FROM bins""".stripMargin,
     "neardup_assortativity" ->
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |            FROM embeddings WHERE vec_id % 10 = 0),
-        |e AS (
-        |  SELECT a.vec_id AS a, b.vec_id AS b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2
+      s"""WITH $SimGraphCtes
         |), deg AS (
         |  SELECT vec_id, CAST(count(*) AS HUGEINT) AS deg
         |  FROM (SELECT a AS vec_id FROM e UNION ALL SELECT b AS vec_id FROM e) GROUP BY 1
@@ -17471,12 +16743,12 @@ object SparkEntry {
         |  CAST(sum((cs - 1) * tok1) AS BIGINT) AS tokens_removable
         |FROM c GROUP BY 1""".stripMargin,
     "quality_rank_fusion" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT doc_id,
         |    CAST(length(text) AS INT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS INT) AS n_tokens,
+        |    CAST(len(regexp_extract_all(text, '\\S+')) AS INT) AS n_tokens,
         |    CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS INT) AS n_punct,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), t -> list_contains(['the','and','of','to','in','is'], t))) AS INT) AS n_stop
+        |    CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), t -> list_contains(['the','and','of','to','in','is'], t))) AS INT) AS n_stop
         |  FROM documents
         |), q AS (
         |  SELECT doc_id,
@@ -17488,23 +16760,7 @@ object SparkEntry {
         |  SELECT doc_id,
         |    CAST(row_number() OVER (ORDER BY quality DESC, doc_id) AS BIGINT) AS r_quality
         |  FROM q
-        |), toks AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents
-        |), bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-        |  FROM toks, unnest(range(1, len(t))) AS u(i)
-        |  WHERE len(t) >= 2
-        |), bc AS (
-        |  SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2
-        |), lm AS (
-        |  SELECT w1, w2, c2, sum(c2) OVER (PARTITION BY w1) AS ctx FROM bc
-        |), v AS (SELECT count(DISTINCT w2) AS v FROM bc),
-        |scored AS (
-        |  SELECT bg.doc_id,
-        |    CAST(floor(ln((CAST(lm.c2 AS DOUBLE) + 1.0e0)
-        |        / (CAST(lm.ctx AS DOUBLE) + CAST(v.v AS DOUBLE)))
-        |      * 1e6 + 0.5e0) AS BIGINT) AS lp
-        |  FROM bg JOIN lm USING (w1, w2), v
+        |), $BigramLmCtes
         |), agg AS (
         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
         |    CAST(sum(lp) AS BIGINT) AS lp_sum_micro
@@ -17622,17 +16878,7 @@ object SparkEntry {
         |  CAST(min(k) AS BIGINT) AS min_key, CAST(max(k) AS BIGINT) AS max_key
         |FROM rk GROUP BY 1""".stripMargin,
     "mutual_nn_pairs" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings WHERE vec_id % 10 = 0),
-        |s AS (
-        |  SELECT a.vec_id AS qa, b.vec_id AS nb,
-        |    round(list_cosine_similarity(a.v, b.v), 6) AS cs
-        |  FROM e a JOIN e b ON a.vec_id != b.vec_id
-        |), r AS (
-        |  SELECT qa, nb, cs,
-        |    CAST(row_number() OVER (PARTITION BY qa ORDER BY cs DESC, nb) AS INT) AS rk
-        |  FROM s
-        |), t AS (SELECT * FROM r WHERE rk <= 5)
+      s"""WITH $BruteTop5PairCtes)
         |SELECT x.qa AS id_a, x.nb AS id_b, x.cs AS cos_sim,
         |  x.rk AS rank_ab, y.rk AS rank_ba
         |FROM t x JOIN t y ON x.qa = y.nb AND x.nb = y.qa AND x.qa < x.nb""".stripMargin,
@@ -17706,89 +16952,22 @@ object SparkEntry {
         |    CASE WHEN flag.vec_id IS NULL THEN 0 ELSE 1 END AS dv2
         |  FROM vecs v LEFT JOIN dup ON dup.vec_id = v.vec_id
         |              LEFT JOIN flag ON flag.vec_id = v.vec_id
-        |), cells AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(CASE WHEN dv1 = 1 AND dv2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n11,
-        |    CAST(sum(CASE WHEN dv1 = 1 AND dv2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n10,
-        |    CAST(sum(CASE WHEN dv1 = 0 AND dv2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n01,
-        |    CAST(sum(CASE WHEN dv1 = 0 AND dv2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n00
-        |  FROM j
-        |), q AS (
-        |  SELECT n, n11, n10, n01, n00,
-        |    n * (n11 + n00) - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS knum,
-        |    n * n - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS kden
-        |  FROM cells
-        |)
-        |SELECT CAST(n AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n_both_keep,
-        |  CAST(n10 AS BIGINT) AS n_a_only, CAST(n01 AS BIGINT) AS n_b_only,
-        |  CAST(n00 AS BIGINT) AS n_both_drop,
-        |  CAST((20000 * (n11 + n00) + n) // (2 * n) AS BIGINT) AS agree_bps,
-        |  CAST(CASE WHEN kden > 0 THEN (2000000 * knum + kden
-        |    - (((2000000 * knum + kden) % (2 * kden)) + 2 * kden) % (2 * kden)) // (2 * kden)
-        |    END AS BIGINT) AS kappa_micro
-        |FROM q""".stripMargin,
+        |), ${agreementKappaTail("cells", "dv1", "dv2")}""".stripMargin,
     "text_vs_semantic_dedup_kappa" ->
       s"""$Md5NearDupCtes, lshd AS (
         |  SELECT DISTINCT id_b AS id FROM pj WHERE jaccard >= 0.8
         |), tflag AS (
         |  SELECT d.doc_id AS id, CASE WHEN lshd.id IS NULL THEN 0 ELSE 1 END AS ka
         |  FROM documents d LEFT JOIN lshd ON lshd.id = d.doc_id
-        |), vecs AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE len(embedding) = 64
-        |), anchors AS (
-        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ai, qv AS av
-        |  FROM vecs ORDER BY vec_id LIMIT 16
-        |), dists AS (
-        |  SELECT v.vec_id, a.ai,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> (v.qv[i] - a.av[i]) * (v.qv[i] - a.av[i]))) AS d2
-        |  FROM vecs v, anchors a
-        |), assign AS (
-        |  SELECT vec_id, ai AS bucket,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, ai) AS rk
-        |  FROM dists
-        |), b AS (SELECT vec_id, bucket FROM assign WHERE rk = 1),
-        |dup AS (
-        |  SELECT DISTINCT hb.vec_id
-        |  FROM b la JOIN b hb ON la.bucket = hb.bucket AND la.vec_id < hb.vec_id
-        |  JOIN vecs va ON va.vec_id = la.vec_id
-        |  JOIN vecs vb ON vb.vec_id = hb.vec_id
-        |  WHERE round(list_cosine_similarity(va.v, vb.v), 6) >= 0.35
+        |), $AnchorDupCtes
         |), sflag AS (
         |  SELECT b.vec_id AS id, CASE WHEN dup.vec_id IS NULL THEN 0 ELSE 1 END AS kb
         |  FROM b LEFT JOIN dup ON dup.vec_id = b.vec_id
         |), j AS (
         |  SELECT ka, kb FROM tflag JOIN sflag USING (id)
-        |), cells AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(CASE WHEN ka = 1 AND kb = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n11,
-        |    CAST(sum(CASE WHEN ka = 1 AND kb = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n10,
-        |    CAST(sum(CASE WHEN ka = 0 AND kb = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n01,
-        |    CAST(sum(CASE WHEN ka = 0 AND kb = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n00
-        |  FROM j
-        |), q AS (
-        |  SELECT n, n11, n10, n01, n00,
-        |    n * (n11 + n00) - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS knum,
-        |    n * n - ((n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)) AS kden
-        |  FROM cells
-        |)
-        |SELECT CAST(n AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n_both_keep,
-        |  CAST(n10 AS BIGINT) AS n_a_only, CAST(n01 AS BIGINT) AS n_b_only,
-        |  CAST(n00 AS BIGINT) AS n_both_drop,
-        |  CAST((20000 * (n11 + n00) + n) // (2 * n) AS BIGINT) AS agree_bps,
-        |  CAST(CASE WHEN kden > 0 THEN (2000000 * knum + kden
-        |    - (((2000000 * knum + kden) % (2 * kden)) + 2 * kden) % (2 * kden)) // (2 * kden)
-        |    END AS BIGINT) AS kappa_micro
-        |FROM q""".stripMargin,
+        |), ${agreementKappaTail("cells", "ka", "kb")}""".stripMargin,
     "neardup_link_prediction" ->
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |            FROM embeddings WHERE vec_id % 10 = 0),
-        |e AS (
-        |  SELECT a.vec_id AS a, b.vec_id AS b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2
+      s"""WITH $SimGraphCtes
         |), deg AS (
         |  SELECT v, CAST(count(*) AS BIGINT) AS deg
         |  FROM (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e) GROUP BY 1
@@ -17849,27 +17028,11 @@ object SparkEntry {
         |  CAST((2000 * (s - sk) + (n - k)) // (2 * (n - k)) AS BIGINT) AS right_mean_milli
         |FROM best""".stripMargin,
     "daily_drift_psi" ->
-      """WITH tc AS (
+      s"""WITH tc AS (
         |  SELECT epoch_ms(ts) // 86400000 AS src, event_type AS tok,
         |    CAST(count(*) AS BIGINT) AS c_st
         |  FROM events GROUP BY 1, 2
-        |), st AS (SELECT src, CAST(sum(c_st) AS BIGINT) AS n_s FROM tc GROUP BY 1),
-        |tt AS (SELECT tok, CAST(sum(c_st) AS BIGINT) AS c_t FROM tc GROUP BY 1),
-        |co AS (SELECT CAST(sum(c_st) AS BIGINT) AS n_corpus,
-        |              CAST(count(DISTINCT tok) AS BIGINT) AS v FROM tc),
-        |fl AS (
-        |  SELECT st.src, tt.tok, st.n_s, tt.c_t, co.n_corpus, co.v,
-        |    COALESCE(tc.c_st, 0) AS c_st
-        |  FROM st CROSS JOIN tt CROSS JOIN co
-        |  LEFT JOIN tc ON tc.src = st.src AND tc.tok = tt.tok
-        |), terms AS (
-        |  SELECT src, n_s,
-        |    (2 * (((c_st + 1) * (n_corpus + v)) - ((c_t + 1) * (n_s + v)))
-        |       * CAST(floor(ln(CAST((c_st + 1) * (n_corpus + v) AS DOUBLE)
-        |                       / CAST((c_t + 1) * (n_s + v) AS DOUBLE)) * 1e5 + 0.5e0) AS BIGINT)
-        |     + (n_s + v) * (n_corpus + v))
-        |    // (2 * (n_s + v) * (n_corpus + v)) AS term_e5
-        |  FROM fl
+        |), $PsiTermCtes
         |)
         |SELECT CAST(src AS BIGINT) AS day, max(n_s) AS n_tokens,
         |  CAST(sum(term_e5) AS BIGINT) AS psi_e5
@@ -17922,18 +17085,7 @@ object SparkEntry {
         |SELECT label, nearest_label, CAST(count(*) AS BIGINT) AS n_points
         |FROM nearest GROUP BY 1, 2""".stripMargin,
     "minhash_threshold_sweep" ->
-      s"""$Md5NearDupCtes, mm AS (
-        |  SELECT cand.id_a, cand.id_b,
-        |    CAST(count(*) FILTER (WHERE sa.m = sb.m) AS BIGINT) AS n_match
-        |  FROM cand
-        |  JOIN sig sa ON sa.doc_id = cand.id_a
-        |  JOIN sig sb ON sb.doc_id = cand.id_b AND sb.j = sa.j
-        |  GROUP BY 1, 2
-        |), cal AS (
-        |  SELECT mm.id_a, mm.id_b, n_match,
-        |    CAST(len(list_filter(ha.hset, x -> list_contains(hb.hset, x))) AS BIGINT) AS inter,
-        |    CAST(len(list_distinct(list_concat(ha.hset, hb.hset))) AS BIGINT) AS uni
-        |  FROM mm JOIN hs ha ON ha.doc_id = mm.id_a JOIN hs hb ON hb.doc_id = mm.id_b
+      s"""$Md5CalibrationCtes
         |), est AS (
         |  SELECT (20000 * n_match + 64) // 128 AS est_bps,
         |    (20000 * inter + uni) // (2 * uni) AS exact_bps

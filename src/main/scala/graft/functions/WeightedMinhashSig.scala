@@ -105,6 +105,10 @@ object WeightedMinhashSig {
   */
 case class WeightedMinhashExpr(child: Expression, tfCap: Int, numHashes: Int)
     extends UnaryExpression {
+  // checked where the expression is built: a bad value would otherwise
+  // surface as an ArrayIndexOutOfBoundsException inside an executor task
+  require(tfCap >= 1 && tfCap <= 9, "tfCap must be in [1, 9] (single-digit salt)")
+  require(numHashes >= 1, "numHashes must be >= 1")
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess

@@ -1,8 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Time a single registered query: `runMain graft.BenchOne <name> [sfDir] [reps]`.
-  * Same session config as [[Bench]]; prints one line per rep plus the min —
+  * Session from [[Bench.session]]; prints one line per rep plus the min —
   * the tight loop for optimizing one query without paying the full suite.
   */
 object BenchOne {
@@ -12,17 +11,7 @@ object BenchOne {
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env
       .getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).groupBy().count().collect()
     // comma-separated names run in order inside ONE JVM — the harness for
     // checking shared-leg reuse across a query family

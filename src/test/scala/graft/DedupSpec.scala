@@ -525,6 +525,18 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("weighted MinHash kernel rejects tfCap outside [1, 9] and numHashes < 1 when built") {
+    // a bad value must fail where the expression is built, not as an
+    // ArrayIndexOutOfBoundsException inside an executor task
+    val text = col("text")
+    Seq((10, 64), (0, 64), (8, 0), (8, -1)).foreach { case (tfCap, numHashes) =>
+      intercept[IllegalArgumentException] {
+        graft.functions.WeightedMinhashExpr.state(text, tfCap, numHashes)
+      }
+    }
+    graft.functions.WeightedMinhashExpr.state(text, 9, 1) // boundaries accepted
+  }
+
   test("dedup_savings_report: histogram and removable-token algebra on multi-copy clusters") {
     // clusters: "a b c" x3 (3 tokens/copy), "d e" x2 (2 tokens/copy),
     // "f" x1, "g h i j" x1 -> sizes {3:1, 2:1, 1:2}

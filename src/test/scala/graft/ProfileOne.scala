@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Per-query cost breakdown: `runMain graft.ProfileOne <name>[,name...] [sfDir] [reps]`.
-  * Same session config as [[Bench]]. For each rep prints: DataFrame build
+  * Session from [[Bench.session]]. For each rep prints: DataFrame build
   * wall (Catalyst construction + any eager localCheckpoint jobs that fire
   * inside the registration), count() wall, and the listener totals (jobs,
   * stages, tasks, summed task time) attributable to the rep — the numbers
@@ -18,17 +17,7 @@ object ProfileOne {
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env
       .getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -15,6 +15,22 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(unknown.isEmpty, s"oracle without query: $unknown")
   }
 
+  test("every oracleSql string matches its golden sha256 digest") {
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream(OracleDigest.resource), "UTF-8")
+    val golden =
+      try src.getLines().map { l => val Array(n, h) = l.split('\t'); n -> h }.toMap
+      finally src.close()
+    val now = OracleDigest.digests.toMap
+    val missing = (golden.keySet -- now.keySet).toSeq.sorted
+    val added = (now.keySet -- golden.keySet).toSeq.sorted
+    val changed = golden.keySet.intersect(now.keySet).filter(n => golden(n) != now(n)).toSeq.sorted
+    assert(missing.isEmpty && added.isEmpty && changed.isEmpty,
+      s"oracle SQL drifted from ${OracleDigest.resource}: changed=$changed " +
+        s"missing=$missing added=$added (regenerate only for an intended change: " +
+        "sbt \"Test/runMain graft.OracleDigest src/test/resources/oracle_sql.sha256\")")
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
