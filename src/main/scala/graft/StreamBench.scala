@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.generator.{Injector, InjectorConfig}
 import graft.ops.Parse
 import graft.streaming.LeaderBoardStream
+import graft.streaming.StatePartitions.withStatePartitions
 
 /** Streaming throughput proof for the BASELINE gate: the reference's injector
   * sustains ~1,600-2,000 events/s into LeaderBoard (BASELINE.md); this drives
@@ -22,7 +23,9 @@ import graft.streaming.LeaderBoardStream
 object StreamBench {
 
   /** End-to-end events/s through the LeaderBoard fan-out on the given
-    * session. Returns (eventsPerSec, distinctTeams, distinctUsers).
+    * session, both queries at the state partition count
+    * [[graft.apps.LeaderBoardApp.start]] gives them. Returns
+    * (eventsPerSec, distinctTeams, distinctUsers).
     */
   def measure(spark: SparkSession, n: Int, batches: Int = 10): (Double, Long, Long) = {
     import spark.implicits._
@@ -41,14 +44,17 @@ object StreamBench {
     // the other reading (ADVICE r11).
     var started = List.empty[org.apache.spark.sql.streaming.StreamingQuery]
     try {
-      val teamQ = LeaderBoardStream
-        .calculateTeamScores(parsed, teamWindowMinutes = 60, allowedLatenessMinutes = 120)
-        .writeStream.format("memory").queryName("sb_team").outputMode("update").start()
-      started ::= teamQ
-      val userQ = LeaderBoardStream
-        .calculateUserScores(parsed)
-        .writeStream.format("memory").queryName("sb_user").outputMode("update").start()
-      started ::= userQ
+      val (teamQ, userQ) = withStatePartitions(spark) {
+        val teamQ = LeaderBoardStream
+          .calculateTeamScores(parsed, teamWindowMinutes = 60, allowedLatenessMinutes = 120)
+          .writeStream.format("memory").queryName("sb_team").outputMode("update").start()
+        started ::= teamQ
+        val userQ = LeaderBoardStream
+          .calculateUserScores(parsed)
+          .writeStream.format("memory").queryName("sb_user").outputMode("update").start()
+        started ::= userQ
+        (teamQ, userQ)
+      }
 
       // Warm both queries' plans with one tiny batch before timing.
       input.addData(lines.take(100))

@@ -2,13 +2,14 @@ package graft.apps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftSession
 import graft.model.GameEvent
 import graft.ops.Scoring
 import graft.sinks.TextSink
 import graft.streaming.{EventSource, LeaderBoardStream}
+import graft.streaming.StatePartitions.withStatePartitions
 
 /** The reference's three entry points as library functions + thin CLI mains
   * (reference `UserScore.java:133-149`, `HourlyTeamScore.java:72-101`,
@@ -104,6 +105,18 @@ object LeaderBoardApp {
   /** Start both branches from an already-parsed streaming frame; returns the
     * running queries (caller stops them). Pane timing derives from the
     * previous/current watermark, tracked across batches.
+    *
+    * Each query runs at [[graft.streaming.StatePartitions.Count]] shuffle
+    * and state store partitions; the caller's session keeps its own
+    * `spark.sql.shuffle.partitions`. Every micro-batch loads and commits
+    * one store per partition, so the count follows the state, not the core
+    * count.
+    *
+    * Restart rule: a checkpoint fixes the count when its query first
+    * starts. On restart from an existing `outputDir`, Spark restores the
+    * count from the checkpoint's offset log, so a checkpoint first started
+    * at another count, such as the session's core count, keeps it;
+    * changing it needs a new checkpoint.
     */
   def start(
       parsed: DataFrame,
@@ -111,7 +124,21 @@ object LeaderBoardApp {
       teamWindowMinutes: Int = 60,
       allowedLatenessMinutes: Int = 120,
       triggerMillis: Long = 1000L
-  ): Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
+  ): Seq[StreamingQuery] = withStatePartitions(parsed.sparkSession) {
+    startAtSessionPartitions(parsed, outputDir, teamWindowMinutes, allowedLatenessMinutes, triggerMillis)
+  }
+
+  /** [[start]] without fixing the count: both queries take the session's
+    * `spark.sql.shuffle.partitions` when they first start. For the restart
+    * spec and the state partition diag, which set the count around it.
+    */
+  private[graft] def startAtSessionPartitions(
+      parsed: DataFrame,
+      outputDir: String,
+      teamWindowMinutes: Int,
+      allowedLatenessMinutes: Int,
+      triggerMillis: Long
+  ): Seq[StreamingQuery] = {
     val teamScores = LeaderBoardStream.calculateTeamScores(
       parsed, teamWindowMinutes, allowedLatenessMinutes
     )

@@ -17,9 +17,14 @@ import org.apache.spark.sql.functions._
   *
   * Both aggregations are single-shuffle stateful plans: partial aggregation
   * before the exchange, StateStore-backed running totals after — state is
-  * per-(key[,window]) and partitioned by the grouping key, so a 1000-executor
-  * deployment scales by `spark.sql.shuffle.partitions` with no hot driver
-  * path.
+  * per-(key[,window]) and partitioned by the grouping key, with no hot
+  * driver path. The number of state partitions is fixed when a query first
+  * starts: [[graft.apps.LeaderBoardApp.start]] starts both queries at
+  * [[StatePartitions.Count]] ([[StatePartitions.withStatePartitions]]), and
+  * a restart from an existing checkpoint keeps the count recorded in its
+  * offset log. Every micro-batch commits one store per partition, so the
+  * count should grow with the state, not with the cores (README,
+  * "Streaming state partitions").
   */
 object LeaderBoardStream {
 

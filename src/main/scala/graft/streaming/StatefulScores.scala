@@ -8,12 +8,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (`LeaderBoard.java:202-221`), whose state grows forever with user
   * cardinality.
   *
-  * State is per-key in the StateStore: partitioned by the grouping key,
-  * checkpointed per micro-batch, scaled horizontally by
-  * `spark.sql.shuffle.partitions` — a 1000-executor deployment holds
-  * (users / partitions) entries per task, and the processing-time TTL bounds
-  * total state for abandoned keys, which plain streaming aggregation cannot
-  * do in a global window.
+  * State is per-key in the StateStore: partitioned by the grouping key and
+  * checkpointed per micro-batch, (users / partitions) entries per task. The
+  * partition count is the session's `spark.sql.shuffle.partitions` when the
+  * query first starts ([[StatePartitions.Count]] when started inside
+  * [[StatePartitions.withStatePartitions]]); a restart from
+  * an existing checkpoint keeps the count recorded in its offset log. The
+  * processing-time TTL bounds total state for abandoned keys, which plain
+  * streaming aggregation cannot do in a global window.
   */
 object StatefulScores {
 

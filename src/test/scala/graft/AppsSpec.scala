@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.apps.{HourlyTeamScoreApp, LeaderBoardApp, UserScoreApp}
 import graft.generator.{Injector, InjectorConfig}
 import graft.model.GameEvent
+import graft.streaming.StatePartitions
 
 /** End-to-end app flows: injector file → app → output files, plus the
   * streaming leaderboard fan-out appending both tables.
@@ -68,16 +70,38 @@ class AppsSpec extends AnyFunSuite {
     assert(totals == events.map(_.score.toLong).sum)
   }
 
-  test("LeaderBoardApp restart: checkpoint resumes without loss or double-processing") {
+  /** The state partition count of each query's latest batch that ran its
+    * (single) stateful operator.
+    */
+  private def statePartitionsOf(queries: Seq[StreamingQuery]): Seq[Int] =
+    queries.map(_.recentProgress.flatMap(_.stateOperators).last.numShufflePartitions.toInt)
+
+  /** Runs `body` with the shared session's `key` set to `value`, then
+    * restores the previous value, or unsets it.
+    */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Run 1 starts the checkpoints at the session's count of 2, as `start`
+    * did before it fixed the count; then stop, add a file, and restart
+    * through `start`, which asks for `StatePartitions.Count`: totals carry
+    * over and the count stays run 1's.
+    */
+  private def leaderBoardRestart(): Unit = {
     import org.apache.spark.sql.functions._
+    assert(StatePartitions.Count != 2)
     val inDir = tmp()
     val out = tmp()
-    def startApp() = {
-      val parsed = graft.streaming.EventSource
-        .readEvents(spark, graft.streaming.EventSource.StreamFiles(inDir))
-        .select(col("user"), col("team"), col("score"), col("event_time"))
-      LeaderBoardApp.start(parsed, out, triggerMillis = 200L)
-    }
+    def parsed() = graft.streaming.EventSource
+      .readEvents(spark, graft.streaming.EventSource.StreamFiles(inDir))
+      .select(col("user"), col("team"), col("score"), col("event_time"))
     def latestUserTotal(user: String): Option[Long] =
       try {
         val df = spark.read.parquet(s"$out/leaderboard_user").filter(col("user") === user)
@@ -93,19 +117,63 @@ class AppsSpec extends AnyFunSuite {
       java.nio.file.Paths.get(inDir, "a.csv"),
       s"alice,Red,5,${3600_000L},x\nbob,Blue,3,${3660_000L},x\nalice,Red,2,${3720_000L},x\n"
     )
-    val run1 = startApp()
-    try await("alice", 7L)
-    finally run1.foreach(_.stop())
+    val run1 = withConf("spark.sql.shuffle.partitions", "2") {
+      LeaderBoardApp.startAtSessionPartitions(parsed(), out, 60, 120, triggerMillis = 200L)
+    }
+    try {
+      await("alice", 7L)
+      run1.foreach(_.processAllAvailable())
+      assert(statePartitionsOf(run1) == Seq(2, 2))
+    } finally run1.foreach(_.stop())
     // new data while stopped; restart must process ONLY the new file
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(inDir, "b.csv"),
       s"alice,Red,10,${3780_000L},x\nbob,Blue,1,${3840_000L},x\n"
     )
-    val run2 = startApp()
+    val run2 = LeaderBoardApp.start(parsed(), out, triggerMillis = 200L)
     try {
       await("alice", 17L) // 7 + 10, not 14 + 10 (no reprocessing of a.csv)
       await("bob", 4L)
+      run2.foreach(_.processAllAvailable())
+      // the offset log's count wins over the one start asks for
+      assert(statePartitionsOf(run2) == Seq(2, 2))
     } finally run2.foreach(_.stop())
+  }
+
+  test("LeaderBoardApp restart: checkpoint resumes without loss or double-processing") {
+    leaderBoardRestart()
+  }
+
+  test("LeaderBoardApp restart under the RocksDB state store keeps totals and run 1's partitions") {
+    withConf(
+      "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )(leaderBoardRestart())
+  }
+
+  test("LeaderBoardApp.start: each query runs at StatePartitions.Count; the caller's session keeps its own") {
+    implicit val ctx = spark.sqlContext
+    val own = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(own != StatePartitions.Count.toString)
+    val input = MemoryStream[GameEvent]
+    val parsed = input.toDF().withColumn("event_time", org.apache.spark.sql.functions.timestamp_millis($"timestamp"))
+    val queries = LeaderBoardApp.start(parsed, tmp(), triggerMillis = 200L)
+    try {
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == own)
+      input.addData(Seq(GameEvent("a", "Red", 5, 3600_000L), GameEvent("b", "Blue", 3, 3660_000L)))
+      queries.foreach(_.processAllAvailable())
+      assert(statePartitionsOf(queries) == Seq(StatePartitions.Count, StatePartitions.Count))
+    } finally queries.foreach(_.stop())
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == own)
+  }
+
+  test("withStatePartitions: a session that never set the count is left unset") {
+    val key = "spark.sql.shuffle.partitions"
+    val child = spark.newSession()
+    child.conf.unset(key)
+    val inside = StatePartitions.withStatePartitions(child)(child.conf.get(key))
+    assert(inside == StatePartitions.Count.toString)
+    assert(!child.conf.getAll.contains(key))
   }
 
   test("LeaderBoardApp.start: both tables appended, team rows labeled") {
