@@ -31,9 +31,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env
-      .getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = session(cpus)
+    val spark = session()
     // Generic session warmup (untimed): first-touch costs — parquet reader
     // init, codegen/janino compile, shuffle machinery — belong to the JVM,
     // not to whichever query happens to run first.
@@ -149,10 +147,10 @@ object Bench {
   /** The bench session (also used by the BenchOne / ProfileOne dev
     * harnesses, so their timings compare with the suite's).
     */
-  private[graft] def session(cpus: String): SparkSession = {
+  private[graft] def session(cpus: Int = GraftSession.defaultCores): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

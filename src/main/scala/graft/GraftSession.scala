@@ -10,7 +10,14 @@ import org.apache.spark.sql.SparkSession
   * caller scales to the cluster).
   */
 object GraftSession {
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+
+  /** Local cores when the caller names none: `$SPARK_GRAFT_CPUS`, else every
+    * processor the JVM sees.
+    */
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = defaultCores, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")

@@ -113,11 +113,6 @@ object SparkEntry {
       graft.ops.Clustering.d4PruneFrom(asg, cents).localCheckpoint(eager = true)
     }
 
-  /** The banded all-pairs TS build shared by the production face and its
-    * recall meter: one corpus series aggregation, one banded
-    * search-and-verify — the meter adds only its (by-definition
-    * quadratic) gold leg. Returns (series, s2, topk-frame).
-    */
   /** The per-user hourly cents series and its total energies — the ONE
     * corpus-sized pass of the whole PAA/TS-similarity family, memoized per
     * (session, sfDir). Optimization r15: seven TS queries previously each
@@ -159,6 +154,11 @@ object SparkEntry {
         .localCheckpoint(eager = true)
     }
 
+  /** The banded all-pairs TS build shared by the production face and its
+    * recall meter: one corpus series aggregation, one banded
+    * search-and-verify — the meter adds only its (by-definition
+    * quadratic) gold leg. Returns (series, s2, topk-frame).
+    */
   private def sharedTsAllpairs(
       s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     sharedState(s, dir, "tsAllpairs") {
@@ -216,10 +216,6 @@ object SparkEntry {
       Similarity.ivfAnchorTopK(emb, emb, k = 5).localCheckpoint(eager = true)
     }
 
-  /** SemDeDup v1 flags at the registered 0.35 threshold — read by
-    * semdedup_flags, semdedup_v1_v2_agreement, and
-    * text_vs_semantic_dedup_kappa.
-    */
   /** The threshold-independent SemDeDup v1 core — one bucket pair join
     * serves the 0.35 flags face AND every threshold-sweep leg
     * (optimization r16).
@@ -229,6 +225,10 @@ object SparkEntry {
       Similarity.semDedupCore(table(s, dir, "embeddings"))
     }
 
+  /** SemDeDup v1 flags at the registered 0.35 threshold — read by
+    * semdedup_flags, semdedup_v1_v2_agreement, and
+    * text_vs_semantic_dedup_kappa.
+    */
   private def sharedSemDedupV1(s: SparkSession, dir: String): DataFrame =
     sharedState(s, dir, "semDedupV1_035") {
       val (buckets, best) = sharedSemCore(s, dir)
@@ -5465,11 +5465,6 @@ object SparkEntry {
     }
   )
 
-  /** The exact ≥0.8 n-gram-Jaccard pair set off the lossless prefix-filter
-    * join — built ONCE per (session, sfDir) and shared by
-    * lsh_blocking_recall and lsh_band_auto_plan (it is both queries'
-    * expensive leg).
-    */
   /** The full exact-Jaccard prefix-filter join frame (the
     * setsim_jaccard_join result), checkpointed once per (session, sfDir).
     */
@@ -5479,6 +5474,11 @@ object SparkEntry {
         .localCheckpoint(eager = true)
     }
 
+  /** The exact ≥0.8 n-gram-Jaccard pair set off the lossless prefix-filter
+    * join — built ONCE per (session, sfDir) and shared by
+    * lsh_blocking_recall and lsh_band_auto_plan (it is both queries'
+    * expensive leg).
+    */
   private def sharedSetsimGold(s: SparkSession, dir: String): DataFrame =
     sharedSetsimFull(s, dir).select(col("id_a"), col("id_b"))
 
@@ -5505,10 +5505,6 @@ object SparkEntry {
         docs, docs.filter(col("doc_id") % 13 === 0).select(col("doc_id")))
     }
 
-  /** One Aho–Corasick scan of the lowercased corpus against its own
-    * top-200-df token dictionary, checkpointed and shared by both
-    * dict_scan faces.
-    */
   /** Words whose doubled bigram `"w w"` drives the overlap-divergence
     * face. Data contract making the token-adjacency oracle char-exact:
     * the corpus is single-space joined (asserted over all three scale
@@ -5715,10 +5711,6 @@ object SparkEntry {
         .localCheckpoint(eager = true)
     }
 
-  /** The min-label connected components over [[sharedMd5Pairs08]] — the
-    * clustering is an iterative propagation loop, previously re-run by
-    * five faces (clusters, diameter, modularity, both corpus faces).
-    */
   /** The per-language feature frame and iters=3 trained trajectories —
     * the trajectory face and the per-language AUC eval previously each
     * re-ran the identical feature build + GD passes per bench pass
@@ -5733,6 +5725,10 @@ object SparkEntry {
       (feat, graft.ops.QualityTrainer.trainByGroup(feat, iters = 3))
     }
 
+  /** The min-label connected components over [[sharedMd5Pairs08]] — the
+    * clustering is an iterative propagation loop, previously re-run by
+    * five faces (clusters, diameter, modularity, both corpus faces).
+    */
   private def sharedMd5Clusters08(s: SparkSession, dir: String): DataFrame =
     sharedState(s, dir, "md5Clusters08") {
       Dedup.nearDupClusters(sharedMd5Pairs08(s, dir)).localCheckpoint(eager = true)
@@ -5834,6 +5830,10 @@ object SparkEntry {
         .localCheckpoint(eager = true)
     }
 
+  /** One Aho–Corasick scan of the lowercased corpus against its own
+    * top-200-df token dictionary, checkpointed and shared by both
+    * dict_scan faces.
+    */
   private def sharedDictScan(s: SparkSession, dir: String): DataFrame =
     sharedState(s, dir, "dictScan200") {
       val docs = table(s, dir, "documents")
@@ -5842,13 +5842,6 @@ object SparkEntry {
       graft.ops.DictScan.scanCounts(docs, dict).localCheckpoint(eager = true)
     }
 
-  /** Shared oracle CTE chain for the md5-anchored near-dup pipeline: 3-gram
-    * shingles → one md5 per shingle → 64-member affine MinHash signatures →
-    * 16 band keys → bucket-capped candidate pairs → exact-Jaccard verify
-    * over the distinct md5 shingle-hash sets. Mirrors
-    * [[graft.ops.Dedup.minhashMd5Pairs]] stage for stage (same constants:
-    * affine family, 2^61-1 modulus, maxBucket 1000).
-    */
   /** Per-day exact-vs-HLL error report at register count `m` — the
     * measured sketch-quality row (shared by the m = 64 and m = 256
     * registrations).
@@ -6065,6 +6058,13 @@ object SparkEntry {
       |  FROM sig GROUP BY doc_id, j // 4
       |)""".stripMargin
 
+  /** Shared oracle CTE chain for the md5-anchored near-dup pipeline: 3-gram
+    * shingles → one md5 per shingle → 64-member affine MinHash signatures →
+    * 16 band keys → bucket-capped candidate pairs → exact-Jaccard verify
+    * over the distinct md5 shingle-hash sets. Mirrors
+    * [[graft.ops.Dedup.minhashMd5Pairs]] stage for stage (same constants:
+    * affine family, 2^61-1 modulus, maxBucket 1000).
+    */
   private val Md5NearDupCtes: String =
     s"""$Md5SigCtes, bucket_ok AS (
       |  SELECT band, bk FROM bandkey GROUP BY band, bk HAVING count(*) BETWEEN 2 AND 1000
@@ -6159,12 +6159,6 @@ object SparkEntry {
       |  FROM f
       |)""".stripMargin
 
-  /** Shared CTEs reproducing [[graft.ops.TextAnalysis.gopherRules]]:
-    * `gop(doc_id, n_chars, n_tokens, word_chars, stop_hits, top2_chars,
-    * dup5_chars, mean_word_len, top2_share, dup5_share, keep)` — the full
-    * Gopher gate output, reused by `gopher_rules` and the gate-agreement
-    * queries.
-    */
   /** Deterministic-anchor IVF directed top-5 over the full embeddings
     * corpus + the mutuality join — shared by mutual_nn_ivf,
     * semdedup_mutual_flags, and semdedup_v1_v2_agreement. Exposes `vecs`,
@@ -6213,14 +6207,6 @@ object SparkEntry {
       |    AND x.query_id < x.neighbor_id
       |)""".stripMargin
 
-  /** Graph-ANN beam-search replay: the navigation graph is the IVF leg's
-    * per-node top-8 (deterministic anchors, nprobe=2 — the SAME
-    * assign/probe chain the green ann_ivf_anchor_topk oracle replays, so
-    * the graph build costs candidates, not N²), then min-id entry and
-    * `maxHops` unrolled expand→rescore→top-8 hops — mirrors
-    * [[graft.ops.GraphAnn.beamSearchTopK]] over
-    * [[graft.ops.Similarity.ivfAnchorTopK]] output hop for hop.
-    */
   /** Next-fit fold replay: rows numbered per bucket under `orderBy`, then a
     * linear recursion carries (pack_id, fill) — the recursive-CTE form of
     * [[graft.ops.Packing.nextFitPacks]]' state machine. `p` prefixes the
@@ -6322,6 +6308,14 @@ object SparkEntry {
       |${graphHopChain("", maxHops)}""".stripMargin
   }
 
+  /** Graph-ANN beam-search replay: the navigation graph is the IVF leg's
+    * per-node top-8 (deterministic anchors, nprobe=2 — the SAME
+    * assign/probe chain the green ann_ivf_anchor_topk oracle replays, so
+    * the graph build costs candidates, not N²), then min-id entry and
+    * `maxHops` unrolled expand→rescore→top-8 hops — mirrors
+    * [[graft.ops.GraphAnn.beamSearchTopK]] over
+    * [[graft.ops.Similarity.ivfAnchorTopK]] output hop for hop.
+    */
   private def graphBeamCtes: String =
     s"""${graphHopCtes(3)},
       |beam_topk AS (
@@ -7307,6 +7301,12 @@ object SparkEntry {
       |      * 1e6 + 0.5e0) AS BIGINT) AS lp
       |  FROM bg JOIN lm USING (w1, w2), v""".stripMargin
 
+  /** Shared CTEs reproducing [[graft.ops.TextAnalysis.gopherRules]]:
+    * `gop(doc_id, n_chars, n_tokens, word_chars, stop_hits, top2_chars,
+    * dup5_chars, mean_word_len, top2_share, dup5_share, keep)` — the full
+    * Gopher gate output, reused by `gopher_rules` and the gate-agreement
+    * queries.
+    */
   private val GopherRulesCtes: String =
     s"""${gopherStatCtes("toks", "doc_id", "documents")}
       |), joined AS (
@@ -7333,8 +7333,8 @@ object SparkEntry {
     * [[graft.ops.Similarity.topPrincipalComponent]]: exact integer scatter
     * numerator, all-ones micro start, max-|component| renormalization with
     * a sign-safe round-half-up division per entry.
-    */
-  /** The scatter-matrix + PC1 power-iteration CTE chain (through `v8`),
+    *
+    * The scatter-matrix + PC1 power-iteration CTE chain (through `v8`),
     * parameterized by the quantization scale so the anisotropy oracle can
     * run the same replay at its own (overflow-headroom) scale.
     */
@@ -7456,10 +7456,6 @@ object SparkEntry {
         |    THEN (20000*a2 + b2*c) // (2*b2*c) ELSE 0 END AS BIGINT) AS share_pc2_bps
         |FROM tot CROSS JOIN nv""".stripMargin
 
-  /** Unrolled six-step power iteration mirroring
-    * [[graft.ops.Cohort.markovStationary]]: uniform micro start, per-edge
-    * round-half-up mass distribution, dangling states self-loop.
-    */
   /** DoReMi-step replay: the [[graft.ops.LanguageModel.domainExcessReweight]]
     * chain — reference LM (self-score inner join), proxy LM over the
     * `doc_id % sampleMod = 0` subsample with the smoothed LEFT-join
@@ -7704,21 +7700,6 @@ object SparkEntry {
       |  GROUP BY 1
       |)""".stripMargin
 
-  /** The shared curation-order CTE block: decontam at 8000 (`contamd`),
-    * the train dedup chain at 9500 (suffix `t`), the CLEAN dedup chain as
-    * the SAME posting/prefix build restricted past the contaminated ids
-    * (mirrors [[graft.ops.Dedup.containmentPairsFromBuild]]'s restriction
-    * — base-corpus document frequencies, complete for any fixed-size
-    * prefix), and both orders' kept sets (`aset`/`bset`) plus their
-    * symmetric difference (`dv`). Expects [[Md5SigCtes]] +
-    * `containmentCtes(8000)` in scope.
-    */
-  /** Cross-doc removal-interval CTE head, `p`-prefixed over any docs
-    * relation: the dup_spans positional-gram island chain kept per
-    * island, b-side keep-lowest-id intervals — ends in
-    * `${p}iv(doc, s, e)`. The residual meter instantiates it a second
-    * time over the CLEANED corpus.
-    */
   /** The cross-doc island head alone (tokenize → positional grams →
     * df cap → canonical-pair self-join → diagonal islands), `p`-prefixed
     * over any docs relation — ends in `${p}isl`. [[crossIvCtes]] routes
@@ -7750,6 +7731,12 @@ object SparkEntry {
       |    WHERE a.doc_id < b.doc_id)
       |)""".stripMargin
 
+  /** Cross-doc removal-interval CTE head, `p`-prefixed over any docs
+    * relation: the dup_spans positional-gram island chain kept per
+    * island, b-side keep-lowest-id intervals — ends in
+    * `${p}iv(doc, s, e)`. The residual meter instantiates it a second
+    * time over the CLEANED corpus.
+    */
   private def crossIvCtes(
       p: String, docsRel: String, n: Int, maxDf: Int, minRun: Int): String =
     s"""${islandHeadCtes(p, docsRel, n, maxDf)}, ${p}iv AS (
@@ -7760,11 +7747,6 @@ object SparkEntry {
       |  WHERE run_tokens >= $minRun
       |)""".stripMargin
 
-  /** Eval-quote interval routing over an [[islandHeadCtes]] island set
-    * (eval = doc_id % 13): exactly-one-eval islands emit their TRAIN-side
-    * token range — ends in `${p}iv(doc, s, e)`
-    * ([[graft.ops.Spans.evalQuoteIntervals]]' routing).
-    */
   /** The shared head of the residual meter and the two-pass rewrite:
     * the registered full rewrite (sr_ cross-doc + sw_ within-doc
     * intervals → sf_ reconstruct, ending in the cleaned relation `rcd`)
@@ -7786,6 +7768,11 @@ object SparkEntry {
       |${withinIvCtes("wx_", "rcd", 3, 50, 4)},
       |${mergeRegionCtes("wx_", "wx_iv")}""".stripMargin
 
+  /** Eval-quote interval routing over an [[islandHeadCtes]] island set
+    * (eval = doc_id % 13): exactly-one-eval islands emit their TRAIN-side
+    * token range — ends in `${p}iv(doc, s, e)`
+    * ([[graft.ops.Spans.evalQuoteIntervals]]' routing).
+    */
   private def quoteIvCtes(p: String, n: Int, minRun: Int): String =
     s"""${p}iv AS (
       |  SELECT doc, CAST(s AS BIGINT) AS s, CAST(s + run_tokens - 1 AS BIGINT) AS e
@@ -7868,15 +7855,6 @@ object SparkEntry {
       |  LEFT JOIN sr_rm rm ON rm.doc = d.doc_id
       |)""".stripMargin
 
-  /** DuckDB replay of [[graft.ops.Spans.removeWithinDocSpans]] at the
-    * registered face's knobs (defaults n=3, maxRep=50, minRun=4 — the
-    * re-centred values the face runs, NOT the cross-doc face's 5/50/15):
-    * positional grams, per-(doc, gram) occurrence cap (`maxRep` bounds
-    * the HAVING range), within-doc self-join on the positive diagonal
-    * d = pos_b − pos_a, islands per (doc, d), later-occurrence removal
-    * intervals, then the same merge/subtract/reconstruct tail as
-    * [[spanRemovalCtes]] (sw_-prefixed; ends in `cleandocw`).
-    */
   /** Within-doc later-occurrence removal-interval CTE head,
     * `p`-prefixed over any docs relation — ends in `${p}iv(doc, s, e)`
     * ([[crossIvCtes]]' self-duplication twin; the residual meter
@@ -7913,6 +7891,15 @@ object SparkEntry {
       |  WHERE run_tokens >= $minRun
       |)""".stripMargin
 
+  /** DuckDB replay of [[graft.ops.Spans.removeWithinDocSpans]] at the
+    * registered face's knobs (defaults n=3, maxRep=50, minRun=4 — the
+    * re-centred values the face runs, NOT the cross-doc face's 5/50/15):
+    * positional grams, per-(doc, gram) occurrence cap (`maxRep` bounds
+    * the HAVING range), within-doc self-join on the positive diagonal
+    * d = pos_b − pos_a, islands per (doc, d), later-occurrence removal
+    * intervals, then the same merge/subtract/reconstruct tail as
+    * [[spanRemovalCtes]] (sw_-prefixed; ends in `cleandocw`).
+    */
   private def withinSpanRemovalCtes(
       docsRel: String = "documents",
       n: Int = 3,
@@ -7997,6 +7984,15 @@ object SparkEntry {
       |  LEFT JOIN eq_rm rm ON rm.doc = d.doc_id
       |)""".stripMargin
 
+  /** The shared curation-order CTE block: decontam at 8000 (`contamd`),
+    * the train dedup chain at 9500 (suffix `t`), the CLEAN dedup chain as
+    * the SAME posting/prefix build restricted past the contaminated ids
+    * (mirrors [[graft.ops.Dedup.containmentPairsFromBuild]]'s restriction
+    * — base-corpus document frequencies, complete for any fixed-size
+    * prefix), and both orders' kept sets (`aset`/`bset`) plus their
+    * symmetric difference (`dv`). Expects [[Md5SigCtes]] +
+    * `containmentCtes(8000)` in scope.
+    */
   private def curationOrderCtes: String =
     s"""contamd AS MATERIALIZED (
       |  SELECT DISTINCT CASE WHEN id_a % 13 = 0 THEN id_b ELSE id_a END AS doc_id
@@ -8095,10 +8091,6 @@ object SparkEntry {
       |  FROM sym$sfx GROUP BY 1
       |)""".stripMargin
 
-  /** Brute exact TS cosine top-5 — the oracle of BOTH
-    * `ts_user_similarity_topk` and `ts_paa_pruned_topk`: the pruned search
-    * claims bit-identical output, so it is checked against the brute SQL.
-    */
   /** Hour-of-day profile CTEs shared by every DTW oracle: per-user dense
     * 24-cell cents profiles as ORDERED lists (`prof`), mirroring
     * [[graft.ops.DtwSearch.hodProfiles]].
@@ -8428,6 +8420,10 @@ object SparkEntry {
       |    // (2 * g.n_gold) AS BIGINT) AS recall_micro
       |FROM apgc g LEFT JOIN apbc b USING (user_id) LEFT JOIN aphc h USING (user_id)""".stripMargin
 
+  /** Brute exact TS cosine top-5 — the oracle of BOTH
+    * `ts_user_similarity_topk` and `ts_paa_pruned_topk`: the pruned search
+    * claims bit-identical output, so it is checked against the brute SQL.
+    */
   private val tsBruteTopKOracle: String =
     """WITH sr AS MATERIALIZED (
       |  SELECT user_id, epoch_ms(ts) // 3600000 AS hour,
@@ -8638,13 +8634,6 @@ object SparkEntry {
       |FROM ($legs)""".stripMargin
   }
 
-  /** Banded all-pairs TS neighbor replay (`ts_allpairs_neighbors`): the
-    * signed PAA sketch, md5 sign-plane bits ("tsp-<j>-<seg>" low bit of
-    * digest byte 3), r-bit band keys, bucket pairing with the 2..maxBucket
-    * cap, shared-hour exact verify, per-user top-k, and the per-user
-    * recall against the exact all-pairs cosine gold — mirrors
-    * [[graft.ops.TimeSeries.allPairsNeighborsRecall]].
-    */
   /** The banded chain shared by `ts_allpairs_topk` (production face) and
     * `ts_allpairs_neighbors` (recall face): series → signed sketch →
     * md5 sign bits → band keys → capped buckets → exact-verified scored
@@ -8707,6 +8696,13 @@ object SparkEntry {
       |)""".stripMargin
   }
 
+  /** Banded all-pairs TS neighbor replay (`ts_allpairs_neighbors`): the
+    * signed PAA sketch, md5 sign-plane bits ("tsp-<j>-<seg>" low bit of
+    * digest byte 3), r-bit band keys, bucket pairing with the 2..maxBucket
+    * cap, shared-hour exact verify, per-user top-k, and the per-user
+    * recall against the exact all-pairs cosine gold — mirrors
+    * [[graft.ops.TimeSeries.allPairsNeighborsRecall]].
+    */
   private def tsAllPairsOracle(
       k: Int, segments: Int, nbits: Int, bands: Int, maxBucket: Int,
       sampleMod: Int = 1): String = {
@@ -8850,6 +8846,10 @@ object SparkEntry {
       |FROM ests j JOIN exact x ON x.pct = j.pct""".stripMargin
   }
 
+  /** Unrolled six-step power iteration mirroring
+    * [[graft.ops.Cohort.markovStationary]]: uniform micro start, per-edge
+    * round-half-up mass distribution, dangling states self-loop.
+    */
   private val MarkovStationaryOracle: String = {
     val base =
       """WITH seq AS (
@@ -9162,26 +9162,6 @@ object SparkEntry {
       |  FROM pxc c JOIN pxt t USING (doc_id) GROUP BY 1
       |)""".stripMargin
 
-  /** Shared CTEs reproducing the full pixel perceptual-hash family
-    * ([[graft.ops.Multimodal.perceptualHashes]]) over the
-    * perturbation-twin corpus ([[graft.ops.Multimodal.perturbedImageCorpus]]):
-    * `pcells(doc_id, k, cell, s)` the exact 8×8 box sums per variant
-    * k ∈ 0..3 (orig / re-encode / gamma v²÷255 / ±3 Knuth-hash noise —
-    * re-encode shares orig's pixels, so k=1 reuses k=0's formula and the
-    * hash equality IS the codec-round-trip proof), `phashes(doc_id, k,
-    * ahash, dhash, whash)` the three thresholdings: global mean (cells
-    * are 16 px each of 1024, so s·64 vs total), wraparound horizontal
-    * gradient (equal counts — sums compare directly), and WHT sign
-    * matrix `(−1)^(popcount(r&u)+popcount(c&v))` with the exact lower
-    * median (rank 32 of 63 non-DC) as threshold, bit 63 via the min-long
-    * literal summed in HUGEINT.
-    */
-  /** The unrolled 4-round Feistel permutation of
-    * [[graft.ops.Shuffling.feistelKey]] as one SQL expression — round
-    * keys inlined as literals for the given seed, halves via `//`/`%`
-    * 2²⁴, the XOR via DuckDB's `xor`. Pure integer, no overflow
-    * anywhere in the 48-bit domain.
-    */
   /** Shared CTEs reproducing [[graft.ops.DictScan]]'s registered faces:
     * the top-200-df lowercase token dictionary (space-prefixed patterns),
     * then per (doc, pattern) the NON-overlapping occurrence count in
@@ -9205,6 +9185,12 @@ object SparkEntry {
       |  FROM documents d, ddict p
       |), dhits AS MATERIALIZED (SELECT * FROM dsc WHERE n > 0)""".stripMargin
 
+  /** The unrolled 4-round Feistel permutation of
+    * [[graft.ops.Shuffling.feistelKey]] as one SQL expression — round
+    * keys inlined as literals for the given seed, halves via `//`/`%`
+    * 2²⁴, the XOR via DuckDB's `xor`. Pure integer, no overflow
+    * anywhere in the 48-bit domain.
+    */
   private def feistelKeySqlExpr(id: String, seed: Long): String = {
     var l = s"($id // 16777216)"
     var r = s"($id % 16777216)"
@@ -9235,6 +9221,20 @@ object SparkEntry {
     s"($l * 16777216 + $r)"
   }
 
+  /** Shared CTEs reproducing the full pixel perceptual-hash family
+    * ([[graft.ops.Multimodal.perceptualHashes]]) over the
+    * perturbation-twin corpus ([[graft.ops.Multimodal.perturbedImageCorpus]]):
+    * `pcells(doc_id, k, cell, s)` the exact 8×8 box sums per variant
+    * k ∈ 0..3 (orig / re-encode / gamma v²÷255 / ±3 Knuth-hash noise —
+    * re-encode shares orig's pixels, so k=1 reuses k=0's formula and the
+    * hash equality IS the codec-round-trip proof), `phashes(doc_id, k,
+    * ahash, dhash, whash)` the three thresholdings: global mean (cells
+    * are 16 px each of 1024, so s·64 vs total), wraparound horizontal
+    * gradient (equal counts — sums compare directly), and WHT sign
+    * matrix `(−1)^(popcount(r&u)+popcount(c&v))` with the exact lower
+    * median (rank 32 of 63 non-DC) as threshold, bit 63 via the min-long
+    * literal summed in HUGEINT.
+    */
   private val PerturbHashCtesBody: String =
     """pximg AS (
       |  SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
@@ -9289,12 +9289,6 @@ object SparkEntry {
       |  FROM pah JOIN pdh USING (doc_id, k) JOIN pwh USING (doc_id, k)
       |)""".stripMargin
 
-  /** Shared CTEs reproducing [[graft.ops.Similarity.lshSigMd5]]'s
-    * integer-exact sign-of-projection signatures (16 bits, dim 64) for the
-    * LSH/ANN oracle twins: `vecs(vec_id, v, qv)` the dim-64 stratum with
-    * micro-quantized components, `sigs(vec_id, sig)` the signatures,
-    * `masks(mask)` the probe set (own bucket + every single-bit flip).
-    */
   /** md5 sign-plane signature CTE block at a given plane count — the
     * replay of [[graft.ops.Similarity.lshSigMd5]]; 16 is the registered
     * default, 8 the dense-bucket multiprobe configuration.
@@ -9320,6 +9314,12 @@ object SparkEntry {
       |  FROM range(${nbits + 1}) m(m)
       |)""".stripMargin
 
+  /** Shared CTEs reproducing [[graft.ops.Similarity.lshSigMd5]]'s
+    * integer-exact sign-of-projection signatures (16 bits, dim 64) for the
+    * LSH/ANN oracle twins: `vecs(vec_id, v, qv)` the dim-64 stratum with
+    * micro-quantized components, `sigs(vec_id, sig)` the signatures,
+    * `masks(mask)` the probe set (own bucket + every single-bit flip).
+    */
   private val LshMd5SigCtes: String = lshMd5SigCtesN(16)
 
   /** BM25 inputs over the documents of `src`: token lists and lengths
@@ -9343,11 +9343,6 @@ object SparkEntry {
       |), dfreq AS (
       |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1""".stripMargin
 
-  /** Direct-corpus BM25 replay — one oracle covers bm25_topk (scan path),
-    * bm25_topk_indexed (sharded index path), and bm25_delta_merge
-    * (snapshot+batch merged index): the access path changes, the math and
-    * the result do not.
-    */
   /** BM25 replay, parameterized by the corpus predicate so the tombstone
     * query can hash against the surviving corpus with the same math.
     */
@@ -9371,22 +9366,13 @@ object SparkEntry {
         |FROM scored GROUP BY 1
         |ORDER BY score_micro DESC, doc_id LIMIT 10""".stripMargin
 
+  /** Direct-corpus BM25 replay — one oracle covers bm25_topk (scan path),
+    * bm25_topk_indexed (sharded index path), and bm25_delta_merge
+    * (snapshot+batch merged index): the access path changes, the math and
+    * the result do not.
+    */
   private val Bm25DirectOracle: String = bm25DirectOracle("1 = 1")
 
-  /** DuckDB replay of the full BPE training loop, unrolled: the merge
-    * count is a fixed literal, so the iteration that a recursive CTE
-    * cannot express (each level needs a fresh cross-row aggregation) is
-    * simply `nMerges` chained CTE blocks — per step: pair counts from the
-    * current vocab, the argmax under the trainer's exact tie-break
-    * (cnt desc, a, b), and the merge applied to every word. Symbol arrays
-    * travel as strings with each symbol wrapped \x02…\x03 (control chars
-    * cannot appear in whitespace-split tokens), which makes the
-    * left-to-right non-overlapping merge EXACTLY `replace()`: global
-    * string replace scans left to right and never rescans replaced text —
-    * the same semantics as [[graft.ops.Bpe.mergeSyms]], with no separator
-    * sharing between adjacent matches because every symbol carries its
-    * own delimiters.
-    */
   /** DuckDB replay of [[graft.ops.Graph.kCorePeel]]: the fixed round count
     * unrolls as one CTE pair (alive set, restricted edges) per round over
     * the md5 near-dup edge set at the given Jaccard threshold.
@@ -9500,6 +9486,20 @@ object SparkEntry {
       |)""".stripMargin +
       (1 to rounds).map(unigramEmRoundCtes(_, maxLen, p)).mkString
 
+  /** DuckDB replay of the full BPE training loop, unrolled: the merge
+    * count is a fixed literal, so the iteration that a recursive CTE
+    * cannot express (each level needs a fresh cross-row aggregation) is
+    * simply `nMerges` chained CTE blocks — per step: pair counts from the
+    * current vocab, the argmax under the trainer's exact tie-break
+    * (cnt desc, a, b), and the merge applied to every word. Symbol arrays
+    * travel as strings with each symbol wrapped \x02…\x03 (control chars
+    * cannot appear in whitespace-split tokens), which makes the
+    * left-to-right non-overlapping merge EXACTLY `replace()`: global
+    * string replace scans left to right and never rescans replaced text —
+    * the same semantics as [[graft.ops.Bpe.mergeSyms]], with no separator
+    * sharing between adjacent matches because every symbol carries its
+    * own delimiters.
+    */
   private def bpeMergesOracle(nMerges: Int): String = {
     val base =
       """WITH w AS (
@@ -9543,8 +9543,8 @@ object SparkEntry {
     * CTE steps. Weight updates use round-half-up integer division written
     * as floor((2g + D)/(2D)) with the posmod adjustment (DuckDB `//`
     * truncates); gradients accumulate in HUGEINT.
-    */
-  /** One GD training chain over `feat` rows satisfying `where`, with every
+    *
+    * One GD training chain over `feat` rows satisfying `where`, with every
     * state CTE name carrying `sfx` — so several independently-trained
     * models (CV folds) can coexist in one oracle query. `sfx = ""` and
     * `where = "TRUE"` reproduce the original single-model chain verbatim

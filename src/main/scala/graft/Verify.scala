@@ -11,7 +11,7 @@ object Verify {
       case Array(s, o)       => (s, o, None)
       case Array(s, o, subs) => (s, o, Some(subs.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCores.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -184,7 +184,8 @@ object LeaderBoardApp {
     val spark = GraftSession.local(appName = "leaderboard")
     val source = opts.get("inputDir") match {
       case Some(dir) => EventSource.StreamFiles(dir)
-      case None => EventSource.SyntheticStream(opts.get("eventsPerSec").map(_.toInt).getOrElse(2000))
+      // one micro-batch per 1 s trigger, so rows per batch is events per second
+      case None => EventSource.SyntheticStream(opts.get("eventsPerSec").map(_.toLong).getOrElse(2000L))
     }
     val parsed = Apps.eventCols(EventSource.readEvents(spark, source))
     val queries = start(

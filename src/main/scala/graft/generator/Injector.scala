@@ -18,7 +18,10 @@ import graft.model.GameEvent
   *
   * Divergence (documented in SURVEY §7.4): the reference uses an unseeded
   * `Random` (`Injector.java:23`); we seed it so batch and streaming tests
-  * share reproducible input.
+  * share reproducible input. Each row is drawn on its own from `(seed, row
+  * index)` ([[Injector.lineAt]]), so the file writer, [[Injector.generate]]
+  * and the synthetic stream (`streaming/EventSource.SyntheticStream`) emit
+  * the same lines, and rows arrive exactly `meanGapMillis` apart.
   */
 final case class InjectorConfig(
     seed: Long = 42L,
@@ -28,7 +31,7 @@ final case class InjectorConfig(
     maxScore: Int = 20,
     robotProbability: Int = 3, // 1-in-N teams get a robot
     startMillis: Long = 1700000000000L,
-    /** average inter-event gap; reference targets ~1,600-2,000 events/s */
+    /** gap between consecutive arrivals; reference targets ~1,600-2,000 events/s */
     meanGapMillis: Long = 1L,
     lateRate: Int = 600, // 1 late event per N (Injector.java:58)
     lateBaseDelayMillis: Long = 5 * 60 * 1000L,
@@ -67,39 +70,53 @@ object Injector {
     }
   }
 
-  /** Generate `n` event lines (plus their parsed form where well-formed). */
-  def generate(cfg: InjectorConfig, n: Int): Vector[InjectedLine] = {
-    val rnd = new Random(cfg.seed + 1)
-    val allTeams = teams(cfg)
-    var now = cfg.startMillis
-    Vector.tabulate(n) { i =>
-      now += rnd.nextLong(2 * cfg.meanGapMillis + 1)
-      val team = allTeams(rnd.nextInt(allTeams.size))
-      // Robot absorbs extra events: reference gives the robot a 2/numMembers
-      // slice of its team's traffic (Injector.java:162-173).
-      val user = team.robot match {
-        case Some(r) if rnd.nextInt(team.members.size) < 2 => r
-        case _ => team.members(rnd.nextInt(team.members.size))
-      }
-      val score = rnd.nextInt(cfg.maxScore)
-      val late = cfg.lateRate > 0 && i % cfg.lateRate == cfg.lateRate - 1
-      val delay =
-        if (late) cfg.lateBaseDelayMillis + rnd.nextLong(cfg.lateFuzzyDelayMillis + 1)
-        else 0L
-      val eventMs = (now - delay) / 1000 * 1000 // floor to seconds
-      val corrupt = cfg.corruptRate > 0 && rnd.nextInt(cfg.corruptRate) == 0
-      if (corrupt) {
-        // Reference corrupts by truncating the line (Injector.java:176-179).
-        InjectedLine(s"$user,${team.name}", None, late)
-      } else {
-        val readable = GameEvent.formatMillis(eventMs)
-        InjectedLine(
-          s"$user,${team.name},$score,$eventMs,$readable",
-          Some(GameEvent(user, team.name, score, eventMs)),
-          late
-        )
-      }
+  /** splitmix64: decorrelates the per-row seeds of consecutive rows. */
+  private def mix(z0: Long): Long = {
+    var z = z0 + 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+
+  /** Row `i` of the event stream, a pure function of `(cfg, i)`: the row
+    * draws from its own `Random` seeded by `mix(cfg.seed ^ i)` and arrives
+    * at `startMillis + i * meanGapMillis`, so any range of rows can be made
+    * on its own, in any order and on any executor. `teams` is
+    * `teams(cfg)`, built once by the caller.
+    */
+  def lineAt(cfg: InjectorConfig, teams: Vector[Team], i: Long): InjectedLine = {
+    val rnd = new Random(mix(cfg.seed ^ i))
+    val arrival = cfg.startMillis + i * cfg.meanGapMillis
+    val team = teams(rnd.nextInt(teams.size))
+    // Robot absorbs extra events: reference gives the robot a 2/numMembers
+    // slice of its team's traffic (Injector.java:162-173).
+    val user = team.robot match {
+      case Some(r) if rnd.nextInt(team.members.size) < 2 => r
+      case _ => team.members(rnd.nextInt(team.members.size))
     }
+    val score = rnd.nextInt(cfg.maxScore)
+    val late = cfg.lateRate > 0 && i % cfg.lateRate == cfg.lateRate - 1
+    val delay =
+      if (late) cfg.lateBaseDelayMillis + rnd.nextLong(cfg.lateFuzzyDelayMillis + 1)
+      else 0L
+    val eventMs = (arrival - delay) / 1000 * 1000 // floor to seconds
+    val corrupt = cfg.corruptRate > 0 && rnd.nextInt(cfg.corruptRate) == 0
+    if (corrupt) {
+      // Reference corrupts by truncating the line (Injector.java:176-179).
+      InjectedLine(s"$user,${team.name}", None, late)
+    } else {
+      InjectedLine(
+        s"$user,${team.name},$score,$eventMs,${GameEvent.formatMillis(eventMs)}",
+        Some(GameEvent(user, team.name, score, eventMs)),
+        late
+      )
+    }
+  }
+
+  /** Rows `0 until n` of [[lineAt]], with their parsed form where well-formed. */
+  def generate(cfg: InjectorConfig, n: Int): Vector[InjectedLine] = {
+    val allTeams = teams(cfg)
+    Vector.tabulate(n)(i => lineAt(cfg, allTeams, i.toLong))
   }
 
   def writeLines(cfg: InjectorConfig, n: Int, path: String): Unit = {

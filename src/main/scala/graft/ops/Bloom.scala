@@ -64,11 +64,6 @@ object Bloom {
     Array.tabulate(mBits / 64)(w => words.getOrElse(w, 0L))
   }
 
-  /** Map-only membership test: true iff every one of the key's k bits is
-    * set in the filter. The filter crosses the plan as two literal
-    * arrays (words + the 64 power-of-two masks); the test is k
-    * element_at/AND ops per row — no join, no shuffle.
-    */
   /** Measured false-positive sweep — the Bloom sizing curve: for each
     * candidate filter size m, build the filter over the snapshot key set
     * and probe it with TRUE NON-MEMBERS (batch keys minus snapshot keys),
@@ -124,6 +119,11 @@ object Bloom {
     }.reduce(_.unionByName(_))
   }
 
+  /** Map-only membership test: true iff every one of the key's k bits is
+    * set in the filter. The filter crosses the plan as two literal
+    * arrays (words + the 64 power-of-two masks); the test is k
+    * element_at/AND ops per row — no join, no shuffle.
+    */
   def member(key: Column, bloom: Array[Long], mBits: Int, kHash: Int): Column = {
     require(bloom.length == mBits / 64, s"bloom array must have ${mBits / 64} words")
     val words = array(bloom.map(lit): _*)

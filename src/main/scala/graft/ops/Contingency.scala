@@ -177,29 +177,6 @@ object Contingency {
           .as("var_units"))
   }
 
-  /** Exact ROC-AUC of a score column against a binary label by the
-    * rank-sum identity (Hanley & McNeil 1982: AUC = U⁺/(n⁺·n⁻), the
-    * Mann-Whitney equivalence) — the threshold-FREE classifier eval.
-    * Kappa/agreement rows grade one operating point; this row asks
-    * whether the score ORDERS positives above negatives across all of
-    * them, which is what a pipeline tuning its keep threshold actually
-    * needs to know.
-    *
-    * Same exactness discipline as [[mannWhitney]]: ranks come from the
-    * distributed CDF over per-score counts (never a single-task window),
-    * tied scores take the midrank via the doubled-rank trick
-    * (2·rank of a tie group = 2·prev_cum + g + 1), and the single
-    * division closes as one exact rational:
-    * `auc_bps = round_half_up(10⁴ · U2⁺ / (2·n⁺·n⁻))` with
-    * `U2⁺ = 2·R⁺ − n⁺(n⁺+1)`. Both engines agree bit-for-bit; a
-    * degenerate label (no positives or no negatives) yields null.
-    *
-    * Shape: one (score) aggregation collapses the corpus to
-    * distinct-score counts, [[Ranking.runningTotals]] ranks them with
-    * ≤ P driver longs, one single-row aggregation closes — frames after
-    * the first agg are score-vocabulary sized, so the 100 TB cost is the
-    * one corpus scan.
-    */
   /** Exact-midrank Spearman rank correlation between two integer-valued
     * columns — "do my two quality signals rank the corpus the same way",
     * the agreement question kappa (one operating point) and AUC (one
@@ -253,6 +230,29 @@ object Contingency {
         })
   }
 
+  /** Exact ROC-AUC of a score column against a binary label by the
+    * rank-sum identity (Hanley & McNeil 1982: AUC = U⁺/(n⁺·n⁻), the
+    * Mann-Whitney equivalence) — the threshold-FREE classifier eval.
+    * Kappa/agreement rows grade one operating point; this row asks
+    * whether the score ORDERS positives above negatives across all of
+    * them, which is what a pipeline tuning its keep threshold actually
+    * needs to know.
+    *
+    * Same exactness discipline as [[mannWhitney]]: ranks come from the
+    * distributed CDF over per-score counts (never a single-task window),
+    * tied scores take the midrank via the doubled-rank trick
+    * (2·rank of a tie group = 2·prev_cum + g + 1), and the single
+    * division closes as one exact rational:
+    * `auc_bps = round_half_up(10⁴ · U2⁺ / (2·n⁺·n⁻))` with
+    * `U2⁺ = 2·R⁺ − n⁺(n⁺+1)`. Both engines agree bit-for-bit; a
+    * degenerate label (no positives or no negatives) yields null.
+    *
+    * Shape: one (score) aggregation collapses the corpus to
+    * distinct-score counts, [[Ranking.runningTotals]] ranks them with
+    * ≤ P driver longs, one single-row aggregation closes — frames after
+    * the first agg are score-vocabulary sized, so the 100 TB cost is the
+    * one corpus scan.
+    */
   def rocAuc(
       df: DataFrame,
       labelCol: String,

@@ -149,8 +149,8 @@ object Dedup {
   /** MinHash signature: for each of `numHashes` universal hash functions,
     * the min over the doc's shingle hashes. Pure array expressions — the
     * whole signature computes in one codegen'd projection.
-    */
-  /** Signature from an already-materialized shingle-hash column. Keep the
+    *
+    * Signature from an already-materialized shingle-hash column. Keep the
     * shingles in their own projection and feed a plain column reference here:
     * the 64 per-hash expressions then share one shingle computation instead
     * of re-deriving the whole tokenize→shingle→hash pipeline 64 times.
@@ -212,8 +212,8 @@ object Dedup {
     * @param maxBucket degenerate-bucket cap: buckets larger than this are
     *                  dropped (at web scale these are boilerplate; pairing
     *                  them is O(b²) for no dedup value).
-    */
-  /** @param materialize eager local checkpoint of the (tiny) verified pair
+    *
+    * @param materialize eager local checkpoint of the (tiny) verified pair
     *                     set so intermediate caches can be released before
     *                     returning; pass false to get the raw lazy plan
     *                     (plan inspection, composition into a larger job).
@@ -703,8 +703,8 @@ object Dedup {
     * fingerprints join back only for the candidate set.
     *
     * Default 4 chunks × 16 bits guarantees recall for maxHamming ≤ 3.
-    */
-  /** @param materialize as in [[minhashPairs]] — pass false for the raw
+    *
+    * @param materialize as in [[minhashPairs]] — pass false for the raw
     *                     lazy plan (no checkpoint, caches left registered).
     */
   def simhashNearDupPairs(
@@ -1036,20 +1036,6 @@ object Dedup {
     when(size(hashes) > 0, array(perHash: _*)).otherwise(lit(null).cast("array<bigint>"))
   }
 
-  /** Full md5-anchored near-duplicate PAIR pipeline — the oracle-checkable
-    * twin of [[minhashPairs]]: md5 shingle hashes → affine MinHash signature
-    * → banded LSH buckets → candidate pairs → exact-Jaccard verification
-    * over the md5 shingle-hash sets. Same staged plan shape as the xxhash64
-    * production form (ids-only bucket shuffle, array-expression pair
-    * generation, shingles recomputed only for candidate docs), but every
-    * hash is engine-portable, so a SQL oracle reproduces the result
-    * bit-for-bit — including the banding, the `maxBucket` degenerate-bucket
-    * cap, and the verification arithmetic.
-    *
-    * Feeds [[nearDupClusters]] / [[dropNearDuplicates]] unchanged, putting
-    * the whole pair → connected-components → corpus-dedup chain under the
-    * DuckDB oracle (recursive-CTE connected components on the same pairs).
-    */
   /** WEIGHTED near-dup pairs: MinHash over the tf-weighted token multiset,
     * via integer-weight expansion — element (token, k) for k = 1..min(tf,
     * `tfCap`), so plain Jaccard over the expanded sets IS the (capped)
@@ -1411,18 +1397,6 @@ object Dedup {
       .withColumn("err_b_bps", col("est_b_in_a_bps") - col("cont_b_in_a_bps"))
   }
 
-  /** Does curation ORDER matter — dedup-then-decontam vs
-    * decontam-then-dedup, measured. The two commute UNLESS a containment
-    * representative is itself contaminated: dedup-first lets the
-    * contaminated container kill its quote and then dies to decontam
-    * (both copies gone); decontam-first removes the container before the
-    * election, so the quote survives as its own representative — the
-    * deletion-repair insight applied to pipeline ordering. Rows:
-    * surviving docs/tokens per policy plus the symmetric difference
-    * (`divergence` — 0 when the orders commute, as they do on the
-    * driver corpus at both SFs; the planted-container spec shows the
-    * non-zero case).
-    */
   /** The shared core of the curation-order analysis: both policies'
     * surviving id frames (checkpointed, ids only) for one (corpus, eval,
     * thresholds) configuration. `curation_order_report` and
@@ -1476,6 +1450,18 @@ object Dedup {
     CurationOrderCore(dedupFirst, decontamFirst)
   }
 
+  /** Does curation ORDER matter — dedup-then-decontam vs
+    * decontam-then-dedup, measured. The two commute UNLESS a containment
+    * representative is itself contaminated: dedup-first lets the
+    * contaminated container kill its quote and then dies to decontam
+    * (both copies gone); decontam-first removes the container before the
+    * election, so the quote survives as its own representative — the
+    * deletion-repair insight applied to pipeline ordering. Rows:
+    * surviving docs/tokens per policy plus the symmetric difference
+    * (`divergence` — 0 when the orders commute, as they do on the
+    * driver corpus at both SFs; the planted-container spec shows the
+    * non-zero case).
+    */
   def curationOrderReport(
       docs: DataFrame,
       evalIds: DataFrame,
@@ -1615,6 +1601,20 @@ object Dedup {
       .filter(col("eval_contained_bps") >= thresholdBps)
   }
 
+  /** Full md5-anchored near-duplicate PAIR pipeline — the oracle-checkable
+    * twin of [[minhashPairs]]: md5 shingle hashes → affine MinHash signature
+    * → banded LSH buckets → candidate pairs → exact-Jaccard verification
+    * over the md5 shingle-hash sets. Same staged plan shape as the xxhash64
+    * production form (ids-only bucket shuffle, array-expression pair
+    * generation, shingles recomputed only for candidate docs), but every
+    * hash is engine-portable, so a SQL oracle reproduces the result
+    * bit-for-bit — including the banding, the `maxBucket` degenerate-bucket
+    * cap, and the verification arithmetic.
+    *
+    * Feeds [[nearDupClusters]] / [[dropNearDuplicates]] unchanged, putting
+    * the whole pair → connected-components → corpus-dedup chain under the
+    * DuckDB oracle (recursive-CTE connected components on the same pairs).
+    */
   def minhashMd5Pairs(
       docs: DataFrame,
       idCol: String = "doc_id",

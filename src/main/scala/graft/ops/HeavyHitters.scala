@@ -374,11 +374,6 @@ object HeavyHitters {
       .agg(max(col("rho")).as("rho"))
   }
 
-  /** Per-group estimates from [[hllRegistersBy]] output: complete each
-    * group to the full m buckets (an intentional keys × m cross join —
-    * tiny by construction), then the same exact-integer harmonic mean and
-    * correction as [[hllEstimate]], per group.
-    */
   /** Rolling-window union sketches by register merge: for each key (day),
     * the merged HLL over the trailing `windowSpan` keys is the per-bucket
     * MAX of the per-key registers — the mergeability that makes sketches
@@ -463,6 +458,11 @@ object HeavyHitters {
         col("est_a_micro") + col("est_b_micro") - col("est_union_micro"))
   }
 
+  /** Per-group estimates from [[hllRegistersBy]] output: complete each
+    * group to the full m buckets (an intentional keys × m cross join —
+    * tiny by construction), then the same exact-integer harmonic mean and
+    * correction as [[hllEstimate]], per group.
+    */
   def hllEstimateBy(registers: DataFrame, keyCol: String, m: Int = 64): DataFrame = {
     val spark = registers.sparkSession
     hllP(m)

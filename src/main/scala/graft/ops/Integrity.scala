@@ -220,21 +220,6 @@ object Integrity {
         col("max_emd_micro"))
   }
 
-  /** Warner randomized response (1965) — the local-DP mechanism: each
-    * unit reports its sensitive bit TRUTHFULLY with probability
-    * p = pNum/pDen and INVERTED otherwise, giving ε = ln(p/(1−p))
-    * local differential privacy per unit (p = 3/4 ⇒ ε = ln 3); the
-    * per-group population share is then recovered by the unbiased
-    * debias π̂ = (r̂ − (1−p)) / (2p − 1), here as ONE exact signed
-    * rational in micro units. The "coin" is the seeded md5 hash of the
-    * unit key — deterministic, so the whole mechanism (flips included)
-    * replays bit-for-bit in any engine; a production release would
-    * draw real randomness and PUBLISH ONLY the reported aggregates
-    * (the true bit never leaves this operator's input projection).
-    *
-    * Shape: map-only flip + one hash aggregation — group-bounded
-    * output, no shuffle beyond the groupBy.
-    */
   /** Dataset version diff — the audit a versioned corpus store runs
     * between two releases: per (source, status) with status ∈
     * added/removed/modified/unchanged, the doc count and the net token
@@ -273,6 +258,21 @@ object Integrity {
       .agg(count(lit(1)).as("n_docs"), sum(col("td")).as("token_delta"))
   }
 
+  /** Warner randomized response (1965) — the local-DP mechanism: each
+    * unit reports its sensitive bit TRUTHFULLY with probability
+    * p = pNum/pDen and INVERTED otherwise, giving ε = ln(p/(1−p))
+    * local differential privacy per unit (p = 3/4 ⇒ ε = ln 3); the
+    * per-group population share is then recovered by the unbiased
+    * debias π̂ = (r̂ − (1−p)) / (2p − 1), here as ONE exact signed
+    * rational in micro units. The "coin" is the seeded md5 hash of the
+    * unit key — deterministic, so the whole mechanism (flips included)
+    * replays bit-for-bit in any engine; a production release would
+    * draw real randomness and PUBLISH ONLY the reported aggregates
+    * (the true bit never leaves this operator's input projection).
+    *
+    * Shape: map-only flip + one hash aggregation — group-bounded
+    * output, no shuffle beyond the groupBy.
+    */
   def randomizedResponse(
       df: DataFrame,
       keyCol: String,

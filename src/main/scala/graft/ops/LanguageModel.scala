@@ -167,10 +167,6 @@ object LanguageModel {
     }
   }
 
-  /** Train-and-score in one call (scoring corpus = training corpus, the
-    * self-scoring setup used to find outlier documents). Adds the keep
-    * decision: average log-prob above `minAvgLpMicro`.
-    */
   /** DoReMi-flavored domain reweighting from MEASURED excess loss (Xie et
     * al. 2023, "DoReMi: Optimizing Data Mixtures Speeds Up Language Model
     * Pretraining" — adapted to the in-engine exact-replay discipline):
@@ -282,6 +278,10 @@ object LanguageModel {
     } finally lmPx.unpersist(blocking = false)
   }
 
+  /** Train-and-score in one call (scoring corpus = training corpus, the
+    * self-scoring setup used to find outlier documents). Adds the keep
+    * decision: average log-prob above `minAvgLpMicro`.
+    */
   def selfScore(
       docs: DataFrame,
       minAvgLpMicro: Long,

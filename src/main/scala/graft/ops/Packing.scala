@@ -43,20 +43,6 @@ object Packing {
       .select(col(idCol), col("bucket"), col("n_tokens"), col("pack_id"))
   }
 
-  /** Contrastive-training batch assignment under the in-batch-negatives
-    * constraint: NO two same-label items share a batch (same-label
-    * co-occurrence would make an in-batch "negative" actually positive —
-    * the classic contrastive-loss corruption). Each label's members are
-    * dealt round-robin across `maxLabelCount` batches, so the constraint
-    * holds by construction: a label with c members lands in c DISTINCT
-    * batches because c ≤ maxLabelCount.
-    *
-    * Deterministic (rank within label by id), two bounded exchanges (one
-    * count agg — the driver holds ONE scalar, the max label frequency —
-    * and one label-partitioned window; never a global sort). At 100 TB
-    * the window partitions by label, so skew follows label skew — exactly
-    * the quantity the max-count scalar already measured.
-    */
   /** Whole-document next-fit packing: unlike [[tokenPackAssignments]]'
     * cumulative-DIV assignment (which lets a document straddle a pack
     * boundary), next-fit keeps every document intact — a doc goes into the
@@ -266,6 +252,20 @@ object Packing {
       .unionByName(leg("length_sorted", Seq(col("n_tokens").asc, col("id").asc)))
   }
 
+  /** Contrastive-training batch assignment under the in-batch-negatives
+    * constraint: NO two same-label items share a batch (same-label
+    * co-occurrence would make an in-batch "negative" actually positive —
+    * the classic contrastive-loss corruption). Each label's members are
+    * dealt round-robin across `maxLabelCount` batches, so the constraint
+    * holds by construction: a label with c members lands in c DISTINCT
+    * batches because c ≤ maxLabelCount.
+    *
+    * Deterministic (rank within label by id), two bounded exchanges (one
+    * count agg — the driver holds ONE scalar, the max label frequency —
+    * and one label-partitioned window; never a global sort). At 100 TB
+    * the window partitions by label, so skew follows label skew — exactly
+    * the quantity the max-count scalar already measured.
+    */
   def contrastiveBatches(
       df: DataFrame,
       idCol: String = "vec_id",

@@ -536,15 +536,6 @@ object QualityTrainer {
       .toDF("iter", "lang", "feature", "w_micro")
   }
 
-  /** Reliability diagram of the trained scorer vs its teacher — the
-    * standard post-training calibration check: predictions bucketed into
-    * `nBins` equal-width bins over [0, 1), per-bin count, teacher
-    * positives, exact round-half-up positive rate (bps) and mean predicted
-    * probability (micro). A calibrated model has pos_rate_bps tracking
-    * mean_p_micro/100 across bins. One bounded aggregation over the
-    * feature frame; all arithmetic exact fixed-point (the floor-of-double
-    * divisions stay well inside 2⁵³).
-    */
   /** Raw per-bin cells (bin, n_docs, n_pos, sum_p) shared by the
     * reliability diagram and the scalar calibration summary.
     */
@@ -565,6 +556,15 @@ object QualityTrainer {
         sum(col("p_micro")).as("sum_p"))
   }
 
+  /** Reliability diagram of the trained scorer vs its teacher — the
+    * standard post-training calibration check: predictions bucketed into
+    * `nBins` equal-width bins over [0, 1), per-bin count, teacher
+    * positives, exact round-half-up positive rate (bps) and mean predicted
+    * probability (micro). A calibrated model has pos_rate_bps tracking
+    * mean_p_micro/100 across bins. One bounded aggregation over the
+    * feature frame; all arithmetic exact fixed-point (the floor-of-double
+    * divisions stay well inside 2⁵³).
+    */
   def calibrationBins(docs: DataFrame, iters: Int, nBins: Int = 10): DataFrame =
     binnedRaw(docs, iters, nBins)
       .select(
@@ -782,21 +782,6 @@ object QualityTrainer {
       .select(col("source"), col("rank"), col("doc_id"), col("p_micro"), col("dist_micro"))
   }
 
-  /** Leave-one-feature-out ablation of the trained quality model: retrain
-    * with each feature zeroed and report the in-sample AUC drop against
-    * the full model — the standard "which signal carries the ranking"
-    * feature audit, run entirely in-engine. Zeroing the column IS the
-    * ablation under this GD recurrence: the feature's gradient vanishes,
-    * so its weight stays 0 for the whole trajectory and every other
-    * update sees exactly the reduced model (the SQL oracle zeroes the
-    * WEIGHT instead — provably the same dynamics, since the term w_j·x_j
-    * is zero either way).
-    *
-    * Shape: one feature scan (checkpointed), 6 bounded-driver GD chains
-    * (full + five ablations, 5 longs each per step), 6 distributed
-    * rank-sum AUCs over score-count frames — the corpus never joins
-    * itself and nothing driver-side grows with it.
-    */
   /** Full-corpus midrank AUC for MANY tagged weight vectors through ONE
     * grouped pass ([[Contingency.rocAucBy]] with the tag as the group):
     * the K per-model `rocAuc` chains (each a join + range exchange)
@@ -836,6 +821,21 @@ object QualityTrainer {
     Contingency.rocAucBy(union, "fold", "label", "p_micro")
   }
 
+  /** Leave-one-feature-out ablation of the trained quality model: retrain
+    * with each feature zeroed and report the in-sample AUC drop against
+    * the full model — the standard "which signal carries the ranking"
+    * feature audit, run entirely in-engine. Zeroing the column IS the
+    * ablation under this GD recurrence: the feature's gradient vanishes,
+    * so its weight stays 0 for the whole trajectory and every other
+    * update sees exactly the reduced model (the SQL oracle zeroes the
+    * WEIGHT instead — provably the same dynamics, since the term w_j·x_j
+    * is zero either way).
+    *
+    * Shape: one feature scan (checkpointed), 6 bounded-driver GD chains
+    * (full + five ablations, 5 longs each per step), 6 distributed
+    * rank-sum AUCs over score-count frames — the corpus never joins
+    * itself and nothing driver-side grows with it.
+    */
   def featureAblationAucs(docs: DataFrame, iters: Int): DataFrame = {
     val feat = featuresShared(docs)
     // all six retrains (full + one per dropped feature) share ONE gradient

@@ -35,11 +35,6 @@ object Scoring {
   def filterWindow(events: DataFrame, startMs: Long, stopMs: Long): DataFrame =
     events.filter(col("timestamp") > startMs && col("timestamp") < stopMs)
 
-  /** Fixed (tumbling) event-time windows + per-(window, team) sum — the
-    * HourlyTeamScore pipeline body (`HourlyTeamScore.java:88-93`). Window
-    * assignment becomes an explicit grouping column (Spark has no hidden
-    * per-element window metadata).
-    */
   /** Session windows (gap-based, no fixed grid): consecutive events of one
     * key merge while each arrives within `gapMinutes` of the previous —
     * Spark's `session_window`, a windowing mode the reference's FixedWindows
@@ -62,6 +57,11 @@ object Scoring {
         col("n_events")
       )
 
+  /** Fixed (tumbling) event-time windows + per-(window, team) sum — the
+    * HourlyTeamScore pipeline body (`HourlyTeamScore.java:88-93`). Window
+    * assignment becomes an explicit grouping column (Spark has no hidden
+    * per-element window metadata).
+    */
   def hourlyTeamScore(
       events: DataFrame,
       windowMinutes: Int = 60,

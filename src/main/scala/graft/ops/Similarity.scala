@@ -1448,10 +1448,6 @@ object Similarity {
           (lit(2L) * col("n_base")).cast("double")).cast("long").as("growth_bps"))
   }
 
-  /** Micro-quantized integer copy of a float vector: floor(x·10⁶ + 0.5)
-    * per component — the cross-engine-exact coordinate system the anchor
-    * ANN family runs its L2 geometry in.
-    */
   /** FILTERED vector search, prefilter face: exact top-k among corpus
     * vectors sharing the query's attribute value — the
     * "nearest same-category items" query every production vector store
@@ -1880,6 +1876,10 @@ object Similarity {
           .cast("long").as("pruned_bps"))
   }
 
+  /** Micro-quantized integer copy of a float vector: floor(x·10⁶ + 0.5)
+    * per component — the cross-engine-exact coordinate system the anchor
+    * ANN family runs its L2 geometry in.
+    */
   private def microVec(v: Column): Column =
     transform(asDouble(v), x => floor(x * lit(1e6) + lit(0.5)).cast("long"))
 

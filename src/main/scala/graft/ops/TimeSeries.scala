@@ -510,33 +510,6 @@ object TimeSeries {
     }.reduce(_ unionByName _)
   }
 
-  /** The TWO-STAGE answer to "who behaves like whom" at all-pairs scale —
-    * the practical path the SAX sweep (equal-word bucketing: 0% recall at
-    * selective granularity) and the PAA bound (prunes only at fine grain)
-    * both motivate: STAGE 1 ranks every candidate by the cosine of its
-    * `segments`-number signed-sum sketch (PAA projection — `segments`
-    * integers per user instead of the full hourly series), STAGE 2
-    * exact-verifies only the top-C sketch candidates. Unlike the pruned
-    * search this is approximate — the sweep MEASURES what C buys: per
-    * candidate budget, how much of the exact cosine top-k the sketch
-    * ranking retains (the PQ-ADC / sign-Hamming two-stage discipline,
-    * applied to series). Sketch scoring shares the hour-series pass and
-    * is seg-keyed — corpus work is one sketch aggregation plus a
-    * (queries × users)-row integer close.
-    */
-  /** STAGE 1 of the two-stage rerank, exposed for the plan guard: the
-    * signed `segments`-number PAA sketch per user, its cosine against
-    * each query's sketch, and the per-query top-`budget` candidate ranks
-    * — ranked with the bounded-heap [[graft.functions.TopKAgg]]
-    * ([[Similarity.topKPerGroup]]), NOT a row_number window: a per-query
-    * window partition holds the whole candidate set (one partition = one
-    * corpus at all-pairs scale), while the heap caps what crosses the
-    * exchange at `budget` entries per (map partition, query).
-    * sk_cos_micro ≤ 10⁶ is exact in the heap's double and
-    * (score desc, id asc) is the identical tie order, so ranks replay
-    * bit-for-bit (VERDICT r10 #6; `PlanShapeSpec` pins no-Window).
-    * Columns: query_user, user_id, sk_cos_micro, rk (1-based).
-    */
   /** Signed per-segment PAA sums — the direction-preserving sketch shared
     * by the rerank ranking and the banded all-pairs search (not energies:
     * a cosine ranking and a sign-plane hash both need DIRECTION).
@@ -555,6 +528,19 @@ object TimeSeries {
       .localCheckpoint(eager = true)
   }
 
+  /** STAGE 1 of the two-stage rerank, exposed for the plan guard: the
+    * signed `segments`-number PAA sketch per user, its cosine against
+    * each query's sketch, and the per-query top-`budget` candidate ranks
+    * — ranked with the bounded-heap [[graft.functions.TopKAgg]]
+    * ([[Similarity.topKPerGroup]]), NOT a row_number window: a per-query
+    * window partition holds the whole candidate set (one partition = one
+    * corpus at all-pairs scale), while the heap caps what crosses the
+    * exchange at `budget` entries per (map partition, query).
+    * sk_cos_micro ≤ 10⁶ is exact in the heap's double and
+    * (score desc, id asc) is the identical tie order, so ranks replay
+    * bit-for-bit (VERDICT r10 #6; `PlanShapeSpec` pins no-Window).
+    * Columns: query_user, user_id, sk_cos_micro, rk (1-based).
+    */
   private[graft] def sketchRankedCandidates(
       series: DataFrame,
       maxQueryUser: Long,
@@ -587,6 +573,20 @@ object TimeSeries {
       .withColumnRenamed("rank", "rk")
   }
 
+  /** The TWO-STAGE answer to "who behaves like whom" at all-pairs scale —
+    * the practical path the SAX sweep (equal-word bucketing: 0% recall at
+    * selective granularity) and the PAA bound (prunes only at fine grain)
+    * both motivate: STAGE 1 ranks every candidate by the cosine of its
+    * `segments`-number signed-sum sketch (PAA projection — `segments`
+    * integers per user instead of the full hourly series), STAGE 2
+    * exact-verifies only the top-C sketch candidates. Unlike the pruned
+    * search this is approximate — the sweep MEASURES what C buys: per
+    * candidate budget, how much of the exact cosine top-k the sketch
+    * ranking retains (the PQ-ADC / sign-Hamming two-stage discipline,
+    * applied to series). Sketch scoring shares the hour-series pass and
+    * is seg-keyed — corpus work is one sketch aggregation plus a
+    * (queries × users)-row integer close.
+    */
   def tsSketchRerankRecall(
       ev: DataFrame,
       maxQueryUser: Long = 4L,
@@ -770,6 +770,12 @@ object TimeSeries {
       .withColumn("cos_micro", col("cos_micro").cast("long"))
   }
 
+  /** [[paaSeries]] exposed for callers that share one build across the
+    * all-pairs faces (the topk face and its recall meter would otherwise
+    * each re-aggregate the corpus).
+    */
+  private[graft] def paaSeriesShared(ev: DataFrame): (DataFrame, DataFrame) = paaSeries(ev)
+
   /** The measured face of [[allPairsNeighbors]]: per user, how much of
     * the EXACT cosine top-k the banded search retains — n_gold, the
     * banded candidate count inside the top-k cut, hits, recall in exact
@@ -778,12 +784,6 @@ object TimeSeries {
     * brute [[tsSimilarityTopK]] convention over every user as its own
     * query. Every user with any series activity gets a row.
     */
-  /** [[paaSeries]] exposed for callers that share one build across the
-    * all-pairs faces (the topk face and its recall meter would otherwise
-    * each re-aggregate the corpus).
-    */
-  private[graft] def paaSeriesShared(ev: DataFrame): (DataFrame, DataFrame) = paaSeries(ev)
-
   def allPairsNeighborsRecall(
       ev: DataFrame,
       k: Int = 5,
@@ -945,14 +945,6 @@ object TimeSeries {
           .as("r_milli"))
   }
 
-  /** Diurnal-corrected anomaly flags: each (type, hour) cell compared to
-    * its HOUR-OF-DAY baseline (the mean count over all same-hod cells of
-    * the dense span — zero hours included). Spike: cnt > 2× hod mean;
-    * dip: cnt < 1/2× hod mean — both as exact cross-multiplied integer
-    * comparisons, division-free. The rate_spike screen flags bursts vs a
-    * user's own flat average; this one corrects for the time-of-day shape
-    * first, so a busy-but-normal peak hour stops masquerading as a burst.
-    */
   /** STL-lite additive decomposition of the per-type hourly counts:
     * cnt·10⁶ = trend + seasonal + residual, exactly (the identity holds
     * row for row by construction — spec-pinned). Classical decomposition
@@ -1002,6 +994,14 @@ object TimeSeries {
         (col("detr_micro") - col("seasonal_micro")).as("resid_micro"))
   }
 
+  /** Diurnal-corrected anomaly flags: each (type, hour) cell compared to
+    * its HOUR-OF-DAY baseline (the mean count over all same-hod cells of
+    * the dense span — zero hours included). Spike: cnt > 2× hod mean;
+    * dip: cnt < 1/2× hod mean — both as exact cross-multiplied integer
+    * comparisons, division-free. The rate_spike screen flags bursts vs a
+    * user's own flat average; this one corrects for the time-of-day shape
+    * first, so a busy-but-normal peak hour stops masquerading as a burst.
+    */
   def seasonalHourFlags(ev: DataFrame): DataFrame = {
     val dense = hourlyDenseCounts(ev).localCheckpoint(eager = true)
     val hod = dense

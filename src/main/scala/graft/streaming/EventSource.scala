@@ -8,10 +8,9 @@ import graft.ops.Parse
 
 /** One source surface for the reference's two ingestion modes (SURVEY §7.4
   * risk 6): bounded text files (`TextIO.read`, `UserScore.java:138`) and an
-  * unbounded stream (`PubsubIO`, `LeaderBoard.java:144-145`) — file-stream,
-  * rate-source-driven synthetic injection, or test-supplied frames, all
-  * yielding the same parsed event schema
-  * (`user`, `team`, `score`, `timestamp`, `event_time`).
+  * unbounded stream (`PubsubIO`, `LeaderBoard.java:144-145`) — a tailed
+  * file directory or the seeded synthetic stream — all yielding the same
+  * parsed event schema (`user`, `team`, `score`, `timestamp`, `event_time`).
   */
 object EventSource {
 
@@ -20,23 +19,15 @@ object EventSource {
   final case class BatchFiles(pathOrGlob: String) extends Config
   /** Unbounded: tail newline CSV files appearing under a directory. */
   final case class StreamFiles(dir: String) extends Config
-  /** Unbounded: rate-source clock driving the seeded injector — the Spark
-    * analogue of the reference's Pub/Sub injector loop
-    * (`injector/Injector.java:220-239`), ~`rowsPerSecond` events/s.
+  /** Unbounded: the seeded injector on Spark's `rate-micro-batch` source,
+    * the analogue of the reference's Pub/Sub injector loop
+    * (`injector/Injector.java:220-239`). Micro-batch `k` admits exactly
+    * rows `k * rowsPerBatch until (k + 1) * rowsPerBatch`, and row `i` is
+    * [[graft.generator.Injector.lineAt]], so a stream replays from its
+    * checkpoint and its first `n` rows are `Injector.generate(cfg, n)`.
     */
-  final case class SyntheticStream(rowsPerSecond: Int = 2000, cfg: InjectorConfig = InjectorConfig())
+  final case class SyntheticStream(rowsPerBatch: Long = 2000L, cfg: InjectorConfig = InjectorConfig())
       extends Config
-  /** Unbounded: the native DataSourceV2 connector
-    * ([[graft.sources.GraftEventsSource]], `format("graft-events")`) —
-    * row content is a pure function of (seed, row index), so the stream is
-    * replayable and partition-parallel with exact admission control
-    * (`rowsPerBatch`/`maxRows`), unlike the rate-source pool above.
-    */
-  final case class ConnectorStream(
-      rowsPerBatch: Long = 10000L,
-      maxRows: Long = 0L,
-      seed: Long = 42L
-  ) extends Config
 
   /** Parsed events from any source mode. Malformed lines are dropped and
     * counted per the reference parser's contract (`UserScore.java:68-88`).
@@ -46,27 +37,17 @@ object EventSource {
       Parse.parseGameEvents(spark.read.text(path), observe = true)
     case StreamFiles(dir) =>
       Parse.parseGameEvents(spark.readStream.text(dir))
-    case SyntheticStream(rps, cfg) =>
-      // Rate source ticks (value, timestamp); each tick deterministically
-      // selects a pre-generated injector line. The generated pool is seeded →
-      // reproducible; pool access is a broadcast-sized lookup, no driver loop.
-      val pool = Injector.generate(cfg, math.max(10000, rps * 10)).map(_.line)
-      val poolCol = typedLit(pool)
+    case SyntheticStream(rowsPerBatch, cfg) =>
+      import spark.implicits._
+      val teams = Injector.teams(cfg)
       val lines = spark.readStream
-        .format("rate")
-        .option("rowsPerSecond", rps.toLong)
+        .format("rate-micro-batch")
+        .option("rowsPerBatch", rowsPerBatch)
         .load()
-        .select(element_at(poolCol, (pmod(col("value"), lit(pool.size.toLong)) + 1).cast("int")).as("value"))
+        .select(col("value"))
+        .as[Long]
+        .map(i => Injector.lineAt(cfg, teams, i).line)
+        .toDF("value")
       Parse.parseGameEvents(lines)
-    case ConnectorStream(rowsPerBatch, maxRows, seed) =>
-      Parse.parseGameEvents(
-        spark.readStream
-          .format("graft-events")
-          .option("rowsPerBatch", rowsPerBatch)
-          .option("maxRows", maxRows)
-          .option("seed", seed)
-          .load()
-          .select(col("value"))
-      )
   }
 }

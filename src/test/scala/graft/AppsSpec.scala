@@ -196,4 +196,37 @@ class AppsSpec extends AnyFunSuite {
         .select("total_score").as[Long].head() == 7L
     )
   }
+
+  test("LeaderBoardApp.start over SyntheticStream: user totals fold the admitted rows, event time advances") {
+    import org.apache.spark.sql.functions._
+    val cfg = InjectorConfig(seed = 3)
+    val parsed = graft.streaming.EventSource
+      .readEvents(spark, graft.streaming.EventSource.SyntheticStream(rowsPerBatch = 2000L, cfg = cfg))
+      .select(col("user"), col("team"), col("score"), col("event_time"))
+    val out = tmp()
+    // Each query is stopped within one 20 ms poll of its second batch's
+    // progress, before a batch started after it can reach the sink, so the
+    // sink holds exactly the batches lastProgress reports.
+    val queries = LeaderBoardApp.start(parsed, out)
+    try {
+      val deadline = System.nanoTime() + 120_000_000_000L
+      while (queries.exists(_.isActive) && System.nanoTime() < deadline) {
+        queries.filter(q => q.isActive && Option(q.lastProgress).exists(_.batchId >= 1)).foreach(_.stop())
+        Thread.sleep(20)
+      }
+    } finally queries.foreach(_.stop())
+    val Seq(teamQ, userQ) = queries
+    assert(userQ.lastProgress.batchId >= 1 && teamQ.lastProgress.batchId >= 1)
+    val n = "\"offset\"\\s*:\\s*(\\d+)".r
+      .findFirstMatchIn(userQ.lastProgress.sources.head.endOffset).get.group(1).toInt
+    assert(n == 2000 * (userQ.lastProgress.batchId + 1))
+    val expected = Injector.generate(cfg, n).flatMap(_.event).groupMapReduce(_.user)(_.score.toLong)(_ + _)
+    val last = spark.read.parquet(s"$out/leaderboard_user")
+      .groupBy("user").agg(max_by(col("total_score"), col("processing_time")))
+      .as[(String, Long)].collect().toMap
+    assert(last == expected)
+    val maxEventTime = teamQ.recentProgress.take(2)
+      .map(p => java.time.Instant.parse(p.eventTime.get("max")).toEpochMilli)
+    assert(maxEventTime(1) > maxEventTime(0), maxEventTime.toSeq)
+  }
 }

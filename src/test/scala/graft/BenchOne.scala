@@ -9,9 +9,7 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env
-      .getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = Bench.session(cpus)
+    val spark = Bench.session()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).groupBy().count().collect()
     // comma-separated names run in order inside ONE JVM — the harness for
     // checking shared-leg reuse across a query family

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 object Profile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = Runtime.getRuntime.availableProcessors()
+    val cpus = GraftSession.defaultCores
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -15,9 +15,7 @@ object ProfileOne {
     val names = args(0).split(',')
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env
-      .getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = Bench.session(cpus)
+    val spark = Bench.session()
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

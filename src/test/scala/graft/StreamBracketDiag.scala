@@ -26,8 +26,7 @@ object StreamBracketDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val n = args.drop(1).headOption.map(_.toInt).getOrElse(100000)
-    val cpus = sys.env
-      .getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.defaultCores.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
