@@ -11,8 +11,8 @@ import graft.streaming.StatePartitions.withStatePartitions
 
 /** Streaming throughput proof for the BASELINE gate: the reference's injector
   * sustains ~1,600-2,000 events/s into LeaderBoard (BASELINE.md); this drives
-  * the full LeaderBoard-equivalent fan-out — CSV parse → (a) watermarked
-  * windowed team scores AND (b) global running user scores, both update-mode
+  * the full LeaderBoard-equivalent fan-out — CSV parse → (a) labeled
+  * windowed team panes AND (b) global running user scores, both update-mode
   * — from a MemoryStream and reports end-to-end events/s.
   *
   * Two faces: [[measure]] (callable — Bench embeds the number in its metric
@@ -23,7 +23,7 @@ import graft.streaming.StatePartitions.withStatePartitions
 object StreamBench {
 
   /** End-to-end events/s through the LeaderBoard fan-out on the given
-    * session, both queries at the state partition count
+    * session, both queries at the state partition count and store
     * [[graft.apps.LeaderBoardApp.start]] gives them. Returns
     * (eventsPerSec, distinctTeams, distinctUsers).
     */
@@ -46,7 +46,7 @@ object StreamBench {
     try {
       val (teamQ, userQ) = withStatePartitions(spark) {
         val teamQ = LeaderBoardStream
-          .calculateTeamScores(parsed, teamWindowMinutes = 60, allowedLatenessMinutes = 120)
+          .teamPanes(parsed, teamWindowMinutes = 60, allowedLatenessMinutes = 120)
           .writeStream.format("memory").queryName("sb_team").outputMode("update").start()
         started ::= teamQ
         val userQ = LeaderBoardStream
@@ -109,27 +109,24 @@ object StreamBench {
       (i.toLong, p)
     }
 
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val input = MemoryStream[(Long, Array[Byte])]
     val claims = graft.streaming.StreamingDedup.ahashChunkClaims(
       input.toDF().toDF("media_id", "content"), ttlMinutes = 60, chunks = chunks)
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
     val lost = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = claims.toDF().writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val agg = batch
-          .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
-          .collect()(0)
-        seen.addAndGet(agg.getLong(0))
-        lost.addAndGet(if (agg.isNullAt(1)) 0L else agg.getLong(1))
-        ()
-      }
-      .start()
+    val q = withStatePartitions(spark) {
+      claims.toDF().writeStream
+        .outputMode("update")
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          val agg = batch
+            .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
+            .collect()(0)
+          seen.addAndGet(agg.getLong(0))
+          lost.addAndGet(if (agg.isNullAt(1)) 0L else agg.getLong(1))
+          ()
+        }
+        .start()
+    }
     def awaitClaims(expected: Long): Unit = {
       val deadline = System.nanoTime() + 180_000_000_000L
       while (seen.get() < expected && System.nanoTime() < deadline) Thread.sleep(20)
@@ -149,13 +146,7 @@ object StreamBench {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       ((n - warm) / sec, seen.get(), lost.get())
-    } finally {
-      scala.util.Try(q.stop())
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally scala.util.Try(q.stop())
   }
 
   /** Docs/s through the ingest-time near-dup TEXT claim filter, per
@@ -198,11 +189,6 @@ object StreamBench {
       texts += t
       (i.toLong, t)
     }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val input = MemoryStream[(Long, String)]
     val df = input.toDF().toDF("doc_id", "text")
     val claims = scheme match {
@@ -214,17 +200,19 @@ object StreamBench {
     }
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
     val lost = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = claims.toDF().writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val agg = batch
-          .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
-          .collect()(0)
-        seen.addAndGet(agg.getLong(0))
-        lost.addAndGet(if (agg.isNullAt(1)) 0L else agg.getLong(1))
-        ()
-      }
-      .start()
+    val q = withStatePartitions(spark) {
+      claims.toDF().writeStream
+        .outputMode("update")
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          val agg = batch
+            .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
+            .collect()(0)
+          seen.addAndGet(agg.getLong(0))
+          lost.addAndGet(if (agg.isNullAt(1)) 0L else agg.getLong(1))
+          ()
+        }
+        .start()
+    }
     def awaitClaims(expected: Long): Unit = {
       val deadline = System.nanoTime() + 180_000_000_000L
       while (seen.get() < expected && System.nanoTime() < deadline) Thread.sleep(20)
@@ -244,13 +232,7 @@ object StreamBench {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       ((n - warm) / sec, seen.get(), lost.get())
-    } finally {
-      scala.util.Try(q.stop())
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally scala.util.Try(q.stop())
   }
 
   /** MAP-SIDE band hashing alone, docs/s per scheme — the claims legs
@@ -372,27 +354,24 @@ object StreamBench {
       val p = if (reencode) graft.ops.Multimodal.bmp8(g, 32) else graft.ops.Multimodal.bmp24(g, 32)
       (i.toLong, p)
     }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val input = MemoryStream[(Long, Array[Byte])]
     val claims = graft.streaming.StreamingDedup.dhashChunkClaims(
       input.toDF().toDF("media_id", "content"), ttlMinutes = 60, chunks = chunks)
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
     val lost = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = claims.toDF().writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val agg = batch
-          .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
-          .collect()(0)
-        seen.addAndGet(agg.getLong(0))
-        lost.addAndGet(if (agg.isNullAt(1)) 0L else agg.getLong(1))
-        ()
-      }
-      .start()
+    val q = withStatePartitions(spark) {
+      claims.toDF().writeStream
+        .outputMode("update")
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          val agg = batch
+            .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
+            .collect()(0)
+          seen.addAndGet(agg.getLong(0))
+          lost.addAndGet(if (agg.isNullAt(1)) 0L else agg.getLong(1))
+          ()
+        }
+        .start()
+    }
     def awaitClaims(expected: Long): Unit = {
       val deadline = System.nanoTime() + 180_000_000_000L
       while (seen.get() < expected && System.nanoTime() < deadline) Thread.sleep(20)
@@ -412,13 +391,7 @@ object StreamBench {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       ((n - warm) / sec, seen.get(), lost.get())
-    } finally {
-      scala.util.Try(q.stop())
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally scala.util.Try(q.stop())
   }
 
   def main(args: Array[String]): Unit = {

@@ -97,26 +97,27 @@ object HourlyTeamScoreApp {
 }
 
 /** Streaming leaderboard (`LeaderBoard.java`): one parsed stream fans out to
-  * (a) windowed team scores with pane-timing labels and (b) global running
+  * (a) windowed team panes labeled EARLY/ON_TIME/LATE and (b) global running
   * user totals, both appended to managed tables per micro-batch.
   */
 object LeaderBoardApp {
 
   /** Start both branches from an already-parsed streaming frame; returns the
-    * running queries (caller stops them). Pane timing derives from the
-    * previous/current watermark, tracked across batches.
+    * running queries (caller stops them). The team branch is
+    * [[graft.streaming.LeaderBoardStream.teamPanes]].
     *
     * Each query runs at [[graft.streaming.StatePartitions.Count]] shuffle
-    * and state store partitions; the caller's session keeps its own
-    * `spark.sql.shuffle.partitions`. Every micro-batch loads and commits
-    * one store per partition, so the count follows the state, not the core
-    * count.
+    * and state store partitions on the RocksDB store; the caller's session
+    * keeps its own settings. Every micro-batch loads and commits one store
+    * per partition, so the count follows the state, not the core count.
     *
-    * Restart rule: a checkpoint fixes the count when its query first
-    * starts. On restart from an existing `outputDir`, Spark restores the
-    * count from the checkpoint's offset log, so a checkpoint first started
-    * at another count, such as the session's core count, keeps it;
-    * changing it needs a new checkpoint.
+    * Restart rule: a checkpoint fixes the count and the store when its
+    * query first starts, and a restart from an existing `outputDir` takes
+    * both from the checkpoint's offset log. A user checkpoint written
+    * before the team branch became `teamPanes` resumes as before. A team
+    * checkpoint written then holds a windowed aggregation's state, which
+    * `teamPanes` cannot read: the team query must start in a new
+    * `outputDir`.
     */
   def start(
       parsed: DataFrame,
@@ -128,9 +129,10 @@ object LeaderBoardApp {
     startAtSessionPartitions(parsed, outputDir, teamWindowMinutes, allowedLatenessMinutes, triggerMillis)
   }
 
-  /** [[start]] without fixing the count: both queries take the session's
-    * `spark.sql.shuffle.partitions` when they first start. For the restart
-    * spec and the state partition diag, which set the count around it.
+  /** [[start]] without fixing the count or the store: both queries take the
+    * session's settings when they first start, and the team query needs
+    * RocksDB. For the restart spec and the state partition diag, which set
+    * them around it.
     */
   private[graft] def startAtSessionPartitions(
       parsed: DataFrame,
@@ -139,44 +141,23 @@ object LeaderBoardApp {
       allowedLatenessMinutes: Int,
       triggerMillis: Long
   ): Seq[StreamingQuery] = {
-    val teamScores = LeaderBoardStream.calculateTeamScores(
-      parsed, teamWindowMinutes, allowedLatenessMinutes
+    def appendTo(branch: String, scores: DataFrame): StreamingQuery =
+      scores.writeStream
+        .outputMode("update")
+        .option("checkpointLocation", s"$outputDir/_checkpoints/$branch")
+        .trigger(Trigger.ProcessingTime(triggerMillis))
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          TextSink.appendTable(
+            batch.withColumn("processing_time", current_timestamp()),
+            s"$outputDir/leaderboard_$branch"
+          )
+        }
+        .queryName(s"leaderboard_$branch")
+        .start()
+    Seq(
+      appendTo("team", LeaderBoardStream.teamPanes(parsed, teamWindowMinutes, allowedLatenessMinutes)),
+      appendTo("user", LeaderBoardStream.calculateUserScores(parsed))
     )
-    @volatile var prevWatermarkMs = 0L
-    val teamQ = teamScores.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$outputDir/_checkpoints/team")
-      .trigger(Trigger.ProcessingTime(triggerMillis))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val wmMs = spark.streams.active
-          .filter(_.name == "leaderboard_team") // this query's own watermark, not another's
-          .flatMap(q => Option(q.lastProgress))
-          .flatMap(p => Option(p.eventTime.get("watermark")))
-          .headOption
-          .map(java.time.Instant.parse(_).toEpochMilli)
-          .getOrElse(prevWatermarkMs)
-        val labeled = LeaderBoardStream.withPaneTiming(batch, prevWatermarkMs, wmMs)
-          .withColumn("processing_time", current_timestamp())
-        prevWatermarkMs = math.max(prevWatermarkMs, wmMs)
-        TextSink.appendTable(labeled, s"$outputDir/leaderboard_team")
-      }
-      .queryName("leaderboard_team")
-      .start()
-    val userQ = LeaderBoardStream.calculateUserScores(parsed)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$outputDir/_checkpoints/user")
-      .trigger(Trigger.ProcessingTime(triggerMillis))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TextSink.appendTable(
-          batch.withColumn("processing_time", current_timestamp()),
-          s"$outputDir/leaderboard_user"
-        )
-      }
-      .queryName("leaderboard_user")
-      .start()
-    Seq(teamQ, userQ)
   }
 
   def main(args: Array[String]): Unit = {

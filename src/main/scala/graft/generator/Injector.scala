@@ -20,8 +20,9 @@ import graft.model.GameEvent
   * `Random` (`Injector.java:23`); we seed it so batch and streaming tests
   * share reproducible input. Each row is drawn on its own from `(seed, row
   * index)` ([[Injector.lineAt]]), so the file writer, [[Injector.generate]]
-  * and the synthetic stream (`streaming/EventSource.SyntheticStream`) emit
-  * the same lines, and rows arrive exactly `meanGapMillis` apart.
+  * and the synthetic stream (`streaming/EventSource.SyntheticStream`) draw
+  * the same values per row. Rows arrive exactly `meanGapMillis` apart,
+  * except in the synthetic stream, which spaces them by its rate.
   */
 final case class InjectorConfig(
     seed: Long = 42L,
@@ -84,9 +85,14 @@ object Injector {
     * on its own, in any order and on any executor. `teams` is
     * `teams(cfg)`, built once by the caller.
     */
-  def lineAt(cfg: InjectorConfig, teams: Vector[Team], i: Long): InjectedLine = {
+  def lineAt(cfg: InjectorConfig, teams: Vector[Team], i: Long): InjectedLine =
+    lineAt(cfg, teams, i, cfg.startMillis + i * cfg.meanGapMillis)
+
+  /** Row `i` arriving at `arrival` instead: the synthetic stream spaces its
+    * rows by its own rate. Every other value is as in [[lineAt]].
+    */
+  def lineAt(cfg: InjectorConfig, teams: Vector[Team], i: Long, arrival: Long): InjectedLine = {
     val rnd = new Random(mix(cfg.seed ^ i))
-    val arrival = cfg.startMillis + i * cfg.meanGapMillis
     val team = teams(rnd.nextInt(teams.size))
     // Robot absorbs extra events: reference gives the robot a 2/numMembers
     // slice of its team's traffic (Injector.java:162-173).

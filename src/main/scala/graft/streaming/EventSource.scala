@@ -23,8 +23,13 @@ object EventSource {
     * the analogue of the reference's Pub/Sub injector loop
     * (`injector/Injector.java:220-239`). Micro-batch `k` admits exactly
     * rows `k * rowsPerBatch until (k + 1) * rowsPerBatch`, and row `i` is
-    * [[graft.generator.Injector.lineAt]], so a stream replays from its
-    * checkpoint and its first `n` rows are `Injector.generate(cfg, n)`.
+    * [[graft.generator.Injector.lineAt]] arriving at
+    * `startMillis + i * 1000 / rowsPerBatch`: the stream runs at
+    * `rowsPerBatch` events per second of event time, so at a 1 s trigger
+    * event time keeps pace with the clock, and `cfg.meanGapMillis` does not
+    * apply. A stream replays from its checkpoint, and its first `n` rows
+    * are `Injector.generate(cfg, n)` when `meanGapMillis` is
+    * `1000 / rowsPerBatch`.
     */
   final case class SyntheticStream(rowsPerBatch: Long = 2000L, cfg: InjectorConfig = InjectorConfig())
       extends Config
@@ -46,7 +51,7 @@ object EventSource {
         .load()
         .select(col("value"))
         .as[Long]
-        .map(i => Injector.lineAt(cfg, teams, i).line)
+        .map(i => Injector.lineAt(cfg, teams, i, cfg.startMillis + i * 1000 / rowsPerBatch).line)
         .toDF("value")
       Parse.parseGameEvents(lines)
   }

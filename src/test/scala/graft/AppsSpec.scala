@@ -141,10 +141,7 @@ class AppsSpec extends AnyFunSuite {
   }
 
   test("LeaderBoardApp restart: checkpoint resumes without loss or double-processing") {
-    leaderBoardRestart()
-  }
-
-  test("LeaderBoardApp restart under the RocksDB state store keeps totals and run 1's partitions") {
+    // the team panes need RocksDB, which run 1 starts without `start`'s helper
     withConf(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -168,12 +165,14 @@ class AppsSpec extends AnyFunSuite {
   }
 
   test("withStatePartitions: a session that never set the count is left unset") {
-    val key = "spark.sql.shuffle.partitions"
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.stateStore.providerClass")
     val child = spark.newSession()
-    child.conf.unset(key)
-    val inside = StatePartitions.withStatePartitions(child)(child.conf.get(key))
-    assert(inside == StatePartitions.Count.toString)
-    assert(!child.conf.getAll.contains(key))
+    keys.foreach(child.conf.unset)
+    val inside = StatePartitions.withStatePartitions(child)(keys.map(child.conf.get))
+    assert(inside == Seq(
+      StatePartitions.Count.toString,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+    keys.foreach(k => assert(!child.conf.getAll.contains(k), k))
   }
 
   test("LeaderBoardApp.start: both tables appended, team rows labeled") {
@@ -195,6 +194,81 @@ class AppsSpec extends AnyFunSuite {
       user.orderBy($"processing_time".desc).filter($"user" === "a")
         .select("total_score").as[Long].head() == 7L
     )
+  }
+
+  test("LeaderBoardApp.start: team panes go EARLY, one ON_TIME, then LATE; too-late rows reach only the user totals") {
+    import org.apache.spark.sql.functions._
+    implicit val ctx = spark.sqlContext
+    val H = 3600_000L
+    val M = 60_000L
+    def ev(user: String, team: String, score: Int, at: Long) = GameEvent(user, team, score, at)
+    // Each batch is committed before the next is added, so the watermark a
+    // batch sees is the max event time of the batches before it.
+    val batches = Seq(
+      Seq(ev("a", "Red", 5, H + M), ev("b", "Blue", 3, H + 2 * M), ev("a", "Red", 1, H + 5 * M)),
+      Seq(ev("c", "Red", 2, H + 30 * M)),
+      // the watermark passes 2H: [H, 2H) fires ON_TIME from its timer
+      Seq(ev("a", "Red", 4, 2 * H + M)),
+      // late but within the 120 min: LATE for Red, the first (ON_TIME) pane for Green
+      Seq(ev("c", "Red", 7, H + 40 * M), ev("d", "Green", 2, H + 50 * M)),
+      Seq(ev("d", "Green", 1, H + 55 * M)),
+      // the watermark passes 2H + 120 min, and 3H: [2H, 3H) fires ON_TIME
+      Seq(ev("a", "Red", 1, 4 * H + 30 * M)),
+      // too late for [H, 2H): dropped from the team panes only
+      Seq(ev("a", "Red", 100, H + 10 * M), ev("b", "Blue", 50, H + 20 * M))
+    )
+    val tooLate = batches.last.toSet
+    val input = MemoryStream[GameEvent]
+    val out = tmp()
+    val queries = LeaderBoardApp.start(
+      input.toDF().withColumn("event_time", timestamp_millis($"timestamp")), out, triggerMillis = 100L)
+    try batches.foreach { b =>
+      input.addData(b)
+      queries.foreach(_.processAllAvailable())
+    } finally queries.foreach(_.stop())
+
+    val panes = spark.read.parquet(s"$out/leaderboard_team")
+      .select(unix_millis(col("window_start")), col("team"), col("total_score"), col("timing"), col("processing_time"))
+      .as[(Long, String, Long, String, java.sql.Timestamp)].collect()
+      .groupBy(p => (p._1, p._2))
+      .map { case (k, ps) => k -> ps.sortBy(_._5.getTime).map(p => (p._3, p._4)).toSeq }
+    assert(panes((H, "Red")) ==
+      Seq(6L -> "EARLY", 8L -> "EARLY", 8L -> "ON_TIME", 15L -> "LATE"))
+    assert(panes((H, "Blue")) == Seq(3L -> "EARLY", 3L -> "ON_TIME"))
+    assert(panes((H, "Green")) == Seq(2L -> "ON_TIME", 3L -> "LATE"))
+    assert(panes((2 * H, "Red")) == Seq(4L -> "EARLY", 4L -> "ON_TIME"))
+    assert(panes((4 * H, "Red")) == Seq(1L -> "EARLY"))
+    val closedBy = 4 * H + 30 * M // the final watermark
+    panes.collect { case ((start, _), ps) if start + H <= closedBy => ps.map(_._2).mkString(" ") }
+      .foreach(labels => assert(labels.matches("(EARLY )*ON_TIME( LATE)*"), labels))
+
+    val all = batches.flatten
+    val expectedTeams = all.filterNot(tooLate)
+      .groupMapReduce(e => (e.timestamp - e.timestamp % H, e.team))(_.score.toLong)(_ + _)
+    assert(panes.map { case (k, ps) => k -> ps.last._1 } == expectedTeams)
+    val lastUser = spark.read.parquet(s"$out/leaderboard_user")
+      .groupBy("user").agg(max_by(col("total_score"), col("processing_time")))
+      .as[(String, Long)].collect().toMap
+    assert(lastUser == all.groupMapReduce(_.user)(_.score.toLong)(_ + _))
+    assert(lastUser("a") == 111L && lastUser("b") == 53L)
+  }
+
+  test("LeaderBoardApp.start: leaderboard_team keeps its column names and types") {
+    import org.apache.spark.sql.types._
+    implicit val ctx = spark.sqlContext
+    val input = MemoryStream[GameEvent]
+    val out = tmp()
+    val queries = LeaderBoardApp.start(
+      input.toDF().withColumn("event_time", org.apache.spark.sql.functions.timestamp_millis($"timestamp")),
+      out, triggerMillis = 100L)
+    try {
+      input.addData(Seq(GameEvent("a", "Red", 5, 3600_000L)))
+      queries.foreach(_.processAllAvailable())
+    } finally queries.foreach(_.stop())
+    val got = spark.read.parquet(s"$out/leaderboard_team").schema.fields.map(f => f.name -> f.dataType).toSeq
+    assert(got == Seq(
+      "window_start" -> TimestampType, "window_end" -> TimestampType, "team" -> StringType,
+      "total_score" -> LongType, "timing" -> StringType, "processing_time" -> TimestampType))
   }
 
   test("LeaderBoardApp.start over SyntheticStream: user totals fold the admitted rows, event time advances") {
@@ -225,8 +299,9 @@ class AppsSpec extends AnyFunSuite {
       .groupBy("user").agg(max_by(col("total_score"), col("processing_time")))
       .as[(String, Long)].collect().toMap
     assert(last == expected)
+    // 2,000 rows per 1 s batch: each batch covers exactly 1 s of event time
     val maxEventTime = teamQ.recentProgress.take(2)
       .map(p => java.time.Instant.parse(p.eventTime.get("max")).toEpochMilli)
-    assert(maxEventTime(1) > maxEventTime(0), maxEventTime.toSeq)
+    assert(maxEventTime(1) - maxEventTime(0) == 1000L, maxEventTime.toSeq)
   }
 }

@@ -36,7 +36,8 @@ class EventSourceSpec extends AnyFunSuite {
 
   test("SyntheticStream: three AvailableNow runs on one checkpoint admit 500/500/500 rows, equal to Injector.generate") {
     val cfg = InjectorConfig(seed = 5)
-    val expected = Injector.generate(cfg, 1500)
+    // 500 rows per batch arrive 1000 / 500 = 2 ms apart
+    val expected = Injector.generate(cfg.copy(meanGapMillis = 2L), 1500)
     assert(expected.forall(_.event.isDefined)) // every line parses, so rows in = rows out
     val dir = java.nio.file.Files.createTempDirectory("synthetic").toString
     val admitted = (1 to 3).map { _ =>

@@ -6,10 +6,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.GameEvent
-import graft.streaming.LeaderBoardStream
+import graft.streaming.{LeaderBoardStream, StatePartitions}
 
-/** Streaming semantics (SURVEY §2.4 W2-W6): accumulating updates, late data
-  * within the watermark incorporated, data beyond the watermark dropped.
+/** Streaming semantics (SURVEY §2.4 W2-W5): accumulating updates, late data
+  * within the allowed lateness incorporated, data beyond it dropped. Pane
+  * labels (W6) are checked end to end in `AppsSpec`.
   */
 class LeaderBoardStreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -35,11 +36,13 @@ class LeaderBoardStreamSpec extends AnyFunSuite {
     val events = build(
       input.toDF().withColumn("event_time", timestamp_millis($"timestamp"))
     )
-    val q: StreamingQuery = events.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .start()
+    val q: StreamingQuery = StatePartitions.withStatePartitions(spark) {
+      events.writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .start()
+    }
     try {
       batches.foreach { b =>
         input.addData(b)
@@ -49,7 +52,7 @@ class LeaderBoardStreamSpec extends AnyFunSuite {
   }
 
   test("team scores accumulate across micro-batches (accumulating panes, W4)") {
-    runBatches("team_acc", df => LeaderBoardStream.calculateTeamScores(df, 60, 120))(
+    runBatches("team_acc", df => LeaderBoardStream.teamPanes(df, 60, 120))(
       Seq(GameEvent("a", "Red", 5, H + 60_000), GameEvent("b", "Blue", 3, H + 120_000)),
       Seq(GameEvent("c", "Red", 7, H + 180_000))
     )
@@ -59,10 +62,10 @@ class LeaderBoardStreamSpec extends AnyFunSuite {
   }
 
   test("late data within allowed lateness updates its window (W3)") {
-    runBatches("team_late", df => LeaderBoardStream.calculateTeamScores(df, 60, 120))(
+    runBatches("team_late", df => LeaderBoardStream.teamPanes(df, 60, 120))(
       Seq(GameEvent("a", "Red", 5, H + 60_000)),
-      // watermark after batch1 ≈ (H+60s) - 120min → far before H; this
-      // "late" row (30 min into the past) is well within lateness
+      // the watermark after batch1 is H+60s, past this row's window end H,
+      // but by less than the 120 min allowed lateness
       Seq(GameEvent("b", "Red", 4, H - 1_800_000)),
       Seq(GameEvent("c", "Red", 1, H + 120_000))
     )
@@ -77,15 +80,25 @@ class LeaderBoardStreamSpec extends AnyFunSuite {
 
   test("data beyond the watermark is dropped (W3 late-drop)") {
     val FAR = 100 * H // push watermark far forward
-    runBatches("team_drop", df => LeaderBoardStream.calculateTeamScores(df, 60, 120))(
+    val M = 60_000L
+    runBatches("team_drop", df => LeaderBoardStream.teamPanes(df, 60, 120))(
       Seq(GameEvent("a", "Red", 5, FAR)),
-      // batch2: watermark is now FAR - 2h; this event is 50 hours older —
-      // beyond allowed lateness, must NOT appear
+      // batch2: the watermark is now FAR; this event's window ended 49 hours
+      // before it, beyond allowed lateness, so it must NOT appear
       Seq(GameEvent("zed", "Zombie", 99, 50 * H)),
-      Seq(GameEvent("b", "Red", 1, FAR + 60_000))
+      Seq(GameEvent("b", "Red", 1, FAR + M)),
+      Seq(GameEvent("c", "Red", 2, FAR + 170 * M)),
+      // 10 min into its window, 160 min behind the max event time: a late
+      // filter on its own event time (against the 0 s watermark, or against
+      // max - 120 min) would drop it, but its window ended 110 min before
+      // the max, within the allowed lateness, so Beam's rule keeps it
+      Seq(GameEvent("t", "Teal", 3, FAR + 10 * M))
     )
     val teams = spark.table("team_drop").select("team").as[String].collect().toSet
     assert(!teams.contains("Zombie"))
+    val teal = spark.table("team_drop").filter($"team" === "Teal")
+      .select("total_score", "timing").as[(Long, String)].collect().toSeq
+    assert(teal == Seq(3L -> "ON_TIME"))
   }
 
   test("user scores: running totals never drop old data (global window, W5)") {
@@ -98,22 +111,5 @@ class LeaderBoardStreamSpec extends AnyFunSuite {
     val totals = latestTotals("user_run", "user")
     assert(totals(Seq("a")) == 12L)
     assert(totals(Seq("b")) == 2L)
-  }
-
-  test("pane timing labels: EARLY / ON_TIME / LATE (W6)") {
-    val batch = Seq(
-      (java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), java.sql.Timestamp.valueOf("2024-01-01 11:00:00"), "t", 1L),
-      (java.sql.Timestamp.valueOf("2024-01-01 09:00:00"), java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "t", 2L),
-      (java.sql.Timestamp.valueOf("2024-01-01 08:00:00"), java.sql.Timestamp.valueOf("2024-01-01 09:00:00"), "t", 3L)
-    ).toDF("window_start", "window_end", "team", "total_score")
-    val wmPrev = java.sql.Timestamp.valueOf("2024-01-01 09:30:00").getTime
-    val wmNow = java.sql.Timestamp.valueOf("2024-01-01 10:30:00").getTime
-    val got = LeaderBoardStream
-      .withPaneTiming(batch, wmPrev, wmNow)
-      .select("total_score", "timing")
-      .as[(Long, String)]
-      .collect()
-      .toMap
-    assert(got == Map(1L -> "EARLY", 2L -> "ON_TIME", 3L -> "LATE"))
   }
 }

@@ -50,20 +50,22 @@ class TextSinkSpec extends AnyFunSuite {
 
   test("streamOneFilePerWindow: per-window files from a streaming query, batch-qualified") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.LeaderBoardStream
+    import graft.streaming.{LeaderBoardStream, StatePartitions}
     implicit val ctx = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("stream-windows").toString
     val input = MemoryStream[graft.model.GameEvent]
-    val windowed = LeaderBoardStream.calculateTeamScores(
+    val windowed = LeaderBoardStream.teamPanes(
       input.toDF().withColumn("event_time", timestamp_millis($"timestamp")), 60, 120
     )
-    val q = windowed.writeStream
-      .outputMode("update")
-      .foreachBatch(TextSink.streamOneFilePerWindow(
-        concat(lit("total_score: "), col("total_score"), lit(", team: "), col("team")),
-        out, "stream-scores"
-      ))
-      .start()
+    val q = StatePartitions.withStatePartitions(spark) {
+      windowed.writeStream
+        .outputMode("update")
+        .foreachBatch(TextSink.streamOneFilePerWindow(
+          concat(lit("total_score: "), col("total_score"), lit(", team: "), col("team")),
+          out, "stream-scores"
+        ))
+        .start()
+    }
     try {
       input.addData(Seq(graft.model.GameEvent("a", "Red", 5, 3600_000L)))
       q.processAllAvailable()
