@@ -91,10 +91,15 @@ class AppsSpec extends AnyFunSuite {
 
   /** Run 1 starts the checkpoints at the session's count of 2, as `start`
     * did before it fixed the count; then stop, add a file, and restart
-    * through `start`, which asks for `StatePartitions.Count`: totals carry
-    * over and the count stays run 1's.
+    * through `start`, which asks for `StatePartitions.Count`: user totals
+    * carry over. Both runs are on RocksDB, which the team panes need and
+    * which run 1 starts without `start`'s helper. Returns the output
+    * directory and each run's state partition counts.
     */
-  private def leaderBoardRestart(): Unit = {
+  private def leaderBoardRestart(): (String, Seq[Int], Seq[Int]) = withConf(
+    "spark.sql.streaming.stateStore.providerClass",
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  ) {
     import org.apache.spark.sql.functions._
     assert(StatePartitions.Count != 2)
     val inDir = tmp()
@@ -120,10 +125,10 @@ class AppsSpec extends AnyFunSuite {
     val run1 = withConf("spark.sql.shuffle.partitions", "2") {
       LeaderBoardApp.startAtSessionPartitions(parsed(), out, 60, 120, triggerMillis = 200L)
     }
-    try {
+    val parts1 = try {
       await("alice", 7L)
       run1.foreach(_.processAllAvailable())
-      assert(statePartitionsOf(run1) == Seq(2, 2))
+      statePartitionsOf(run1)
     } finally run1.foreach(_.stop())
     // new data while stopped; restart must process ONLY the new file
     java.nio.file.Files.writeString(
@@ -131,21 +136,31 @@ class AppsSpec extends AnyFunSuite {
       s"alice,Red,10,${3780_000L},x\nbob,Blue,1,${3840_000L},x\n"
     )
     val run2 = LeaderBoardApp.start(parsed(), out, triggerMillis = 200L)
-    try {
+    val parts2 = try {
       await("alice", 17L) // 7 + 10, not 14 + 10 (no reprocessing of a.csv)
       await("bob", 4L)
       run2.foreach(_.processAllAvailable())
-      // the offset log's count wins over the one start asks for
-      assert(statePartitionsOf(run2) == Seq(2, 2))
+      statePartitionsOf(run2)
     } finally run2.foreach(_.stop())
+    (out, parts1, parts2)
   }
 
   test("LeaderBoardApp restart: checkpoint resumes without loss or double-processing") {
-    // the team panes need RocksDB, which run 1 starts without `start`'s helper
-    withConf(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )(leaderBoardRestart())
+    import org.apache.spark.sql.functions._
+    val (out, _, _) = leaderBoardRestart()
+    // every row lands in the [1h, 2h) pane, which the watermark never
+    // closes: each team's latest EARLY pane folds both files exactly once
+    val lastPane = spark.read.parquet(s"$out/leaderboard_team")
+      .groupBy("team").agg(max_by(struct(col("total_score"), col("timing")), col("processing_time")))
+      .as[(String, (Long, String))].collect().toMap
+    assert(lastPane == Map("Red" -> (17L, "EARLY"), "Blue" -> (4L, "EARLY")))
+  }
+
+  test("LeaderBoardApp restart under the RocksDB state store keeps totals and run 1's partitions") {
+    val (_, parts1, parts2) = leaderBoardRestart()
+    assert(parts1 == Seq(2, 2))
+    // the offset log's count wins over the one start asks for
+    assert(parts2 == Seq(2, 2))
   }
 
   test("LeaderBoardApp.start: each query runs at StatePartitions.Count; the caller's session keeps its own") {
