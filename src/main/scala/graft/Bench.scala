@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Per-query time emission, harness `min2-v5`: fixed-width base36
@@ -31,7 +30,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val spark = GraftSession.local()
     // Generic session warmup (untimed): first-touch costs — parquet reader
     // init, codegen/janino compile, shuffle machinery — belong to the JVM,
     // not to whichever query happens to run first.
@@ -142,23 +141,5 @@ object Bench {
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","harness":"min2-v5","cold":${f3(coldTotal)},"cold_failed":$coldFailed,"sf":"$sfBase","n":${ordered.size},"order":"name-sorted","stream_events_per_sec":$streamEps,"stream_eps_runs":[$streamEps1,$streamEps2],"media_payloads_per_sec":$mediaEps,"failed":$failedJson,"qcs24":"$qcs","full":"$fullPath"}"""
     )
     System.out.flush()
-  }
-
-  /** The bench session (also used by the BenchOne / ProfileOne dev
-    * harnesses, so their timings compare with the suite's).
-    */
-  private[graft] def session(cpus: Int = GraftSession.defaultCores): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 }

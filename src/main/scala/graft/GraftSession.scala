@@ -2,7 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with scale-appropriate defaults.
+/** The one session factory: `Bench`, `Verify`, `StreamBench`, the dev
+  * harnesses and the test suite's shared session all come from [[local]].
+  * Each session gets the same engine: [[GraftExtensions]] (graft's SQL
+  * functions and the `RangeJoinRewrite` optimizer rule), the RocksDB state
+  * store, a 64 MB broadcast threshold, AQE with partition coalescing and
+  * skew joins, one shuffle partition per core, UTC and no UI.
   *
   * Local mode is a stand-in for a multi-executor cluster: shuffle
   * partitioning, AQE, and broadcast thresholds are configured the way a

@@ -3761,12 +3761,9 @@ object SparkEntry {
       // (plans/RangeJoinRewrite.scala): per hot event (value ≥ 300.00),
       // how many events fall in its next hour, globally. Without the rule
       // this is a BroadcastNestedLoopJoin (O(events × windows)); the rule
-      // rewrites it to a bucketed equi join. Registered via
-      // experimental.extraOptimizations so it works on any session.
-      if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.RangeJoinRewrite])) {
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ new graft.plans.RangeJoinRewrite
-      }
+      // rewrites it to a bucketed equi join. GraftExtensions installs the
+      // rule on every GraftSession.local session; this bucket width is
+      // what turns it on.
       s.conf.set("spark.graft.rangeJoin.bucketWidth", "3600000")
       val e = eventsTable(s, dir).select(col("event_id"), col("ts_ms"))
       val hot = eventsTable(s, dir)

@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.generator.{Injector, InjectorConfig}
 import graft.ops.Parse
-import graft.streaming.LeaderBoardStream
+import graft.streaming.{LeaderBoardStream, StreamingDedup}
 import graft.streaming.StatePartitions.withStatePartitions
 
 /** Streaming throughput proof for the BASELINE gate: the reference's injector
@@ -81,10 +83,8 @@ object StreamBench {
     * the lose path is live) stream through perceptual-hash chunk claims on
     * RocksDB state. Each non-empty payload emits exactly `chunks` = 8 claim
     * rows per micro-batch (its 8 chunk keys carry distinct packed indexes),
-    * so cumulative claim rows = 8 x payloads is the absorption signal —
-    * `processAllAvailable` starves under processing-time TTL (continual
-    * timer wakeups), so absorption is polled via a foreachBatch counter
-    * exactly as StreamingDedupSpec drives this face.
+    * so cumulative claim rows = 8 x payloads is the absorption signal
+    * ([[measureClaims]]).
     *
     * Returns (payloadsPerSec, totalClaims, lostClaims).
     */
@@ -96,7 +96,6 @@ object StreamBench {
       chunks: Int = 8
   ): (Double, Long, Long) = {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val rnd = new scala.util.Random(1013L)
     // ~25% exact duplicates of a random earlier payload: dup claims LOSE
     // their buckets, exercising the protocol's hot path, not just inserts.
@@ -108,45 +107,9 @@ object StreamBench {
       payloads += p
       (i.toLong, p)
     }
-
-    val input = MemoryStream[(Long, Array[Byte])]
-    val claims = graft.streaming.StreamingDedup.ahashChunkClaims(
-      input.toDF().toDF("media_id", "content"), ttlMinutes = 60, chunks = chunks)
-    val seen = new java.util.concurrent.atomic.AtomicLong(0L)
-    val lost = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = withStatePartitions(spark) {
-      claims.toDF().writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val agg = batch
-            .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
-            .collect()(0)
-          seen.addAndGet(agg.getLong(0))
-          lost.addAndGet(if (agg.isNullAt(1)) 0L else agg.getLong(1))
-          ()
-        }
-        .start()
+    measureClaims(spark, events, chunks, batches, "media") { df =>
+      StreamingDedup.ahashChunkClaims(df.toDF("media_id", "content"), ttlMinutes = 60, chunks = chunks)
     }
-    def awaitClaims(expected: Long): Unit = {
-      val deadline = System.nanoTime() + 180_000_000_000L
-      while (seen.get() < expected && System.nanoTime() < deadline) Thread.sleep(20)
-      require(seen.get() >= expected, s"media claims stalled: ${seen.get()} < $expected")
-    }
-    try {
-      val warm = math.min(100, n / 10)
-      input.addData(events.take(warm))
-      awaitClaims(chunks.toLong * warm)
-      val t0 = System.nanoTime()
-      val per = math.max(1, (n - warm) / batches)
-      var added = warm.toLong
-      events.drop(warm).grouped(per).foreach { b =>
-        input.addData(b)
-        added += b.size
-        awaitClaims(chunks.toLong * added)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      ((n - warm) / sec, seen.get(), lost.get())
-    } finally scala.util.Try(q.stop())
   }
 
   /** Docs/s through the ingest-time near-dup TEXT claim filter, per
@@ -155,8 +118,9 @@ object StreamBench {
     * [[graft.streaming.StreamingDedup.ophBandClaims]], one hash per
     * shingle + densification): synthetic ~`docBytes`-char documents from
     * a seeded vocabulary, ~25% near-dup copies of an earlier doc with one
-    * token swapped — the lose path exercised like the media legs. Claim
-    * cardinality is `bands` per doc, so the await targets are exact.
+    * token swapped — the lose path exercised like the media legs. Each doc
+    * emits exactly 16 band claims, so the await targets are exact
+    * ([[measureClaims]]). An unknown scheme fails before any query starts.
     * Returns (docsPerSec, claims, lostClaims).
     */
   def measureTextClaims(
@@ -167,8 +131,11 @@ object StreamBench {
       docBytes: Int = 2048
   ): (Double, Long, Long) = {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val bands = 16
+    val claimsOf: DataFrame => Dataset[StreamingDedup.BandClaim] = scheme match {
+      case "kwise" => StreamingDedup.bandClaims(_, "doc_id", "text", ttlMinutes = 60)
+      case "oph" => StreamingDedup.ophBandClaims(_, "doc_id", "text", ttlMinutes = 60)
+      case other => throw new IllegalArgumentException(s"unknown scheme $other")
+    }
     val rnd = new scala.util.Random(499L)
     val vocab = Array.tabulate(500)(i => s"tok$i")
     val texts = new scala.collection.mutable.ArrayBuffer[String](n)
@@ -189,50 +156,9 @@ object StreamBench {
       texts += t
       (i.toLong, t)
     }
-    val input = MemoryStream[(Long, String)]
-    val df = input.toDF().toDF("doc_id", "text")
-    val claims = scheme match {
-      case "kwise" =>
-        graft.streaming.StreamingDedup.bandClaims(df, "doc_id", "text", ttlMinutes = 60)
-      case "oph" =>
-        graft.streaming.StreamingDedup.ophBandClaims(df, "doc_id", "text", ttlMinutes = 60)
-      case other => throw new IllegalArgumentException(s"unknown scheme $other")
+    measureClaims(spark, docs, claimsPerRow = 16, batches, "text") { df =>
+      claimsOf(df.toDF("doc_id", "text"))
     }
-    val seen = new java.util.concurrent.atomic.AtomicLong(0L)
-    val lost = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = withStatePartitions(spark) {
-      claims.toDF().writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val agg = batch
-            .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
-            .collect()(0)
-          seen.addAndGet(agg.getLong(0))
-          lost.addAndGet(if (agg.isNullAt(1)) 0L else agg.getLong(1))
-          ()
-        }
-        .start()
-    }
-    def awaitClaims(expected: Long): Unit = {
-      val deadline = System.nanoTime() + 180_000_000_000L
-      while (seen.get() < expected && System.nanoTime() < deadline) Thread.sleep(20)
-      require(seen.get() >= expected, s"text claims stalled: ${seen.get()} < $expected")
-    }
-    try {
-      val warm = math.min(100, n / 10)
-      input.addData(docs.take(warm))
-      awaitClaims(bands.toLong * warm)
-      val t0 = System.nanoTime()
-      val per = math.max(1, (n - warm) / batches)
-      var added = warm.toLong
-      docs.drop(warm).grouped(per).foreach { b =>
-        input.addData(b)
-        added += b.size
-        awaitClaims(bands.toLong * added)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      ((n - warm) / sec, seen.get(), lost.get())
-    } finally scala.util.Try(q.stop())
   }
 
   /** MAP-SIDE band hashing alone, docs/s per scheme — the claims legs
@@ -334,8 +260,8 @@ object StreamBench {
     * seeded random 32×32 grids), ~1 in 4 a BMP8 RE-ENCODE of an earlier
     * grid — the same-pixels/different-bytes dup the byte face cannot
     * see, so the lose path exercises exactly the case this face exists
-    * for. Same absorption-polling skeleton as [[measureMediaClaims]]
-    * (every decodable payload emits exactly `chunks` claim rows).
+    * for. Same absorption-polling skeleton, [[measureClaims]] (every
+    * decodable payload emits exactly `chunks` claim rows).
     */
   def measureMediaClaimsPixel(
       spark: SparkSession,
@@ -344,7 +270,6 @@ object StreamBench {
       chunks: Int = 4
   ): (Double, Long, Long) = {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val rnd = new scala.util.Random(2027L)
     val grids = new scala.collection.mutable.ArrayBuffer[Array[Int]](n)
     val events = (0 until n).map { i =>
@@ -354,15 +279,37 @@ object StreamBench {
       val p = if (reencode) graft.ops.Multimodal.bmp8(g, 32) else graft.ops.Multimodal.bmp24(g, 32)
       (i.toLong, p)
     }
-    val input = MemoryStream[(Long, Array[Byte])]
-    val claims = graft.streaming.StreamingDedup.dhashChunkClaims(
-      input.toDF().toDF("media_id", "content"), ttlMinutes = 60, chunks = chunks)
-    val seen = new java.util.concurrent.atomic.AtomicLong(0L)
-    val lost = new java.util.concurrent.atomic.AtomicLong(0L)
+    measureClaims(spark, events, chunks, batches, "pixel media") { df =>
+      StreamingDedup.dhashChunkClaims(df.toDF("media_id", "content"), ttlMinutes = 60, chunks = chunks)
+    }
+  }
+
+  /** The claim legs' skeleton: runs `claimsOf` over a `MemoryStream` of
+    * `rows` at one state partition on RocksDB, and a `foreachBatch` counts
+    * its claim and lost rows. Every row emits exactly `claimsPerRow`
+    * claims, so the cumulative count is the absorption signal:
+    * `processAllAvailable` starves under the claims' processing-time TTL
+    * (continual timer wakeups), so each batch is polled until its claims
+    * arrive, failing with "`what` claims stalled" after 180 s. One warm-up
+    * batch of up to 100 rows, then `batches` timed ones. Returns
+    * (rowsPerSec, claims, lostClaims).
+    */
+  private def measureClaims[T: Encoder](
+      spark: SparkSession,
+      rows: Seq[T],
+      claimsPerRow: Int,
+      batches: Int,
+      what: String
+  )(claimsOf: DataFrame => Dataset[StreamingDedup.BandClaim]): (Double, Long, Long) = {
+    implicit val ctx: SQLContext = spark.sqlContext
+    val input = MemoryStream[T]
+    val claims = claimsOf(input.toDF())
+    val seen = new AtomicLong(0L)
+    val lost = new AtomicLong(0L)
     val q = withStatePartitions(spark) {
       claims.toDF().writeStream
         .outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (batch: DataFrame, _: Long) =>
           val agg = batch
             .agg(count(lit(1)), sum(when(col("lost"), 1L).otherwise(0L)))
             .collect()(0)
@@ -372,22 +319,24 @@ object StreamBench {
         }
         .start()
     }
-    def awaitClaims(expected: Long): Unit = {
+    def awaitClaims(rowsAdded: Long): Unit = {
+      val expected = claimsPerRow.toLong * rowsAdded
       val deadline = System.nanoTime() + 180_000_000_000L
       while (seen.get() < expected && System.nanoTime() < deadline) Thread.sleep(20)
-      require(seen.get() >= expected, s"pixel media claims stalled: ${seen.get()} < $expected")
+      require(seen.get() >= expected, s"$what claims stalled: ${seen.get()} < $expected")
     }
     try {
+      val n = rows.size
       val warm = math.min(100, n / 10)
-      input.addData(events.take(warm))
-      awaitClaims(chunks.toLong * warm)
+      input.addData(rows.take(warm))
+      awaitClaims(warm)
       val t0 = System.nanoTime()
       val per = math.max(1, (n - warm) / batches)
       var added = warm.toLong
-      events.drop(warm).grouped(per).foreach { b =>
+      rows.drop(warm).grouped(per).foreach { b =>
         input.addData(b)
         added += b.size
-        awaitClaims(chunks.toLong * added)
+        awaitClaims(added)
       }
       val sec = (System.nanoTime() - t0) / 1e9
       ((n - warm) / sec, seen.get(), lost.get())

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,14 +10,7 @@ object Verify {
       case Array(s, o)       => (s, o, None)
       case Array(s, o, subs) => (s, o, Some(subs.split(',').toSet))
     }
-    val cpus = GraftSession.defaultCores.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Dump queries CONCURRENTLY (default 6 in flight): at sf0.01 most
     // queries are job-scheduling-bound, not CPU-bound, so a serial dump

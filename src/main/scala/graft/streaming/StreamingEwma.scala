@@ -57,25 +57,8 @@ object StreamingEwma {
         timerValues: TimerValues
     ): Iterator[TypeEwma] = {
       val st = if (state.exists()) state.get() else EwmaState(Long.MinValue, Seq.fill(W)(0L))
-      var maxHour = st.maxHour
       val counts = st.counts.toArray
-      rows.foreach { case (_, h) =>
-        if (maxHour == Long.MinValue) {
-          maxHour = h
-          counts(0) = 1L
-        } else if (h > maxHour) {
-          val shift = math.min(h - maxHour, W.toLong).toInt
-          var i = W - 1
-          while (i >= 0) { // slide the window forward: old index i → i + shift
-            counts(i) = if (i >= shift) counts(i - shift) else 0L
-            i -= 1
-          }
-          maxHour = h
-          counts(0) += 1L
-        } else if (maxHour - h < W) {
-          counts((maxHour - h).toInt) += 1L // in-window late event
-        } // else: beyond the truncation horizon — dropped
-      }
+      val maxHour = TrailingHourCounts.add(st.maxHour, counts, rows.map(_._2))
       state.update(EwmaState(maxHour, counts.toSeq))
       var ewma = 0L
       var k = 0

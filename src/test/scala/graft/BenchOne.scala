@@ -1,7 +1,9 @@
 package graft
 
 /** Time a single registered query: `runMain graft.BenchOne <name> [sfDir] [reps]`.
-  * Session from [[Bench.session]]; prints one line per rep plus the min —
+  * Session from [[GraftSession.local]], the one factory `Bench` uses too
+  * (graft's extensions, RocksDB state, the bench's cores and AQE settings),
+  * so its timings compare with the suite's; prints one line per rep plus the min —
   * the tight loop for optimizing one query without paying the full suite.
   */
 object BenchOne {
@@ -9,7 +11,7 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = Bench.session()
+    val spark = GraftSession.local()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).groupBy().count().collect()
     // comma-separated names run in order inside ONE JVM — the harness for
     // checking shared-leg reuse across a query family

@@ -91,11 +91,6 @@ class CdcSpec extends AnyFunSuite {
 
   test("streaming chunkClaims: repeat content loses its chunks, novel docs survive") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val a = doc(10, 400)
     val b = doc(11, 400)
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
@@ -123,13 +118,7 @@ class CdcSpec extends AnyFunSuite {
       awaitBatches(1)
       input.addData(Seq((2L, a), (3L, b))) // doc 2 repeats doc 1's content
       awaitBatches(2)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
     val all = batches.synchronized(batches.toList)
     assert(all.nonEmpty)
     val later = all.last
@@ -137,25 +126,13 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("cdc_chunks registered as a SQL function") {
-    val shared = TestSpark.spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("graft-cdc-sql")
-      .withExtensions(new GraftExtensions())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val text = doc(12, 200)
+    Seq(text).toDF("text").createOrReplaceTempView("cdc_docs")
     try {
-      import s2.implicits._
-      val text = doc(12, 200)
-      Seq(text).toDF("text").createOrReplaceTempView("cdc_docs")
-      val viaSql = s2.sql("SELECT cdc_chunks(text) AS c FROM cdc_docs").as[Seq[Long]].head()
+      val viaSql = spark.sql("SELECT cdc_chunks(text) AS c FROM cdc_docs").as[Seq[Long]].head()
       val viaCol = Seq(text).toDF("text").select(Dedup.cdcChunks($"text")).as[Seq[Long]].head()
       assert(viaSql == viaCol)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
-      org.apache.spark.sql.SparkSession.setActiveSession(shared)
-    }
+    } finally spark.catalog.dropTempView("cdc_docs")
   }
 
   test("cdcShareStats: duplicated docs share all chunks, unique docs none") {

@@ -1,30 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Dedup
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
+  // The shared session, built by GraftSession.local: its
+  // spark.sql.extensions conf installs GraftExtensions, so these SQL
+  // functions resolve through the production wiring.
+  lazy val spark = TestSpark.spark
+
   test("minhash_sig registered as a SQL function via SparkSessionExtensions") {
-    // Extensions apply only at session build time; clear the shared session
-    // so getOrCreate builds a NEW SparkSession (same SparkContext) with the
-    // extension, and restore the shared one after.
-    val shared = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // withExtensions (not the spark.sql.extensions config): the extensions
-    // static conf is read from the SparkContext, which the shared test
-    // context was built without.
-    val spark = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     try {
       import spark.implicits._
       Seq((1L, "the quick brown fox jumps over the lazy dog tonight"))
@@ -99,11 +86,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .head()
       assert(mcNull.isNullAt(0))
     } finally {
-      // don't stop the shared SparkContext: other suites reuse it — restore
-      // the shared session as active/default
       spark.catalog.dropTempView("ext_docs")
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
+      spark.catalog.dropTempView("ext_vecs")
     }
   }
 }

@@ -3,7 +3,9 @@ import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Per-query cost breakdown: `runMain graft.ProfileOne <name>[,name...] [sfDir] [reps]`.
-  * Session from [[Bench.session]]. For each rep prints: DataFrame build
+  * Session from [[GraftSession.local]], the one factory `Bench` uses too
+  * (graft's extensions, RocksDB state, the bench's cores and AQE
+  * settings). For each rep prints: DataFrame build
   * wall (Catalyst construction + any eager localCheckpoint jobs that fire
   * inside the registration), count() wall, and the listener totals (jobs,
   * stages, tasks, summed task time) attributable to the rep — the numbers
@@ -15,7 +17,7 @@ object ProfileOne {
     val names = args(0).split(',')
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = Bench.session()
+    val spark = GraftSession.local()
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

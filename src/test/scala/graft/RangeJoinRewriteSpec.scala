@@ -5,28 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class RangeJoinRewriteSpec extends AnyFunSuite {
 
-  private def withExtSession(f: SparkSession => Unit): Unit = {
-    val shared = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("graft-rangejoin-rewrite-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  /** Runs `f` on the shared session, whose GraftExtensions install the
+    * rule, with the rule's bucket width unset before and after: each case
+    * sets its own width, and another suite may have left one set.
+    */
+  private def withWidthUnset(f: SparkSession => Unit): Unit = {
+    val spark = TestSpark.spark
+    spark.conf.unset("spark.graft.rangeJoin.bucketWidth")
     try f(spark)
-    finally {
-      spark.conf.unset("spark.graft.rangeJoin.bucketWidth")
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
+    finally spark.conf.unset("spark.graft.rangeJoin.bucketWidth")
   }
 
   test("pure range join rewrites to an equi join on buckets — no nested loop") {
-    withExtSession { spark =>
+    withWidthUnset { spark =>
       import spark.implicits._
       val rnd = new scala.util.Random(31)
       val points = Seq.tabulate(300)(i => (i, rnd.nextInt(1000).toLong)).toDF("pid", "t")
@@ -56,7 +47,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
   }
 
   test("reversed operand order and swapped sides still match") {
-    withExtSession { spark =>
+    withWidthUnset { spark =>
       import spark.implicits._
       spark.conf.set("spark.graft.rangeJoin.bucketWidth", "16")
       val points = Seq((1, 10L), (2, 35L), (3, 99L)).toDF("pid", "t")
@@ -71,7 +62,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
   }
 
   test("joins with an equi conjunct are left alone") {
-    withExtSession { spark =>
+    withWidthUnset { spark =>
       import spark.implicits._
       spark.conf.set("spark.graft.rangeJoin.bucketWidth", "16")
       val points = Seq((1, "a", 10L), (2, "b", 35L)).toDF("pid", "k", "t")
@@ -85,7 +76,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
   }
 
   test("rule off (width unset) leaves the plan untouched") {
-    withExtSession { spark =>
+    withWidthUnset { spark =>
       import spark.implicits._
       val points = Seq((1, 10L)).toDF("pid", "t")
       val intervals = Seq((100, 0L, 20L)).toDF("iid", "s", "e")

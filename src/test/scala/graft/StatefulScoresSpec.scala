@@ -49,11 +49,6 @@ class StatefulScoresSpec extends AnyFunSuite {
 
   test("userTotalsTws: transformWithState accumulates across micro-batches (RocksDB store)") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val input = MemoryStream[(String, Int)]
     val q = StatefulScores
       .userTotalsTws(input.toDS(), ttlMinutes = 60)
@@ -76,12 +71,6 @@ class StatefulScoresSpec extends AnyFunSuite {
       assert(latest("a").getAs[Long]("events") == 3L)
       assert(latest("b").getAs[Long]("total_score") == 3L)
       assert(latest("c").getAs[Long]("total_score") == 1L)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 }

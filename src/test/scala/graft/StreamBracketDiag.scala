@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic for the in-bench streaming bracket collapse (VERDICT r14 #5):
   * both r13 and r14 read the SECOND `StreamBench.measure` at ~⅓ of the
   * first ([7,684, 3,251], [11,040, 4,063]) — same code, same process,
@@ -26,15 +24,7 @@ object StreamBracketDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val n = args.drop(1).headOption.map(_.toInt).getOrElse(100000)
-    val cpus = GraftSession.defaultCores.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).groupBy().count().collect()
 
     def reading(tag: String): Long = {

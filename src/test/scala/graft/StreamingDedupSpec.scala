@@ -34,11 +34,6 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("bandClaims near-dup filter: later near-dups lose buckets, uniques survive, ties to min id") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val textA = "the quick brown fox jumps over the lazy dog near the river bank today"
     val textB = "completely different content about distributed stream processing engines and state"
     val input = MemoryStream[(Long, String)]
@@ -71,13 +66,7 @@ class StreamingDedupSpec extends AnyFunSuite {
         (8L, "yet another unrelated document body mentioning graphs and joins entirely")
       ))
       awaitBatches(2)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
     val all = batches.toList
     assert(all.nonEmpty)
     // batch 1: doc 1 wins the tie with doc 5; doc 2 unique
@@ -88,11 +77,6 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("ophBandClaims: same claim protocol, one-hash-per-shingle signatures — dups lose, uniques survive") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val textA = "the quick brown fox jumps over the lazy dog near the river bank today"
     val textB = "completely different content about distributed stream processing engines and state"
     val input = MemoryStream[(Long, String)]
@@ -125,13 +109,7 @@ class StreamingDedupSpec extends AnyFunSuite {
         (8L, "yet another unrelated document body mentioning graphs and joins entirely")
       ))
       awaitBatches(2)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
     val all = batches.toList
     assert(all.nonEmpty)
     assert(all.head == Set(1L, 2L)) // exact dup: identical bands, min id wins
@@ -169,29 +147,19 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("dedup state works on the RocksDB provider (production state store)") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
+    assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") ==
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val input = MemoryStream[(String, Int)]
+    val deduped = StreamingDedup.exactForever(input.toDF().toDF("k", "v"), Seq("k"))
+    val q = deduped.writeStream.format("memory").queryName("sd_rocks").outputMode("append").start()
     try {
-      val input = MemoryStream[(String, Int)]
-      val deduped = StreamingDedup.exactForever(input.toDF().toDF("k", "v"), Seq("k"))
-      val q = deduped.writeStream.format("memory").queryName("sd_rocks").outputMode("append").start()
-      try {
-        input.addData(Seq("a" -> 1, "a" -> 2, "b" -> 3))
-        q.processAllAvailable()
-        input.addData(Seq("b" -> 9, "c" -> 4))
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("sd_rocks").as[(String, Int)].collect().toMap
-      assert(rows == Map("a" -> 1, "b" -> 3, "c" -> 4))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+      input.addData(Seq("a" -> 1, "a" -> 2, "b" -> 3))
+      q.processAllAvailable()
+      input.addData(Seq("b" -> 9, "c" -> 4))
+      q.processAllAvailable()
+    } finally q.stop()
+    val rows = spark.table("sd_rocks").as[(String, Int)].collect().toMap
+    assert(rows == Map("a" -> 1, "b" -> 3, "c" -> 4))
   }
 
   test("exactForever keeps first occurrence only, across batches") {
@@ -211,11 +179,6 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("ahashChunkClaims: duplicate payloads lose every chunk, distinct payloads survive") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val rnd = new scala.util.Random(23)
     val payloadA = Array.tabulate[Byte](2048)(_ => rnd.nextInt(256).toByte)
     val payloadB = Array.tabulate[Byte](2048)(_ => rnd.nextInt(256).toByte)
@@ -245,13 +208,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       // batch 2: exact re-ingest of A loses everything; fresh C survives
       input.addData(Seq((9L, payloadA), (8L, payloadC)))
       awaitBatches(2)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
     val all = batches.toList
     assert(all.nonEmpty)
     assert(all.head == Set(1L, 2L), s"batch 1 survivors: ${all.head}")
@@ -260,11 +217,6 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("dhashChunkClaims: a re-encoded pixel twin is caught; the byte face provably misses it") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val rnd = new scala.util.Random(47)
     def px() = Array.fill(32 * 32)(rnd.nextInt(256))
     val pxA = px(); val pxB = px(); val pxC = px()
@@ -307,22 +259,15 @@ class StreamingDedupSpec extends AnyFunSuite {
       batches.toList
     }
 
-    try {
-      val pixel = run(df => StreamingDedup.dhashChunkClaims(df, ttlMinutes = 60))
-      assert(pixel.head == Set(1L, 2L), s"pixel batch 1: ${pixel.head}")
-      // 9 (the re-encode) LOSES; undecodable 7 emits no claims at all
-      assert(pixel.last == Set(8L), s"pixel batch 2: ${pixel.last}")
-      // the byte-domain face scans the same stream and MISSES the
-      // re-encode: 9 survives — exactly the contradiction the pixel
-      // face closes (the batch perturbation matrix's measured verdict)
-      val bytes = run(df => StreamingDedup.ahashChunkClaims(df, ttlMinutes = 60, chunks = 4))
-      assert(bytes.last.contains(9L), s"byte batch 2: ${bytes.last}")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    val pixel = run(df => StreamingDedup.dhashChunkClaims(df, ttlMinutes = 60))
+    assert(pixel.head == Set(1L, 2L), s"pixel batch 1: ${pixel.head}")
+    // 9 (the re-encode) LOSES; undecodable 7 emits no claims at all
+    assert(pixel.last == Set(8L), s"pixel batch 2: ${pixel.last}")
+    // the byte-domain face scans the same stream and MISSES the
+    // re-encode: 9 survives — exactly the contradiction the pixel
+    // face closes (the batch perturbation matrix's measured verdict)
+    val bytes = run(df => StreamingDedup.ahashChunkClaims(df, ttlMinutes = 60, chunks = 4))
+    assert(bytes.last.contains(9L), s"byte batch 2: ${bytes.last}")
   }
 
   test("StreamBench.measureMediaClaims: absorbs every payload, counts lost claims") {
@@ -345,6 +290,33 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(eps > 0.0)
     assert(claims == 4L * 400, s"claims=$claims")
     assert(lost > 0L, "re-encoded twins must lose buckets")
+  }
+
+  test("StreamBench.measureTextClaims: both schemes absorb every doc, near-dups lose") {
+    // 400 docs (~25% one-token edits of earlier docs): every doc emits
+    // exactly 16 band claims, and the edited copies must lose some bands
+    for (scheme <- Seq("kwise", "oph")) {
+      val (dps, claims, lost) = StreamBench.measureTextClaims(
+        spark, n = 400, scheme = scheme, batches = 4, docBytes = 512)
+      assert(dps > 0.0, scheme)
+      assert(claims == 16L * 400, s"$scheme claims=$claims")
+      assert(lost > 0L, s"$scheme: seeded near-dups must lose bands")
+    }
+    // onQueryStarted runs synchronously inside start(), so a count of 0
+    // means no query started, not merely none left running
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val e =
+      try intercept[IllegalArgumentException](StreamBench.measureTextClaims(spark, n = 400, scheme = "simhash"))
+      finally spark.streams.removeListener(listener)
+    assert(e.getMessage == "unknown scheme simhash")
+    assert(started.get == 0, "a query started for an unknown scheme")
   }
 
   test("StreamBench.measureBlocklist: exact keep/drop census at throughput") {

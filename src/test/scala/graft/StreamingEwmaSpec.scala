@@ -24,10 +24,6 @@ class StreamingEwmaSpec extends AnyFunSuite {
 
   test("streaming EWMA emissions bit-equal the batch operator over every prefix") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def ts(h: Long, i: Int): Long = h * 3600000L + i
     // batch 1: hours 0..3 with distinct counts; batch 2 advances to hour 5
     // AND retro-fills hour 4 late-but-in-window events
@@ -64,21 +60,11 @@ class StreamingEwmaSpec extends AnyFunSuite {
       val replay2 = batchReplay(b1 ++ b2)
       val a2 = latest("a")
       assert(a2.hour == 5L && (a2.cnt, a2.ewma_x65536) == replay2(("a", 5L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("events beyond the 16-hour truncation horizon are dropped, matching batch truncation") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(String, Long)]
     val latest = scala.collection.concurrent.TrieMap.empty[String, StreamingEwma.TypeEwma]
     val q = StreamingEwma
@@ -103,12 +89,6 @@ class StreamingEwmaSpec extends AnyFunSuite {
       // batch agrees: hour-0 mass contributes nothing to the hour-20 cell
       val replay = batchReplay(Seq(("a", 20L * 3600000L), ("a", 0L)))
       assert(replay(("a", 20L)) == (1L, latest("a").ewma_x65536))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 }

@@ -12,11 +12,6 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
   test("bounded-state sketch finds stream heavy hitters across batches") {
     implicit val ctx = spark.sqlContext
     // transformWithState needs column families → RocksDB provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     val rnd = new scala.util.Random(23)
     def batch(n: Int): Seq[String] = Seq.fill(n) {
       val r = rnd.nextInt(100)
@@ -42,13 +37,7 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
       q.processAllAvailable()
       input.addData(batch(4000))
       q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
     // Both true heavy hitters (25% / 15% of 12k items, vs shard threshold
     // shardTotal/17) must be in the final candidate set.
     assert(lastCandidates.contains("hot1"), s"hot1 missing from $lastCandidates")

@@ -25,10 +25,6 @@ class StreamingHoltSpec extends AnyFunSuite {
 
   test("streaming Holt emissions bit-equal the batch operator over every prefix") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def ts(h: Long, i: Int): Long = h * 3600000L + i
     // batch 1: a ramp on hours 0..3; batch 2 advances to hour 5 AND
     // retro-fills hour 4 with late-but-in-window events
@@ -70,12 +66,6 @@ class StreamingHoltSpec extends AnyFunSuite {
       val a2 = latest("a")
       assert(a2.hour == 5L &&
         (a2.cnt, a2.level_x2p24, a2.trend_x2p24, a2.forecast1_x2p24) == replay2(("a", 5L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 }

@@ -33,10 +33,6 @@ class StreamingQuantilesSpec extends AnyFunSuite {
 
   test("streaming KMV quantiles equal the batch replay after every prefix; state stays bounded") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val rnd = new scala.util.Random(37)
     val all = (1L to 3000L).map { i =>
       (if (i % 2 == 0) "api" else "batch", i, rnd.nextInt(10000).toLong)
@@ -65,12 +61,6 @@ class StreamingQuantilesSpec extends AnyFunSuite {
       assert(latest.toMap == afterB2, "full-stream mismatch")
       // bounded: the sample never exceeds k even though n keeps growing
       assert(latest.values.forall(kq => kq.m <= 64 && kq.n > 64))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 }
