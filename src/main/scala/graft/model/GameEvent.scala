@@ -40,9 +40,6 @@ object GameEvent {
     */
   val OutputZone: ZoneId = ZoneId.of("America/Los_Angeles")
 
-  val MinuteFormat: DateTimeFormatter =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd-HH-mm").withZone(OutputZone)
-
   val TimestampFormat: DateTimeFormatter =
     DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(OutputZone)
 

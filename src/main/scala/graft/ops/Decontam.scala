@@ -151,7 +151,7 @@ object Decontam {
     *
     * Estimate: from Ĵ = m/64 and exact sizes, |D∩E| ≈ Ĵ(n_d+n_e)/(1+Ĵ),
     * so eval-side containment ≈ m·(n_d+n_e) / ((64+m)·n_e) — evaluated
-    * as an exact round-half-up rational (the [[Dedup.containmentMinhashEst]]
+    * as an exact round-half-up rational (the [[Dedup.containmentMinhashEstFrom]]
     * formula, oriented eval-side). Docs too short to shingle score 0
     * (clean), mirroring the exact gate. One row per DISTINCT doc id:
     * (id, max_est_bps, n_pairs, n_verified_pairs, contaminated).

@@ -787,11 +787,8 @@ object Dedup {
     * same "effectively injective" footing the md5-anchored oracles stand
     * on. [[PassageQuantSpec]] pins hash-keyed [[passageShareStats]] output
     * equal to a string-keyed evaluation of the same stats.
-    */
-  def passageHashes(text: Column, n: Int): Column =
-    passageHashesFromTokens(split(lower(text), "\\s+"), n)
-
-  /** [[passageHashes]] over a PRE-SPLIT token array column. Feed an
+    *
+    * Hashes a PRE-SPLIT token array column. Feed an
     * attribute (tokens projected in their own select), not the split
     * expression inline: the hash lambda reads the token array once per
     * slot, and subexpression elimination does NOT reach across a lambda
@@ -822,7 +819,7 @@ object Dedup {
     *   1. map-only per-doc `n_passages` (array size — no shuffle);
     *   2. explode → hash-aggregate per passage to `(n_docs, min doc id)` —
     *      ONE exchange of the exploded frame, partial-aggregated map-side,
-    *      carrying 16-byte [[passageHashes]] pairs, never passage text;
+    *      carrying 16-byte [[passageHashesFromTokens]] pairs, never passage text;
     *   3. passages seen in exactly one doc belong to that doc (`min id` IS
     *      the owner), so a per-doc count of singletons — a second, tiny
     *      exchange — gives `n_unique`, and `n_shared = n_passages -
@@ -1347,22 +1344,9 @@ object Dedup {
     * the exact verify" (they track the direction but carry the
     * J-estimator's ±1/√64 variance; the row quantifies it on this
     * corpus).
-    */
-  def containmentMinhashEst(
-      docs: DataFrame,
-      thresholdBps: Long = 8000L,
-      shingleN: Int = 3,
-      numHashes: Int = 64,
-      idCol: String = "doc_id",
-      textCol: String = "text"
-  ): DataFrame =
-    containmentMinhashEstFrom(
-      docs,
-      containmentMd5Pairs(docs, thresholdBps, shingleN, idCol = idCol, textCol = textCol),
-      shingleN, numHashes, idCol, textCol)
-
-  /** [[containmentMinhashEst]] scoring an already-built (possibly
-    * memoized) exact containment pair frame — optimization r15: the exact
+    *
+    * `pairs` is an already-built (possibly memoized) exact containment
+    * pair frame from [[containmentMd5Pairs]] — optimization r15: the exact
     * pair chain is shared with containment_pairs instead of rebuilt.
     */
   def containmentMinhashEstFrom(

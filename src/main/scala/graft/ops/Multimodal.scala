@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata, processed by per-partition batch operators.
@@ -20,24 +19,6 @@ import org.apache.spark.sql.types._
   * task, not once per row.
   */
 object Multimodal {
-
-  val MediaSchema: StructType = StructType(
-    Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("content", BinaryType, nullable = true),
-      StructField(
-        "meta",
-        StructType(
-          Seq(
-            StructField("mime", StringType, nullable = true),
-            StructField("n_bytes", LongType, nullable = true),
-            StructField("source", StringType, nullable = true)
-          )
-        ),
-        nullable = true
-      )
-    )
-  )
 
   /** Build a media frame from the documents table (text bytes standing in
     * for media payloads — the plumbing doesn't care what the bytes are).

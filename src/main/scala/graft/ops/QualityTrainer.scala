@@ -507,20 +507,11 @@ object QualityTrainer {
   }
 
   /** Registered-query face of grouped training: (iter, lang, feature,
-    * w_micro) — every group's full trajectory, oracle-replayable.
-    */
-  def groupWeightTrajectoryDf(
-      docs: DataFrame,
-      groupCol: String,
-      iters: Int
-  ): DataFrame =
-    groupWeightTrajectoryDfFrom(
-      docs.sparkSession, trainByGroup(featuresGrouped(docs, groupCol), iters))
-
-  /** [[groupWeightTrajectoryDf]] off an ALREADY-trained trajectory map —
-    * the registered trajectory face and the per-language AUC eval share
-    * one training run through it (optimization r16: each previously
-    * re-ran the identical iters × groupBy gradient passes per bench pass).
+    * w_micro) — every group's full trajectory, oracle-replayable — off an
+    * ALREADY-trained [[trainByGroup]] trajectory map: the registered
+    * trajectory face and the per-language AUC eval share one training run
+    * through it (optimization r16: each previously re-ran the identical
+    * iters × groupBy gradient passes per bench pass).
     */
   def groupWeightTrajectoryDfFrom(
       spark: org.apache.spark.sql.SparkSession,

@@ -254,17 +254,9 @@ object UnigramLm {
     }
   }
 
-  /** Registered-query face: the trained vocabulary as a frame —
-    * (piece, piece_len, cnt, logp_micro).
+  /** Registered-query face: a prebuilt (shared) trained vocabulary, from
+    * [[train]], as a frame — (piece, piece_len, cnt, logp_micro).
     */
-  def vocabDf(
-      docs: DataFrame,
-      rounds: Int = 2,
-      seedMultiK: Int = 300,
-      textCol: String = "text"): DataFrame =
-    vocabDfFrom(docs.sparkSession, train(docs, rounds, seedMultiK, textCol))
-
-  /** [[vocabDf]] from a prebuilt (shared) trained vocabulary. */
   def vocabDfFrom(spark: SparkSession, vocab: Seq[Piece]): DataFrame = {
     import spark.implicits._
     vocab

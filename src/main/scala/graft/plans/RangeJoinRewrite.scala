@@ -61,9 +61,6 @@ class RangeJoinRewrite extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  private def crossSide(c: Expression, left: LogicalPlan, right: LogicalPlan): Boolean =
-    c.references.exists(left.outputSet.contains) && c.references.exists(right.outputSet.contains)
-
   private def hasEquiConjunct(conjuncts: Seq[Expression], left: LogicalPlan, right: LogicalPlan): Boolean =
     conjuncts.exists {
       case EqualTo(a, b) =>

@@ -1,8 +1,11 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.GameEvent
 
@@ -37,14 +40,20 @@ object TextSink {
     lines.write.mode("overwrite").text(dir)
 
   /** One file set per window with the reference's filename layout
-    * `prefix-<windowStart>-<windowEnd>-<shard>-of-<numShards>` where the
-    * window bounds are PST-formatted (`utils/WriteToText.java:98-134`),
-    * default 3 shards (`utils/WriteToText.java:94`).
+    * `prefix-<windowStart>-<windowEnd>-<shard>-of-<numShards>`, default 3
+    * shards (`utils/WriteToText.java:94-134`). Window bounds are PST; the
+    * reference's "yyyy-MM-dd HH:mm:ss.SSS" labels contain ':', which Hadoop
+    * `Path` rejects, so the same instants use filesystem-safe separators.
     *
-    * Scale shape: one distributed write partitioned by window (executors do
-    * all data movement; `repartition(window, shard)` bounds files per window
-    * to `numShards`), then a driver-side rename loop over #windows × #shards
-    * entries — proportional to window count, never to row count.
+    * As in the reference, each task names the files it writes: one file per
+    * (window, shard) group, lines sorted. The shard is a hash of the line,
+    * so a file's bytes depend only on its rows, and a task retry or a
+    * replayed streaming batch rewrites identical files.
+    *
+    * Nothing is staged: a job that fails can leave some of its files in
+    * `outputDir`. Retries are safe only while speculation stays off (two
+    * attempts of one task would write the same files at once);
+    * `GraftSession` does not turn it on.
     */
   def writeOneFilePerWindow(
       windowed: DataFrame,
@@ -53,46 +62,31 @@ object TextSink {
       prefix: String,
       numShards: Int = 3
   ): Unit = {
-    val spark = windowed.sparkSession
-    val staged = windowed
-      .withColumn("_ws", unix_millis(col("window_start")))
-      .withColumn("_we", unix_millis(col("window_end")))
-      .withColumn("_shard", pmod(spark_partition_id() + monotonically_increasing_id(), lit(numShards)).cast("int"))
-      .repartition(col("_ws"), col("_shard"))
-      .select(col("_ws"), col("_we"), col("_shard"), lineCol.cast("string").as("line"))
-    val stagingDir = s"$outputDir/.staging-$prefix"
-    staged.write
-      .mode("overwrite")
-      .partitionBy("_ws", "_we", "_shard")
-      .text(stagingDir)
-
-    // Driver-side rename: O(#windows * numShards) file moves.
-    val fs = new Path(outputDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = new Path(stagingDir)
-    val out = new Path(outputDir)
-    fs.mkdirs(out)
-    val wsDirs = fs.listStatus(base).filter(_.getPath.getName.startsWith("_ws="))
-    for (ws <- wsDirs) {
-      val wsMs = ws.getPath.getName.stripPrefix("_ws=").toLong
-      for (we <- fs.listStatus(ws.getPath).filter(_.isDirectory)) {
-        val weMs = we.getPath.getName.stripPrefix("_we=").toLong
-        val shards = fs.listStatus(we.getPath).filter(_.isDirectory)
-        for (sh <- shards) {
-          val shard = sh.getPath.getName.stripPrefix("_shard=").toInt
-          val parts = fs.listStatus(sh.getPath).filter(_.getPath.getName.startsWith("part-"))
-          // Divergence from WriteToText.java:106-127: the reference's
-          // "yyyy-MM-dd HH:mm:ss.SSS" window labels contain ':' which Hadoop
-          // Path rejects; same PST instants, filesystem-safe separators.
-          val name = f"$prefix-${fileSafe(wsMs)}-${fileSafe(weMs)}-$shard%05d-of-$numShards%05d"
-          require(
-            parts.length <= 1,
-            s"expected at most one part file per (window, shard) dir ${sh.getPath} but found ${parts.length}"
-          )
-          parts.headOption.foreach(p => fs.rename(p.getPath, new Path(out, name)))
-        }
+    require(numShards >= 1, s"numShards must be at least 1, got $numShards")
+    val hadoopConf = windowed.sparkSession.sparkContext.hadoopConfiguration
+    new Path(outputDir).getFileSystem(hadoopConf).mkdirs(new Path(outputDir))
+    val conf = new SerializableConfiguration(hadoopConf)
+    val line = lineCol.cast("string")
+    windowed
+      .select(unix_millis(col("window_start")).as("ws"), unix_millis(col("window_end")).as("we"),
+        pmod(xxhash64(line), lit(numShards)).cast("int").as("shard"), line.as("line"))
+      .repartition(col("ws"), col("shard"))
+      .sortWithinPartitions("ws", "shard", "line")
+      .foreachPartition { (rows: Iterator[Row]) =>
+        val fs = new Path(outputDir).getFileSystem(conf.value)
+        var key: (Long, Int) = null
+        var out: java.io.OutputStream = null
+        try rows.foreach { r =>
+          val k = (r.getLong(0), r.getInt(2))
+          if (k != key) {
+            if (out != null) out.close()
+            key = k
+            val name = f"$prefix-${fileSafe(k._1)}-${fileSafe(r.getLong(1))}-${k._2}%05d-of-$numShards%05d"
+            out = fs.create(new Path(outputDir, name), true)
+          }
+          out.write((r.getString(3) + "\n").getBytes(UTF_8))
+        } finally if (out != null) out.close()
       }
-    }
-    fs.delete(base, true)
   }
 
   /** Streaming form of [[writeOneFilePerWindow]] (reference K2 under

@@ -50,14 +50,13 @@ object Relational {
     * tables bucketed 8-ways on the order key, so the fact-fact join plans
     * as a SortMergeJoin with NO Exchange on either side (the shuffle was
     * paid at write time and amortizes over every subsequent query on the
-    * key). Results are identical to the plain form — same oracle.
+    * key). Results are identical to the plain form — same oracle. Each
+    * copy is named by its source table's [[graft.SparkEntry.contentKey]], so
+    * a table regenerated in place gets a new copy.
     */
   def q3TopOrdersBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val suffix =
-      s"sf_${org.apache.commons.codec.digest.DigestUtils.md5Hex(dir).take(16)}"
-    val liName = s"graft_bl_$suffix"
-    val ordName = s"graft_bo_$suffix"
-    def ensureBucketed(name: String, srcTable: String, bucketCol: String): Unit =
+    def ensureBucketed(prefix: String, srcTable: String, bucketCol: String): String = {
+      val name = prefix + graft.SparkEntry.contentKey(spark, dir, srcTable)
       if (!spark.catalog.tableExists(name)) {
         // The in-memory catalog resets per JVM while the warehouse dir
         // persists. A previous JVM's derived table is still valid data —
@@ -97,8 +96,10 @@ object Relational {
             table(spark, dir, srcTable), name, bucketCol, buckets = 8)
         }
       }
-    ensureBucketed(liName, "lineitem", "l_orderkey")
-    ensureBucketed(ordName, "orders", "o_orderkey")
+      name
+    }
+    val liName = ensureBucketed("graft_bl_", "lineitem", "l_orderkey")
+    val ordName = ensureBucketed("graft_bo_", "orders", "o_orderkey")
     val cutoff = lit("1998-06-01").cast("timestamp")
     val cust = table(spark, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
     val orders = spark.table(ordName).filter(col("o_orderdate") < cutoff)

@@ -47,7 +47,7 @@ class PassageQuantSpec extends AnyFunSuite {
   }
 
   test("passageShareStats: hash-pair keying matches a string-keyed evaluation") {
-    // The benched operator windows on the 128-bit passageHashes pair; this
+    // The benched operator windows on the 128-bit passageHashesFromTokens pair; this
     // pins its output to the same stats computed with the passage STRING as
     // the window key on real corpus text (the equivalence the 2^-128
     // collision bound promises).

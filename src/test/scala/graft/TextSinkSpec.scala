@@ -48,6 +48,70 @@ class TextSinkSpec extends AnyFunSuite {
     assert(lines.toSet == Set("team: Red, total_score: 8", "team: Blue, total_score: 9"))
   }
 
+  /** HourlyTeamScore over 12 teams in each of two hourly windows. */
+  private def manyTeamsHourly() = {
+    val events = for (w <- 0 until 2; t <- 0 until 12)
+      yield GameEvent(s"u$t", s"Team$t", 10 * w + t, 3600_000L * (w + 1) + t)
+    Scoring.hourlyTeamScore(events.toDF().withColumn("event_time", timestamp_millis($"timestamp")), 60)
+  }
+
+  private def teamLine = concat(lit("team: "), col("team"), lit(", total_score: "), col("total_score"))
+
+  /** Visible file name → bytes, for every file under `dir`. */
+  private def contents(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().filterNot(_.getName.startsWith("."))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  test("writeOneFilePerWindow: files depend only on the rows, not on the input's partitioning") {
+    val hourly = manyTeamsHourly()
+    val dirs = Seq(1, 4).map { n =>
+      val out = Files.createTempDirectory(s"winwrite-p$n").toString
+      TextSink.writeOneFilePerWindow(hourly.repartition(n), teamLine, out, prefix = "teamscore", numShards = 3)
+      out
+    }
+    val Seq(one, four) = dirs.map(contents)
+    assert(one.nonEmpty && one.size <= 6)
+    assert(one.keySet == four.keySet)
+    one.foreach { case (name, bytes) => assert(bytes == four(name), name) }
+    assert(one.values.flatMap(b => new String(b.toArray, "UTF-8").split("\n")).size == 24)
+  }
+
+  test("writeOneFilePerWindow: an empty frame leaves outputDir created and empty") {
+    val out = Files.createTempDirectory("winwrite-empty").toString + "/out"
+    TextSink.writeOneFilePerWindow(manyTeamsHourly().filter(lit(false)), teamLine, out, prefix = "teamscore")
+    assert(new java.io.File(out).isDirectory)
+    assert(new java.io.File(out).listFiles().isEmpty)
+  }
+
+  test("writeOneFilePerWindow: numShards < 1 fails on the driver before any job starts") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach(started.add)
+    }
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("winwrite-zero").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("numShards-0", "numShards = 0")
+      intercept[IllegalArgumentException] {
+        TextSink.writeOneFilePerWindow(manyTeamsHourly(), teamLine, out, prefix = "teamscore", numShards = 0)
+      }
+      // Listener events arrive in order: once the marker job is seen, every
+      // job the write started has been seen too.
+      sc.setJobGroup("numShards-0-marker", "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 60_000_000_000L
+      while (!started.contains("numShards-0-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains("numShards-0-marker"))
+      assert(!started.contains("numShards-0"), "a job started before numShards was checked")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("streamOneFilePerWindow: per-window files from a streaming query, batch-qualified") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.{LeaderBoardStream, StatePartitions}
