@@ -1384,7 +1384,7 @@ object Dedup {
   /** The shared core of the curation-order analysis: both policies'
     * surviving id frames (checkpointed, ids only) for one (corpus, eval,
     * thresholds) configuration. `curation_order_report` and
-    * `curation_pipeline_v10` consume the SAME core — SparkEntry builds it
+    * `curation_pipeline_v10` consume the SAME core — the registry builds it
     * once per (session, sfDir) through its shared-leg memo, so the
     * shingle pass, the contamination chain, and both dedup chains run
     * once for the pair of queries instead of once per query.

@@ -1139,7 +1139,7 @@ object Multimodal {
     perturbationMatrixFromHashes(perturbedHashes(docs, side), maxHamming)
 
   /** ONE decode+hash pass over [[perturbedImageCorpus]], checkpointed —
-    * the frame both registered perceptual faces read (SparkEntry shares
+    * the frame both registered perceptual faces read (the registry shares
     * it per (session, sfDir)).
     */
   def perturbedHashes(docs: DataFrame, side: Int = PhashSide): DataFrame = {

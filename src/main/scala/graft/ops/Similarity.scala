@@ -960,6 +960,9 @@ object Similarity {
     * sorted by (|proj|, bit) — a total order both engines reproduce.
     * Null for vectors whose length differs from `dim` (same guard as
     * [[lshSigMd5]] — the malformed row drops out of every probe join).
+    * A right-length vector with a null element has null projections, so
+    * every margin is null and ties: the masks are bits 0 .. nProbes-1 in
+    * bit order.
     */
   private def md5MarginFlips(vec: Column, nbits: Int, dim: Int, nProbes: Int): Column = {
     // one codegen'd projections call (optimization r16), bound ONCE as a
@@ -1024,6 +1027,11 @@ object Similarity {
     * keeps most of the recall; [[lshMultiprobeSweep]] measures exactly
     * that trade on this corpus. Fully SQL-reproducible (md5 planes,
     * integer margins, deterministic tie-breaks).
+    *
+    * A query of the right length with a null element signs to bucket 0
+    * (a null element leaves every [[lshSigMd5]] bit unset) and has no
+    * margins, so it probes bucket 0 plus the single-bit flips of bits
+    * 0 .. nProbes-1, in bit order (SimilaritySpec pins this).
     */
   def lshMd5MultiprobeTopK(
       corpus: DataFrame,

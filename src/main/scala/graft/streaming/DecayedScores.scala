@@ -29,6 +29,10 @@ object DecayedScores {
     * a micro-batch are sorted by (ts_ms); an arrival older than the stored
     * anchor contributes at its own decayed weight (no rewind — the
     * documented approximation for late data, exact for in-order streams).
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def userDecayedScores(
       events: Dataset[(Long, Long, Long)],

@@ -21,6 +21,10 @@ object DriftMonitor {
   /** Watermarked per-window token counts of a (ts, text) stream — append
     * mode emits each window's counts exactly once, after the watermark
     * passes its end.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def windowedTokenCounts(
       stream: DataFrame,

@@ -112,6 +112,10 @@ object LeaderBoardStream {
     * `team`, `score` and `event_time` columns and no watermark of its own.
     * Run with `outputMode("update")` on the RocksDB state store (started
     * inside [[StatePartitions.withStatePartitions]]).
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def teamPanes(
       events: DataFrame,
@@ -139,6 +143,10 @@ object LeaderBoardStream {
     * is ever late, arbitrarily old data still updates the total, and state
     * grows with user cardinality exactly as in Beam. Run with
     * `outputMode("update")`.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def calculateUserScores(events: DataFrame): DataFrame =
     events

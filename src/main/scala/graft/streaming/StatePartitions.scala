@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   * the first batch writes the count and the store into the checkpoint's
   * offset log, so both only have to be in the session's conf while the
   * queries start.
+  *
+  * The operators under `streaming/` pin neither value: their caller owns
+  * the count and the store. `LeaderBoardApp.start` and `StreamBench` start
+  * their queries inside [[withStatePartitions]]; any other caller starts at
+  * the session's values unless it does the same.
   */
 object StatePartitions {
   /** One partition: LeaderBoardApp ran fastest on it at every measured

@@ -26,6 +26,10 @@ object StatefulScores {
     * `ttlMinutes` of processing time has their state evicted (the total
     * restarts if they return — the documented trade for bounded state).
     * Run with `outputMode("update")`.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def userTotalsWithTtl(
       events: Dataset[(String, Int)],
@@ -94,6 +98,10 @@ object StatefulScores {
 
   /** Running per-user totals via [[UserTotalProcessor]]; run with
     * `outputMode("update")` on a RocksDB-backed session.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def userTotalsTws(events: Dataset[(String, Int)], ttlMinutes: Int): Dataset[UserTotal] = {
     import events.sparkSession.implicits._

@@ -22,6 +22,10 @@ object StreamJoin {
     * `leftTime`/`rightTime` must be distinct timestamp column names, and
     * the non-key columns of the two sides must not clash. Output: left
     * columns + right columns (right key dropped).
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def intervalJoin(
       left: DataFrame,

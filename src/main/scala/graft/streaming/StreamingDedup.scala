@@ -17,6 +17,10 @@ object StreamingDedup {
 
   /** Drop rows whose key was seen before, keeping state forever (exact
     * streaming dedup, unbounded state growth — use for bounded key spaces).
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def exactForever(stream: DataFrame, keyCols: Seq[String]): DataFrame =
     stream.dropDuplicates(keyCols)
@@ -25,6 +29,10 @@ object StreamingDedup {
     * with the same key deduplicate iff they arrive within `delay` of each
     * other in event time; state older than the watermark is evicted. Input
     * must carry `eventTimeCol`.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def exactWithinWatermark(
       stream: DataFrame,
@@ -51,6 +59,10 @@ object StreamingDedup {
     * Recall/precision mirror the batch LSH filter: a lost bucket means
     * band-identical minhashes with an earlier doc (near-dup with high
     * probability — exact-verify survivors downstream if required).
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def bandClaims(
       docStream: DataFrame,
@@ -94,6 +106,10 @@ object StreamingDedup {
     * (correlated) slots, which RAISES band-collision probability at
     * fixed Jaccard — more aggressive candidate flagging, never fewer
     * exact-dup catches.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def ophBandClaims(
       docStream: DataFrame,
@@ -129,6 +145,10 @@ object StreamingDedup {
     * Resolution differs from near-dup banding: a doc is boilerplate-heavy,
     * not duplicate, when MOST of its chunks are lost — aggregate the claim
     * stream per doc and threshold on the lost fraction downstream.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def chunkClaims(
       docStream: DataFrame,
@@ -166,6 +186,10 @@ object StreamingDedup {
     * that bucket — resolve per doc with [[survivors]] exactly like the
     * text band claims. Empty payloads (null hash) are dropped, matching
     * the batch face.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def ahashChunkClaims(
       mediaStream: DataFrame,
@@ -216,6 +240,10 @@ object StreamingDedup {
     * `chunks = 4` is the scale config (2¹⁶ buckets/index — the
     * measured occupancy-wall answer; pigeonhole still catches
     * Hamming ≤ 3 near-dups).
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def dhashChunkClaims(
       mediaStream: DataFrame,

@@ -27,6 +27,12 @@ object StreamingEwma {
 
   private val W = graft.ops.TimeSeries.EwmaWindow // 16
 
+  /** Per-event-type EWMA rows, one per key touched by each micro-batch.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
+    */
   def hourlyEwma(rows: DataFrame): Dataset[TypeEwma] = {
     import rows.sparkSession.implicits._
     rows

@@ -30,6 +30,10 @@ object StreamingFunnel {
 
   /** Run with `outputMode("update")`. `rest` mirrors the batch operator:
     * (event type, max gap ms from the previous stage).
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def stageProgress(
       events: Dataset[FunnelEvent],

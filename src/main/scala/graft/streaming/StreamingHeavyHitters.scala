@@ -25,6 +25,10 @@ object StreamingHeavyHitters {
 
   /** Per-shard sketch state over an item stream; emits each touched shard's
     * current counter map every micro-batch (update semantics).
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def shardSketches(
       items: DataFrame,

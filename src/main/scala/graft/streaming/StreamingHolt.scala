@@ -33,6 +33,12 @@ object StreamingHolt {
   private val WL = graft.ops.TimeSeries.holtLevelWeights.toArray
   private val WB = graft.ops.TimeSeries.holtTrendWeights.toArray
 
+  /** Per-event-type Holt rows, one per key touched by each micro-batch.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
+    */
   def hourlyHolt(rows: DataFrame): Dataset[TypeHolt] = {
     import rows.sparkSession.implicits._
     rows

@@ -49,6 +49,10 @@ object StreamingNovelty {
 
   /** Flag each streamed document seen/new against the sharded Bloom state.
     * Aggregate the flags per micro-batch downstream for the novelty rate.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
     */
   def bloomFlags(
       docStream: DataFrame,

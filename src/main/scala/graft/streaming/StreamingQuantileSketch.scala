@@ -23,7 +23,12 @@ import org.apache.spark.sql.functions._
   */
 object StreamingQuantileSketch {
 
-  /** value rows → (cell, ccnt) in update mode; state = non-empty cells. */
+  /** value rows → (cell, ccnt) in update mode; state = non-empty cells.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
+    */
   def cellCounts(rows: DataFrame, valCol: String, w: Long): DataFrame = {
     require(w >= 1, "cell width must be >= 1")
     rows

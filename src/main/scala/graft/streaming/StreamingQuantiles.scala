@@ -33,6 +33,12 @@ object StreamingQuantiles {
   def pick(sortedVals: IndexedSeq[Long], p: Int): Long =
     sortedVals((p * sortedVals.length + 99) / 100 - 1)
 
+  /** Per-key p50/p99 over the bounded sample, refreshed for every key a micro-batch touches.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
+    */
   def valueQuantiles(
       rows: DataFrame,
       keyCol: String,

@@ -15,6 +15,12 @@ import graft.ops.Scoring
   */
 object StreamingSessions {
 
+  /** Per-key gap-session totals over the watermarked stream.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
+    */
   def sessionScores(
       stream: DataFrame,
       keyCol: String,

@@ -22,6 +22,12 @@ object StreamingTopK {
 
   final case class TopKRow(query_id: Long, neighbor_id: Long, cos_sim: Double, rank: Int)
 
+  /** The refined top-k neighbour list of every query a micro-batch changes.
+    *
+    * State: the caller owns the partition count and the store, which the
+    * query takes from the session when it starts; start it inside
+    * [[StatePartitions.withStatePartitions]] to run at [[StatePartitions.Count]].
+    */
   def streamingCosineTopK(
       corpusStream: DataFrame,
       queries: DataFrame,

@@ -51,12 +51,13 @@ object Relational {
     * as a SortMergeJoin with NO Exchange on either side (the shuffle was
     * paid at write time and amortizes over every subsequent query on the
     * key). Results are identical to the plain form — same oracle. Each
-    * copy is named by its source table's [[graft.SparkEntry.contentKey]], so
-    * a table regenerated in place gets a new copy.
+    * copy is named by its source table's
+    * [[graft.registry.Shared.contentKey]], so a table regenerated in place
+    * gets a new copy.
     */
   def q3TopOrdersBucketed(spark: SparkSession, dir: String): DataFrame = {
     def ensureBucketed(prefix: String, srcTable: String, bucketCol: String): String = {
-      val name = prefix + graft.SparkEntry.contentKey(spark, dir, srcTable)
+      val name = prefix + graft.registry.Shared.contentKey(spark, dir, srcTable)
       if (!spark.catalog.tableExists(name)) {
         // The in-memory catalog resets per JVM while the warehouse dir
         // persists. A previous JVM's derived table is still valid data —

@@ -182,7 +182,7 @@ class DictScanSpec extends AnyFunSuite {
       .filter(col("w") =!= "")
       .distinct()
       .filter(
-        SparkEntry.OverlapBigramWords
+        registry.TextQueries.OverlapBigramWords
           .map(p => col("w") =!= p && (col("w").startsWith(p) || col("w").endsWith(p)))
           .reduce(_ || _))
       .collect()

@@ -541,6 +541,30 @@ class SimilaritySpec extends AnyFunSuite {
     assert(mp == all && all.nonEmpty)
   }
 
+  test("lshMd5MultiprobeTopK: a null element probes bucket 0 and the first nProbes bits") {
+    // A right-length query with a null element signs to 0 (the null leaves
+    // every lshSigMd5 bit unset) and has null margins. Every margin ties, so the
+    // flips fall back to bit order: the query probes its own bucket 0 and
+    // the buckets of bits 0 .. nProbes-1, nothing else.
+    val rnd = new Random(7)
+    val pool = (0L until 2000L).map(i => i -> Seq.fill(dim)(Option(rnd.nextGaussian().toFloat)))
+    val sigs = pool.toDF("vec_id", "embedding")
+      .select(col("vec_id"), Similarity.lshSigMd5(col("embedding"), 6, dim))
+      .as[(Long, Long)].collect().toMap
+    // one corpus vector in each single-bit bucket, and the zero vector in bucket 0
+    val perBit = (0 until 6).map(j => pool.find(p => sigs(p._1) == (1L << j)).get)
+    val zero = 5000L -> Seq.fill(dim)(Option(0f))
+    val corpus = (perBit :+ zero).toDF("vec_id", "embedding")
+    val q = Seq((1000L, pool.head._2.updated(3, None))).toDF("vec_id", "embedding")
+    assert(q.select(Similarity.lshSigMd5(col("embedding"), 6, dim)).as[Long].head() == 0L)
+    for (nProbes <- Seq(1, 4)) {
+      val got = Similarity
+        .lshMd5MultiprobeTopK(corpus, q, k = 10, nProbes = nProbes, nbits = 6, dim = dim)
+        .select("neighbor_id").as[Long].collect().toSet
+      assert(got == (perBit.take(nProbes).map(_._1) :+ zero._1).toSet, s"nProbes=$nProbes")
+    }
+  }
+
   test("lshMultiprobeSweep: nested budgets, monotone recall and candidates, full-budget floor") {
     val df = clustered(120).toDF("vec_id", "embedding")
     val queries = df.filter($"vec_id" < 6)

@@ -31,6 +31,21 @@ class SparkEntrySpec extends AnyFunSuite {
         "sbt \"Test/runMain graft.OracleDigest src/test/resources/oracle_sql.sha256\")")
   }
 
+  test("a query name declared twice fails the index, naming it") {
+    import graft.registry.Query
+    val plan: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.index(Seq(
+        Query("user_score")(plan),
+        Query("team_score")(plan),
+        Query("user_score")(plan).oracle("SELECT 1")))
+    }
+    assert(e.getMessage.contains("user_score") && !e.getMessage.contains("team_score"),
+      e.getMessage)
+    assert(SparkEntry.index(Seq(Query("user_score")(plan))).keySet == Set("user_score"))
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
